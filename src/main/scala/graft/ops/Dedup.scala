@@ -1611,7 +1611,14 @@ object Dedup {
     * one documented divergence from one-shot: a degenerate band bucket
     * past the star cap can shed different pairs when its members span
     * batch boundaries — the same capped-bucket trade
-    * `lshCandidatesStateful` documents. */
+    * `lshCandidatesStateful` documents.
+    *
+    * Lifetime contract: a frame returned by [[labels]] is valid only
+    * until the next `step`. It reads the accumulated frames' pinned
+    * checkpoint blocks, and each `step` frees the blocks it supersedes,
+    * so evaluate (or persist) the labels before ingesting the next
+    * batch — the evaluate-then-step order a `foreachBatch` sink already
+    * follows. */
   final class StreamingIncrementLabeler(oldSigs: DataFrame,
                                         oldLabels: DataFrame,
                                         minJaccard: Double = 0.8) {
@@ -1681,7 +1688,12 @@ object Dedup {
     /** The assignment for every document seen so far — steps 1-3 of
       * [[incrementalAssign]] over the accumulated relations: batch-
       * internal connected components, component label = min member
-      * anchor, else the component minimum. */
+      * anchor, else the component minimum.
+      *
+      * The returned frame is valid only until the next `step`: that call
+      * frees the local-checkpoint blocks this frame reads, and those
+      * cannot be recomputed, so evaluating it afterwards fails. Evaluate
+      * or persist it first. */
     def labels(): DataFrame = synchronized {
       require(ids.nonEmpty, "no micro-batch ingested yet")
       val idsDf = ids.get

@@ -183,5 +183,34 @@ object GraftSession {
       // fields, regardless of sf); Janino failures past the JIT byte
       // limit still fall back gracefully, so the setting is monotone.
       .config("spark.sql.codegen.maxFields", "300")
+      // JVM-wide LRU of Janino-compiled generated classes (default 100).
+      // The lake re-runs the same declared queries, and their working set
+      // is larger than that: the perfbench star queries compile ~250
+      // distinct classes per pass (248 at sf0.001), docs ~110, and all 211
+      // declared queries ~2,400 at sf0.001 after the ensure* set-up. At
+      // 100 entries nearly every class was evicted before its next use,
+      // so each steady pass paid Janino again plus HotSpot JIT on the
+      // freshly loaded classes. 4096 holds all three; at ~30 KB of
+      // bytecode per cached class it also caps the heap cost near 130 MB.
+      // Only compiled code is cached and the key is the exact generated
+      // source, so no result can change.
+      // This is a static conf: `CodeGenerator` reads it once per JVM when
+      // it first builds the cache, so it takes effect only because every
+      // graft entry point builds its first session through this helper.
+      // Spark 4.1 keys the cache by the thread's context class loader plus
+      // the source text, and each session has its own artifact class
+      // loader, so a session forked with `spark.newSession()` does not
+      // reuse its parent's classes. Two builders fork one on every call
+      // and so recompile ~24 and ~14 classes per call whatever the cache
+      // size: `Relational.bloomFilteredJoinRevenue` and
+      // `Text.decontaminateNgram`.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // Keeps that cache key stable across runs of one query. By default
+      // the whole-stage class name carries the codegen stage id, and AQE
+      // numbers sibling stages in the order it creates them, which
+      // varies with timing: q_ts_forecast's stages 3 and 4 swap ids
+      // between runs, so identical code missed the cache under two names.
+      // The id stays visible in the generated source's comment.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
 }

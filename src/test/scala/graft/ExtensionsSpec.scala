@@ -61,4 +61,25 @@ class ExtensionsSpec extends SparkSpec {
       e.getMessage.contains("does not exist"), e.getMessage)
     Snapshots.retain(spark, base, keep = 0)
   }
+
+  test("steady pass recompiles no generated class: the codegen cache holds the working set") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // perfbench's star query set: ~250 distinct generated classes per pass,
+    // over Spark's default cache of 100 entries. Runs on the shared session,
+    // not `fresh`: the cache is keyed per session class loader, and the
+    // steady passes of every entry point run on the session it built.
+    val star = Seq("q_bucket_join_revenue", "q_part_pruned_revenue",
+      "q_mv_refresh", "q_evt_session", "q_graph_triangles",
+      "q_sql_time_travel", "q_feat_onehot", "q_valid_doc_checks",
+      "q_priv_kanon", "q_corr_stats", "q_er_clusters", "q_ts_forecast")
+    def pass(): Seq[(Long, Long)] =
+      star.map(q => Timing.evaluate(SparkEntry.queries(q)(spark, sf)))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val first = pass()
+    val before = compiles.getCount
+    val second = pass()
+    assert(compiles.getCount - before === 0L,
+      "Janino recompiled classes the first pass already compiled")
+    assert(second === first)
+  }
 }
