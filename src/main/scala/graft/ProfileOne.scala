@@ -1,6 +1,10 @@
 package graft
 
+import java.lang.reflect.InvocationTargetException
 import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.util.Try
+import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
@@ -43,6 +47,34 @@ object ProfileOne {
       }
     })
 
+    // listener events post asynchronously: flush the bus before clearing
+    // (drops the warm run's stragglers) and again before reading (keeps
+    // the steady run's late StageCompleted events) — round-16 ADVICE.
+    // `listenerBus` is private[spark], hence the reflective lookup; a
+    // Spark build without it is reported once and gets a fixed wait.
+    val sc = spark.sparkContext
+    val busWait = Try {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      (bus, bus.getClass.getMethod("waitUntilEmpty"))
+    }.toOption
+    if (busWait.isEmpty)
+      System.err.println("[profile] listenerBus.waitUntilEmpty() not found: " +
+        "sleeping 300 ms per flush instead, late stage rows may be missing")
+    def flushListenerBus(): Unit = busWait match {
+      case Some((bus, waitUntilEmpty)) =>
+        try waitUntilEmpty.invoke(bus)
+        catch {
+          case e: InvocationTargetException
+              if e.getCause.isInstanceOf[InterruptedException] =>
+            Thread.currentThread().interrupt()
+            throw e.getCause
+          case NonFatal(e) =>
+            System.err.println("[profile] listener bus flush failed: " +
+              Option(e.getCause).getOrElse(e))
+        }
+      case None => Thread.sleep(300)
+    }
+
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
       // warm run 1 (plan compile + codegen), then a steady run with
@@ -58,17 +90,6 @@ object ProfileOne {
       val df1 = fn(spark, sfDir)
       df1.queryExecution.executedPlan
       val tB3 = System.nanoTime()
-      // listener events post asynchronously: flush the bus before clearing
-      // (drops the warm run's stragglers) and again before reading (keeps
-      // the steady run's late StageCompleted events) — round-16 ADVICE
-      def flushListenerBus(): Unit =
-        try {
-          val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-            .invoke(spark.sparkContext)
-          bus.getClass.getMethods
-            .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-            .foreach(_.invoke(bus))
-        } catch { case _: Throwable => Thread.sleep(300) }
       flushListenerBus()
       stages.clear()
       val s2 = Timing.timeOnce(df1)

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -14,9 +15,12 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated prefix filter for local iteration; the
-    // driver sets no filter and dumps everything
+    // optional comma-separated prefix filter for local iteration: only the
+    // matching queries and their oracles are written, so check_oracle.py
+    // compares just that family; the driver sets no filter and dumps
+    // everything
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
+    def selected(name: String): Boolean = only.forall(_.exists(name.startsWith))
     // gate-rung guard (round-9 ADVICE): several dump-twin oracle CTEs pin
     // the GATE-rung geometry (one sign word / word_idx = 0, nProbe = 8 of
     // nlist = 16, shortlist c = 128, PQ probe/shortlist 8/64,
@@ -30,12 +34,10 @@ object Verify {
       System.err.println(s"[verify] WARNING: gate corpus has $nEmb embedding " +
         "rows > 2048 — the sign-LSH / IVF / ANN twin SQL pins gate-rung " +
         "literals and WILL hash-mismatch at wider adaptive rungs")
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith)) }
-    selected.foreach { case (name, fn) =>
+    SparkEntry.queries.filter { case (name, _) => selected(name) }.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
@@ -60,9 +62,9 @@ object Verify {
     // if the fixture query ran under a SPARK_GRAFT_ONLY filter)
     val (fsV1, fsV2) =
       try graft.ops.Layout.fileStatsVersionDirs(spark, sfDir)
-      catch { case _: Throwable => ("/graft_fstats_unseeded_v1",
+      catch { case NonFatal(_) => ("/graft_fstats_unseeded_v1",
         "/graft_fstats_unseeded_v2") }
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected(k) }
       .map { case (k, v) =>
         s"${q(k)}: ${q(v.replace(graft.explore.Stats.verifyOutToken, outAbs)
           .replace(graft.ops.Layout.fstatsV1Token, fsV1)

@@ -17,30 +17,69 @@ import graft.sources.Tables
   */
 object Graph {
 
-  /** Driver fast-path guard shared by the four iterative graph queries:
-    * edge lists at or under this row count (post edge-build, i.e. after
-    * the ONE corpus-sized fact pass, which always stays distributed) are
-    * collected and iterated on the driver — the same bounded-collect
-    * discipline and guard value as [[Dedup.ccMaxDriverEdges]].
-    * Motivation (round-16 profile, OPTIMIZATION_r16.md): each
-    * power-iteration / relaxation / LPA round over the O(nations²)
-    * checkpointed edge frame costs ~0.2-0.4 s of pure job-scheduling
-    * latency (broadcast + agg + join = 3-6 stage round-trips over
-    * KB-scale frames), so 4-5 rounds dominate the query. On a corpus
-    * whose entity graph exceeds the guard the distributed loop runs
-    * unchanged — the guard is a row count of the ALREADY-materialized
-    * checkpoint, so the decision costs one trivial count job.
+  /** Bound on a collected nation-graph edge list.
     *
-    * EAGER-CONSTRUCTION NOTE (round-16 ADVICE): the fast path runs the
-    * edge build, the guard count and the whole iteration at
-    * DataFrame-CONSTRUCTION time, so these four builders are not lazy —
-    * plan capture (ExplainOne, PlanSpec's `plan()`) executes the fact
-    * pass, ProfileOne's plan-build timings include execution, and
-    * re-invoking a builder redoes the driver compute. Bench/BenchOne are
-    * unaffected (timeOnce takes the builder by-name inside the timed
-    * region). The same applies to [[Dedup.connectedComponents]]' driver
-    * route and to every consumer that therefore constructs eagerly. */
-  private[graft] val graphMaxDriverEdges: Long = 1L << 20
+    * Contract of the four nation-graph queries: every edge is keyed by a
+    * (customer-nation, supplier-nation) pair, so an edge list has at most
+    * |nations|² rows (625 for the 25 TPC-H nations), bounded by the
+    * nation domain, not by the corpus. The one corpus-sized step, the
+    * lineitem ⨝ orders ⨝ customer ⨝ supplier fact pass, stays
+    * distributed and ends in that nation-pair aggregate; its result is
+    * collected in one action and the iteration runs on the driver in
+    * exact integer arithmetic. A lake whose nation keys break the bound
+    * fails fast on the collected row count.
+    *
+    * The builders are EAGER: the fact pass and the whole iteration run
+    * when the DataFrame is constructed, so capturing a plan runs the
+    * query's fact pass, and each call runs it again. GraphSpec pins the
+    * number of jobs each builder runs at construction. */
+  private val graphMaxDriverEdges: Long = 1L << 20
+
+  /** The fact pass every nation graph is mined from: one
+    * `(c_nationkey, s_nationkey)` row per lineitem, keys as longs.
+    * lineitem shuffles on orderkey for the orders join; the linearly
+    * growing customer/supplier dims join under size-guarded
+    * [[Hints.dimHint]] (hinted while they fit, sort-merge once they
+    * don't). */
+  private def tradePairs(spark: SparkSession, dir: String): DataFrame = {
+    val li = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
+    val ord = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
+    val cust = Tables.customer(spark, dir).select(col("c_custkey"), col("c_nationkey"))
+    val supp = Tables.supplier(spark, dir).select(col("s_suppkey"), col("s_nationkey"))
+    li.join(ord, col("l_orderkey") === col("o_orderkey"))
+      .join(Hints.dimHint(cust), col("o_custkey") === col("c_custkey"))
+      .join(Hints.dimHint(supp), col("l_suppkey") === col("s_suppkey"))
+      .select(col("c_nationkey").cast("long").as("c_nationkey"),
+        col("s_nationkey").cast("long").as("s_nationkey"))
+  }
+
+  /** Collect a `(node, node, weight)` edge frame of longs in one action,
+    * failing fast if it breaks the [[graphMaxDriverEdges]] bound. */
+  private def collectEdges(edges: DataFrame): Array[(Long, Long, Long)] = {
+    val es = edges.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    require(es.length <= graphMaxDriverEdges,
+      s"nation graph has ${es.length} edges, over the $graphMaxDriverEdges " +
+        "bound: its endpoints must be keys of the nation dimension")
+    es
+  }
+
+  /** The strong undirected trade graph of [[tradeTriangles]] and
+    * [[tradeCommunities]]: both directions merged onto the canonical
+    * a < b orientation, self-loops dropped, weights summed, then cut to
+    * above-average weight with the integer-exact `w·|E| > Σw`, so the
+    * complete K₂₅ at test scale becomes a genuine subgraph and no float
+    * compare can diverge cross-engine. */
+  private def strongTradeEdges(spark: SparkSession, dir: String)
+  : Array[(Long, Long, Long)] = {
+    val und = collectEdges(tradePairs(spark, dir)
+      .where(col("c_nationkey") =!= col("s_nationkey"))
+      .groupBy(least(col("c_nationkey"), col("s_nationkey")),
+        greatest(col("c_nationkey"), col("s_nationkey")))
+      .agg(count(lit(1))))
+    val ne = und.length.toLong
+    val sw = und.iterator.map(_._3).sum
+    und.filter { case (_, _, w) => w * ne > sw }
+  }
 
   /** Weighted PageRank over the nation trade graph, in EXACT integer
     * arithmetic for cross-engine value parity.
@@ -63,94 +102,35 @@ object Graph {
     * Overflow headroom: units ≤ 1e9 and edge weights up to ~1e8 keep
     * `units·w·85` under 2^63; corpora beyond that pre-normalize weights.
     *
-    * Scale shape: ONE pass over the fact table builds the edge list
-    * (lineitem shuffles on orderkey for the orders join; the linearly
-    * growing customer/supplier dims join under size-guarded
-    * [[Hints.dimHint]] — hinted while they fit, shuffled sort-merge once
-    * they don't), which is then `localCheckpoint`ed — O(nations²) rows —
-    * so the 5 iterations are tiny broadcast joins, never a re-read of
-    * the fact table. At web-graph scale the same plan shape runs with
-    * ranks and edges both partitioned by node id. */
-  def nationTradePageRank(spark: SparkSession, dir: String,
-                          iters: Int = 5,
-                          maxDriverEdges: Long = graphMaxDriverEdges)
+    * Scale shape: the distributed fact pass runs at construction and
+    * returns at most |nations|² weighted edges (see
+    * [[graphMaxDriverEdges]]); the `iters` steps run on the driver over
+    * the collected list, and the ranks join back to the nation names. */
+  def nationTradePageRank(spark: SparkSession, dir: String, iters: Int = 5)
   : DataFrame = {
-    val li = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-    val ord = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
-    val cust = Tables.customer(spark, dir).select(col("c_custkey"), col("c_nationkey"))
-    val supp = Tables.supplier(spark, dir).select(col("s_suppkey"), col("s_nationkey"))
-    val edges0 = li
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(Hints.dimHint(cust), col("o_custkey") === col("c_custkey"))
-      .join(Hints.dimHint(supp), col("l_suppkey") === col("s_suppkey"))
-      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-      .agg(count(lit(1)).as("w"))
-    // O(nations²) rows after the one fact pass — pin HERE (before the
-    // out-weight derivation) so neither the driver fast path nor the
-    // distributed loop ever re-runs the fact join (the previous shape
-    // checkpointed edges0⨝outw, paying the fact pass for both subtrees
-    // at materialization time)
-    val edges0c = edges0.localCheckpoint()
-
+    import spark.implicits._
+    val es = collectEdges(tradePairs(spark, dir)
+      .groupBy(col("c_nationkey"), col("s_nationkey")).agg(count(lit(1))))
+    val outw = es.groupMapReduce(_._1)(_._3)(_ + _)
     val nation = Tables.nation(spark, dir)
-    val n1 = nation.agg(count(lit(1)).as("n"))
-    val nodes = nation.select(col("n_nationkey").as("node"), col("n_name"))
-      .crossJoin(broadcast(n1))
-
-    // driver fast path: iterate the EXACT same integer recurrence over
-    // the collected edge list (same `div` floor semantics — all values
-    // positive, Long / == SQL div), labels bit-identical by construction;
-    // spec "graph: driver iteration ≡ distributed loop" pins both paths
-    val nEdges = edges0c.count()
-    val ranks = if (nEdges <= maxDriverEdges) {
-      val es = edges0c.select(col("src").cast("long"), col("dst").cast("long"),
-        col("w")).collect()
-      Dedup.freeCheckpoint(edges0c)
-      // out_w on the driver — exact Long sums, same values as the
-      // distributed groupBy
-      val outw = scala.collection.mutable.HashMap.empty[Long, Long]
-      es.foreach { e =>
-        outw.update(e.getLong(0), outw.getOrElse(e.getLong(0), 0L) + e.getLong(2))
-      }
-      val nodeIds = nation.select(col("n_nationkey").cast("long"))
-        .collect().map(_.getLong(0)).sorted
-      val n = nodeIds.length.toLong
-      var units = nodeIds.map(v => v -> (1000000000L / n)).toMap
-      for (_ <- 1 to iters) {
-        val contrib = scala.collection.mutable.HashMap.empty[Long, Long]
-        es.foreach { e =>
-          // src absent from nodes drops the edge (the distributed join
-          // does the same); dst absent from nodes is dropped below
-          units.get(e.getLong(0)).foreach { u =>
-            val c = u * e.getLong(2) * 85L / (100L * outw(e.getLong(0)))
-            contrib.update(e.getLong(1), contrib.getOrElse(e.getLong(1), 0L) + c)
-          }
+    val nodeIds = nation.select(col("n_nationkey").cast("long")).as[Long]
+      .collect().sorted
+    val n = nodeIds.length.toLong
+    var units = nodeIds.map(v => v -> (1000000000L / n)).toMap
+    for (_ <- 1 to iters) {
+      val contrib = scala.collection.mutable.HashMap.empty[Long, Long]
+      es.foreach { case (src, dst, w) =>
+        // a src or dst outside the nation table drops the edge
+        units.get(src).foreach { u =>
+          contrib.update(dst, contrib.getOrElse(dst, 0L) + u * w * 85L / (100L * outw(src)))
         }
-        units = nodeIds.map(v =>
-          v -> (150000000L / n + contrib.getOrElse(v, 0L))).toMap
       }
-      import org.apache.spark.sql.types.{StructType, StructField, LongType}
-      spark.createDataFrame(
-        java.util.Arrays.asList(nodeIds.map(v =>
-          org.apache.spark.sql.Row(v, units(v))): _*),
-        StructType(Seq(StructField("node", LongType), StructField("units", LongType))))
-    } else {
-      val outw = edges0c.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
-      val edges = edges0c.join(outw, "src")
-      val r0 = nodes.select(col("node"), expr("1000000000L div n").as("units"))
-      (1 to iters).foldLeft(r0) { (r, _) =>
-        val contrib = broadcast(edges)
-          .join(r.withColumnRenamed("node", "src"), "src")
-          .select(col("dst").as("node"),
-            expr("(units * w * 85L) div (100L * out_w)").as("c"))
-          .groupBy(col("node")).agg(sum(col("c")).as("contrib"))
-        nodes.join(contrib, Seq("node"), "left")
-          .select(col("node"),
-            (expr("150000000L div n") + coalesce(col("contrib"), lit(0L)))
-              .as("units"))
-      }
+      units = nodeIds.map(v =>
+        v -> (150000000L / n + contrib.getOrElse(v, 0L))).toMap
     }
-    nodes.join(ranks, "node")
+    val ranks = nodeIds.toSeq.map(v => (v, units(v))).toDF("node", "units")
+    nation.select(col("n_nationkey").as("node"), col("n_name"))
+      .join(ranks, "node")
       .select(col("n_name"), col("units"),
         (col("units") / 1000000000.0).as("pagerank"))
       .orderBy(col("units").desc, col("n_name"))
@@ -168,80 +148,33 @@ object Graph {
     * cross-engine. Per node the result is the lexicographically minimal
     * `(cost, hops)` over all ≤k-leg walks: both components are additive
     * and monotone, so the per-hop DP (extend last round's minimum, fold
-    * with `min(struct(cost, hops))`) is exact — a walk through `u`
-    * can never beat extending `u`'s own minimum.
+    * with the lexicographic min) is exact — a walk through `u` can never
+    * beat extending `u`'s own minimum.
     *
-    * Scale shape: ONE fact pass builds the edge list (dimensions
-    * under size-guarded hints, one shuffle), localCheckpoint'd at
-    * O(nations²) rows; the
-    * k relaxation rounds are tiny broadcast joins against the O(nodes)
-    * distance frame. At web scale the same plan runs with both sides
-    * hash-partitioned on node id and the frontier-only refinement
-    * (relax only nodes improved last round). */
+    * Scale shape: the distributed fact pass runs at construction and
+    * returns at most |nations|² edges (see [[graphMaxDriverEdges]]); the
+    * k relaxation rounds run on the driver, and the distances join back
+    * to the nation names. */
   def boundedShortestPaths(spark: SparkSession, dir: String,
-                           sourceKey: Int = 0, maxHops: Int = 4,
-                           maxDriverEdges: Long = graphMaxDriverEdges)
-  : DataFrame = {
-    val li = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-    val ord = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
-    val cust = Tables.customer(spark, dir).select(col("c_custkey"), col("c_nationkey"))
-    val supp = Tables.supplier(spark, dir).select(col("s_suppkey"), col("s_nationkey"))
-    val edges0 = li
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(Hints.dimHint(cust), col("o_custkey") === col("c_custkey"))
-      .join(Hints.dimHint(supp), col("l_suppkey") === col("s_suppkey"))
-      .where(col("c_nationkey") =!= col("s_nationkey"))
-      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-      .agg(count(lit(1)).as("w"))
-    // pin the ONE fact pass before deriving the max weight / edge costs
-    // so neither path re-runs it (see [[nationTradePageRank]])
-    val edges0c = edges0.localCheckpoint()
-
+                           sourceKey: Int = 0, maxHops: Int = 4): DataFrame = {
     import spark.implicits._
-    // driver fast path: identical Bellman-Ford DP over the collected
-    // edge list — lex-min on (cost, hops) matches min(struct(...)), all
-    // arithmetic exact integers (see guard scaladoc; spec-pinned)
-    val nEdges = edges0c.count()
-    val dist = if (nEdges <= maxDriverEdges) {
-      val raw = edges0c.select(col("src").cast("long"), col("dst").cast("long"),
-        col("w")).collect()
-      Dedup.freeCheckpoint(edges0c)
-      val mw = raw.iterator.map(_.getLong(2)).foldLeft(Long.MinValue)(math.max)
-      val es = raw.map(e =>
-        org.apache.spark.sql.Row(e.getLong(0), e.getLong(1), mw + 1L - e.getLong(2)))
-      val adj = es.groupBy(_.getLong(0))
-      var d = Map(sourceKey.toLong -> ((0L, 0)))
-      for (_ <- 1 to maxHops) {
-        val relaxed = d.toSeq.flatMap { case (u, (c, h)) =>
-          adj.getOrElse(u, Array.empty).map(e =>
-            e.getLong(1) -> ((c + e.getLong(2), h + 1)))
+    val raw = collectEdges(tradePairs(spark, dir)
+      .where(col("c_nationkey") =!= col("s_nationkey"))
+      .groupBy(col("c_nationkey"), col("s_nationkey")).agg(count(lit(1))))
+    val mw = raw.iterator.map(_._3).foldLeft(0L)(math.max)
+    val adj = raw.map { case (src, dst, w) => (src, dst, mw + 1L - w) }.groupBy(_._1)
+    var d = Map(sourceKey.toLong -> ((0L, 0)))
+    for (_ <- 1 to maxHops) {
+      val relaxed = d.toSeq.flatMap { case (u, (c, h)) =>
+        adj.getOrElse(u, Array.empty[(Long, Long, Long)]).map { case (_, v, ec) =>
+          v -> ((c + ec, h + 1))
         }
-        d = (d.toSeq ++ relaxed).groupBy(_._1)
-          .map { case (node, vs) => node -> vs.map(_._2).min }
       }
-      import org.apache.spark.sql.types.{StructType, StructField, LongType, IntegerType}
-      spark.createDataFrame(
-        java.util.Arrays.asList(d.toSeq.sortBy(_._1).map { case (node, (c, h)) =>
-          org.apache.spark.sql.Row(node, c, h)
-        }: _*),
-        StructType(Seq(StructField("node", LongType), StructField("cost", LongType),
-          StructField("hops", IntegerType))))
-    } else {
-      val mx = edges0c.agg(max(col("w")).as("mw"))
-      val edges = edges0c.crossJoin(broadcast(mx))
-        .select(col("src"), col("dst"), (col("mw") + 1L - col("w")).as("ecost"))
-      val d0 = Seq((sourceKey, 0L, 0)).toDF("node", "cost", "hops")
-      (1 to maxHops).foldLeft(d0) { (d, _) =>
-        val relaxed = edges
-          .join(broadcast(d.withColumnRenamed("node", "src")), "src")
-          .select(col("dst").as("node"), (col("cost") + col("ecost")).as("cost"),
-            (col("hops") + 1).as("hops"))
-        d.union(relaxed)
-          .groupBy(col("node"))
-          .agg(min(struct(col("cost"), col("hops"))).as("m"))
-          .select(col("node"), col("m.cost").as("cost"), col("m.hops").as("hops"))
-      }
+      d = (d.toSeq ++ relaxed).groupBy(_._1)
+        .map { case (node, vs) => node -> vs.map(_._2).min }
     }
+    val dist = d.toSeq.sortBy(_._1).map { case (node, (c, h)) => (node, c, h) }
+      .toDF("node", "cost", "hops")
     Tables.nation(spark, dir)
       .join(broadcast(dist), col("n_nationkey") === col("node"))
       .select(col("n_name"), col("cost"), col("hops"))
@@ -253,80 +186,26 @@ object Graph {
     * transitivity; a node's triangle count is the numerator of its local
     * clustering coefficient, Watts & Strogatz 1998).
     *
-    * Graph: undirected trade edges (merged both directions, self-loops
-    * dropped), thresholded to above-average total weight — the
-    * integer-exact cut `w·|E| > Σw`, so the complete K₂₅ at test scale
-    * becomes a genuine subgraph and no float compare can diverge
-    * cross-engine.
+    * Graph: [[strongTradeEdges]]. Each triangle is enumerated once, on
+    * the canonical orientation a < b < c.
     *
-    * Scale shape: one fact pass builds the edge list (the only
-    * corpus-sized work — cust/supp dims under size-guarded hints, one
-    * shuffle);
-    * the thresholded edge set is localCheckpoint'd and triangle
-    * enumeration is two self-joins on the CANONICAL orientation a<b<c,
-    * so each triangle is counted exactly once and the join fan-out is
-    * bounded by the oriented degree (at web scale the standard
-    * degree-ordering refinement assigns each edge its lower-degree
-    * endpoint first — same plan shape). */
-  def tradeTriangles(spark: SparkSession, dir: String,
-                     maxDriverEdges: Long = graphMaxDriverEdges): DataFrame = {
-    val li = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-    val ord = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
-    val cust = Tables.customer(spark, dir).select(col("c_custkey"), col("c_nationkey"))
-    val supp = Tables.supplier(spark, dir).select(col("s_suppkey"), col("s_nationkey"))
-    val und = li
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(Hints.dimHint(cust), col("o_custkey") === col("c_custkey"))
-      .join(Hints.dimHint(supp), col("l_suppkey") === col("s_suppkey"))
-      .where(col("c_nationkey") =!= col("s_nationkey"))
-      .groupBy(least(col("c_nationkey"), col("s_nationkey")).as("a"),
-        greatest(col("c_nationkey"), col("s_nationkey")).as("b"))
-      .agg(count(lit(1)).as("w"))
-    // pin the ONE fact pass before the threshold cut so neither path
-    // re-runs it for the `tot` subtree (see [[nationTradePageRank]])
-    val undc = und.localCheckpoint()
-    // driver fast path: same canonical a<b<c enumeration over the
-    // collected edge set (see guard scaladoc; spec-pinned vs the joins)
-    val nEdges = undc.count()
-    val perNode = if (nEdges <= maxDriverEdges) {
-      val raw = undc.select(col("a").cast("long"), col("b").cast("long"),
-        col("w")).collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      Dedup.freeCheckpoint(undc)
-      // the same integer-exact above-average cut: w·|E| > Σw
-      val ne = raw.length.toLong
-      val sw = raw.iterator.map(_._3).sum
-      val es = raw.collect { case (a, b, w) if w * ne > sw => (a, b) }
-      val edgeSet = es.toSet
-      val out = es.groupBy(_._1) // oriented adjacency: a -> {b}, a<b
-      val counts = scala.collection.mutable.HashMap.empty[Long, Long]
-      es.foreach { case (a, b) =>
-        out.getOrElse(b, Array.empty).foreach { case (_, c) =>
-          if (edgeSet.contains((a, c))) {
-            counts.update(a, counts.getOrElse(a, 0L) + 1L)
-            counts.update(b, counts.getOrElse(b, 0L) + 1L)
-            counts.update(c, counts.getOrElse(c, 0L) + 1L)
-          }
-        }
+    * Scale shape: the distributed fact pass runs at construction and
+    * returns at most |nations|² edges (see [[graphMaxDriverEdges]]); the
+    * enumeration runs on the driver, and the counts join back to the
+    * nation names. */
+  def tradeTriangles(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val es = strongTradeEdges(spark, dir).map { case (a, b, _) => (a, b) }
+    val edgeSet = es.toSet
+    val out = es.groupBy(_._1) // oriented adjacency: a -> {b}, a<b
+    val counts = scala.collection.mutable.HashMap.empty[Long, Long]
+    es.foreach { case (a, b) =>
+      out.getOrElse(b, Array.empty[(Long, Long)]).foreach { case (_, c) =>
+        if (edgeSet.contains((a, c)))
+          Seq(a, b, c).foreach(v => counts.update(v, counts.getOrElse(v, 0L) + 1L))
       }
-      import org.apache.spark.sql.types.{StructType, StructField, LongType}
-      spark.createDataFrame(
-        java.util.Arrays.asList(counts.toSeq.sortBy(_._1).map { case (n, c) =>
-          org.apache.spark.sql.Row(n, c)
-        }: _*),
-        StructType(Seq(StructField("node", LongType),
-          StructField("n_triangles", LongType))))
-    } else {
-      val tot = undc.agg(count(lit(1)).as("ne"), sum(col("w")).as("sw"))
-      val strong = undc.crossJoin(broadcast(tot))
-        .where(col("w") * col("ne") > col("sw"))
-        .select(col("a"), col("b"))
-      val tri = strong
-        .join(strong.select(col("a").as("b"), col("b").as("c")), "b")
-        .join(strong.select(col("a"), col("b").as("c")), Seq("a", "c"))
-        .select(col("a"), col("b"), col("c"))
-      tri.select(explode(array(col("a"), col("b"), col("c"))).as("node"))
-        .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
     }
+    val perNode = counts.toSeq.sortBy(_._1).toDF("node", "n_triangles")
     Tables.nation(spark, dir)
       .join(perNode, col("n_nationkey") === col("node"), "left")
       .select(col("n_name"),
@@ -348,108 +227,44 @@ object Graph {
     * [[lpaIters]] rounds rather than a convergence test, and isolated
     * nodes keep their own label. Labels init to the node id.
     *
-    * Graph: the same integer-exact above-average-weight edge cut as
-    * [[tradeTriangles]] (shared builder semantics, weights kept).
+    * Graph: [[strongTradeEdges]], weights kept, both directions voting.
     *
-    * Scale shape: per round ONE join of the edge list against the
-    * (node, label) frame and one (node, label) group-by — both
-    * partition by node id; no per-node adjacency materialization, no
-    * driver state. Rounds localCheckpoint the label frame so the plan
-    * does not grow 4× (the [[nationTradePageRank]] discipline). */
+    * Scale shape: the distributed fact pass runs at construction and
+    * returns at most |nations|² edges (see [[graphMaxDriverEdges]]); the
+    * rounds run on the driver with exact Long vote sums, and the labels
+    * join back to the nation names. */
   def tradeCommunities(spark: SparkSession, dir: String,
-                       iters: Int = lpaIters,
-                       maxDriverEdges: Long = graphMaxDriverEdges)
-  : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val li = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey"))
-    val ord = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
-    val cust = Tables.customer(spark, dir).select(col("c_custkey"), col("c_nationkey"))
-    val supp = Tables.supplier(spark, dir).select(col("s_suppkey"), col("s_nationkey"))
-    val und = li
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(Hints.dimHint(cust), col("o_custkey") === col("c_custkey"))
-      .join(Hints.dimHint(supp), col("l_suppkey") === col("s_suppkey"))
-      .where(col("c_nationkey") =!= col("s_nationkey"))
-      .groupBy(least(col("c_nationkey"), col("s_nationkey")).as("a"),
-        greatest(col("c_nationkey"), col("s_nationkey")).as("b"))
-      .agg(count(lit(1)).as("w"))
-    // pin the ONE fact pass before the threshold cut so neither path
-    // re-runs it for the `tot` subtree (see [[nationTradePageRank]])
-    val undc = und.localCheckpoint()
+                       iters: Int = lpaIters): DataFrame = {
+    import spark.implicits._
+    val es = strongTradeEdges(spark, dir)
+    val sym = es ++ es.map { case (a, b, w) => (b, a, w) }
     val nodes = Tables.nation(spark, dir)
       .select(col("n_nationkey").cast("long").as("node"), col("n_name"))
-    // driver fast path: identical synchronous weighted-vote rounds over
-    // the collected edge list — exact Long vote sums, the same
-    // (vw desc, lbl asc) tie-break (see guard scaladoc; spec-pinned)
-    val nEdges = undc.count()
-    if (nEdges <= maxDriverEdges) {
-      val raw = undc.select(col("a").cast("long"), col("b").cast("long"),
-        col("w")).collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      Dedup.freeCheckpoint(undc)
-      // the same integer-exact above-average cut: w·|E| > Σw
-      val ne = raw.length.toLong
-      val sw = raw.iterator.map(_._3).sum
-      val es = raw.filter { case (_, _, w) => w * ne > sw }
-      val sym = es ++ es.map { case (a, b, w) => (b, a, w) }
-      val nodeIds = Tables.nation(spark, dir)
-        .select(col("n_nationkey").cast("long"))
-        .collect().map(_.getLong(0)).sorted
-      var labels = nodeIds.map(v => v -> v).toMap
-      for (_ <- 0 until iters) {
-        val votes = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
-        sym.foreach { case (src, dst, w) =>
-          labels.get(dst).foreach { lbl =>
-            votes.update((src, lbl), votes.getOrElse((src, lbl), 0L) + w)
-          }
-        }
-        val best = votes.toSeq
-          .map { case ((src, lbl), vw) => (src, lbl, vw) }
-          .groupBy(_._1)
-          .map { case (src, vs) =>
-            src -> vs.minBy { case (_, lbl, vw) => (-vw, lbl) }._2
-          }
-        labels = labels.map { case (node, lbl) =>
-          node -> best.getOrElse(node, lbl)
-        }
-      }
-      val sizes = labels.values.groupBy(identity).map { case (l, vs) =>
-        l -> vs.size.toLong
-      }
-      import org.apache.spark.sql.types.{StructType, StructField, LongType}
-      val lblDf = spark.createDataFrame(
-        java.util.Arrays.asList(nodeIds.map(v =>
-          org.apache.spark.sql.Row(v, labels(v), sizes(labels(v)))): _*),
-        StructType(Seq(StructField("node", LongType), StructField("lbl", LongType),
-          StructField("community_size", LongType))))
-      return nodes.join(lblDf, "node")
-        .select(col("n_name"), col("lbl").as("community"),
-          col("community_size"))
-        .orderBy(col("n_name"))
-    }
-    val tot = undc.agg(count(lit(1)).as("ne"), sum(col("w")).as("sw"))
-    val strong = undc.crossJoin(broadcast(tot))
-      .where(col("w") * col("ne") > col("sw"))
-      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"),
-        col("w"))
-    val sym = strong.select(col("a").as("src"), col("b").as("dst"), col("w"))
-      .union(strong.select(col("b").as("src"), col("a").as("dst"), col("w")))
-    var labels = nodes.select(col("node"), col("node").as("lbl"))
+    val nodeIds = nodes.select(col("node")).as[Long].collect().sorted
+    var labels = nodeIds.map(v => v -> v).toMap
     for (_ <- 0 until iters) {
-      val votes = sym
-        .join(labels.select(col("node").as("dst"), col("lbl")), "dst")
-        .groupBy(col("src"), col("lbl")).agg(sum(col("w")).as("vw"))
-      val best = votes
-        .withColumn("r", row_number().over(
-          Window.partitionBy(col("src")).orderBy(col("vw").desc, col("lbl"))))
-        .where(col("r") === 1)
-        .select(col("src").as("node"), col("lbl").as("new_lbl"))
-      labels = labels.join(best, Seq("node"), "left")
-        .select(col("node"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
-        .localCheckpoint()
+      val votes = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
+      sym.foreach { case (src, dst, w) =>
+        labels.get(dst).foreach { lbl =>
+          votes.update((src, lbl), votes.getOrElse((src, lbl), 0L) + w)
+        }
+      }
+      val best = votes.toSeq
+        .map { case ((src, lbl), vw) => (src, lbl, vw) }
+        .groupBy(_._1)
+        .map { case (src, vs) =>
+          src -> vs.minBy { case (_, lbl, vw) => (-vw, lbl) }._2
+        }
+      labels = labels.map { case (node, lbl) =>
+        node -> best.getOrElse(node, lbl)
+      }
     }
-    val sizes = labels.groupBy(col("lbl"))
-      .agg(count(lit(1)).as("community_size"))
-    nodes.join(labels, "node").join(sizes, "lbl")
+    val sizes = labels.values.groupBy(identity).map { case (l, vs) =>
+      l -> vs.size.toLong
+    }
+    val lblDf = nodeIds.toSeq.map(v => (v, labels(v), sizes(labels(v))))
+      .toDF("node", "lbl", "community_size")
+    nodes.join(lblDf, "node")
       .select(col("n_name"), col("lbl").as("community"),
         col("community_size"))
       .orderBy(col("n_name"))

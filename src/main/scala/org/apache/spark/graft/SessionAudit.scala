@@ -4,6 +4,8 @@ import org.apache.spark.SparkEnv
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.{BlockId, BroadcastBlockId, RDDBlockId}
 
+import scala.util.control.NonFatal
+
 /** Measurement-only diagnostic (NOT part of the driver contract, never on
   * a query path): reports the session's accumulated block-manager state —
   * live RDD cache blocks (localCheckpoint / persist leftovers), broadcast
@@ -97,7 +99,7 @@ object SessionAudit {
       println(f"AUDIT pass$p probe-start $probe $t0%.2fs")
       qs.foreach { case (_, fn) =>
         try evalOnce(fn(spark, sfDir))
-        catch { case e: Throwable => println(s"AUDIT FAIL: ${e.getMessage}") }
+        catch { case NonFatal(e) => println(s"AUDIT FAIL: ${e.getMessage}") }
       }
       val t1 = evalOnce(_root_.graft.SparkEntry.queries(probe)(spark, sfDir))
       println(f"AUDIT pass$p probe-end $probe $t1%.2fs")

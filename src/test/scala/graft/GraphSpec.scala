@@ -1,11 +1,43 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Graph
 import graft.sources.Tables
 
 class GraphSpec extends SparkSpec {
+
+  /** The reference edge source for the plain-Scala replays: one
+    * (c_nationkey, s_nationkey) row per lineitem, joined without the
+    * library's hints. */
+  private def tradePairs: DataFrame = {
+    val li = Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_suppkey"))
+    val ord = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_custkey"))
+    val cust = Tables.customer(spark, sf).select(col("c_custkey"), col("c_nationkey"))
+    val supp = Tables.supplier(spark, sf).select(col("s_suppkey"), col("s_nationkey"))
+    li.join(ord, col("l_orderkey") === col("o_orderkey"))
+      .join(cust, col("o_custkey") === col("c_custkey"))
+      .join(supp, col("l_suppkey") === col("s_suppkey"))
+  }
+
+  private def nationNames: Map[Long, String] = Tables.nation(spark, sf)
+    .select(col("n_nationkey"), col("n_name")).collect()
+    .map(r => r.getInt(0).toLong -> r.getString(1)).toMap
+
+  /** The strong undirected edge list (above-average weight, w·|E| > Σw)
+    * of the triangles and communities queries, collected. */
+  private def strongEdges: Array[(Long, Long, Long)] = {
+    val und = tradePairs
+      .where(col("c_nationkey") =!= col("s_nationkey"))
+      .groupBy(least(col("c_nationkey"), col("s_nationkey")).as("a"),
+        greatest(col("c_nationkey"), col("s_nationkey")).as("b"))
+      .agg(count(lit(1)).as("w"))
+      .collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong, r.getLong(2)))
+    val sw = und.map(_._3).sum
+    val ne = und.length.toLong
+    und.filter { case (_, _, w) => w * ne > sw }
+  }
 
   test("pagerank: every nation ranked, mass conserved within floor loss, deterministic") {
     val df = Graph.nationTradePageRank(spark, sf).cache()
@@ -31,6 +63,30 @@ class GraphSpec extends SparkSpec {
     df.unpersist()
   }
 
+  test("pagerank: exact vs plain-Scala integer power-iteration replay") {
+    val rows = Graph.nationTradePageRank(spark, sf).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+    // independent reimplementation: collect the same weighted edge list
+    // (self-loops kept) and run the 5 exact integer steps in plain Scala
+    val ew = tradePairs
+      .groupBy(col("c_nationkey"), col("s_nationkey")).agg(count(lit(1)))
+      .collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong, r.getLong(2)))
+    val outW = ew.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
+    val names = nationNames
+    val n = names.size.toLong
+    var units: Map[Long, Long] = names.keys.map(_ -> 1000000000L / n).toMap
+    for (_ <- 1 to 5) {
+      val contrib = ew.filter(e => units.contains(e._1)).groupBy(_._2)
+        .view.mapValues(_.map { case (a, _, w) =>
+          units(a) * w * 85L / (100L * outW(a)) }.sum).toMap
+      units = units.map { case (v, _) => v -> (150000000L / n + contrib.getOrElse(v, 0L)) }
+    }
+    val expect = units.toSeq
+      .map { case (v, u) => (names(v), u, u / 1000000000.0) }
+      .sortBy { case (nm, u, _) => (-u, nm) }
+    assert(rows === expect)
+  }
+
   test("shortest paths: exact vs driver-side bounded Bellman-Ford, source at zero") {
     val df = Graph.boundedShortestPaths(spark, sf).cache()
     val rows = df.collect()
@@ -39,29 +95,21 @@ class GraphSpec extends SparkSpec {
     assert(src.getLong(1) === 0L && src.getInt(2) === 0)
     // independent reimplementation: collect the same edge list and run
     // the ≤4-hop DP in plain Scala — the engine must match it exactly
-    val li = Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_suppkey"))
-    val ord = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_custkey"))
-    val cust = Tables.customer(spark, sf).select(col("c_custkey"), col("c_nationkey"))
-    val supp = Tables.supplier(spark, sf).select(col("s_suppkey"), col("s_nationkey"))
-    val ew = li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(cust, col("o_custkey") === col("c_custkey"))
-      .join(supp, col("l_suppkey") === col("s_suppkey"))
+    val ew = tradePairs
       .where(col("c_nationkey") =!= col("s_nationkey"))
       .groupBy(col("c_nationkey").as("a"), col("s_nationkey").as("b"))
       .agg(count(lit(1)).as("w"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))
+      .collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong, r.getLong(2)))
     val mw = ew.map(_._3).max
     val edges = ew.map { case (a, b, w) => (a, b, mw + 1 - w) }
-    var best = Map(0 -> ((0L, 0)))
+    var best = Map(0L -> ((0L, 0)))
     for (_ <- 1 to 4) {
       val relaxed = edges.flatMap { case (a, b, c) =>
         best.get(a).map { case (cost, hops) => b -> ((cost + c, hops + 1)) } }
       best = (best.toSeq ++ relaxed).groupBy(_._1)
         .map { case (n, vs) => n -> vs.map(_._2).min }
     }
-    val names = Tables.nation(spark, sf)
-      .select(col("n_nationkey"), col("n_name")).collect()
-      .map(r => r.getInt(0) -> r.getString(1)).toMap
+    val names = nationNames
     val expect = best.toSeq
       .map { case (n, (c, h)) => (names(n), c, h) }
       .sortBy { case (nm, c, _) => (c, nm) }
@@ -86,6 +134,25 @@ class GraphSpec extends SparkSpec {
     df.unpersist()
   }
 
+  test("triangles: exact vs plain-Scala brute-force triple enumeration") {
+    val rows = Graph.tradeTriangles(spark, sf).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    // independent reimplementation: test every node triple a < b < c of
+    // the strong edge set for all three edges
+    val edges = strongEdges.map { case (a, b, _) => (a, b) }.toSet
+    val names = nationNames
+    val ids = names.keys.toSeq.sorted
+    val tris = for {
+      a <- ids; b <- ids if a < b && edges((a, b))
+      c <- ids if b < c && edges((b, c)) && edges((a, c))
+    } yield Seq(a, b, c)
+    assert(tris.nonEmpty, "no strong triangle on this corpus")
+    val perNode = tris.flatten.groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val expect = ids.map(v => (names(v), perNode.getOrElse(v, 0L)))
+      .sortBy { case (nm, t) => (-t, nm) }
+    assert(rows === expect)
+  }
+
   test("communities: exact vs driver-side synchronous LPA replay, sizes consistent") {
     val df = Graph.tradeCommunities(spark, sf).cache()
     val rows = df.collect()
@@ -98,25 +165,8 @@ class GraphSpec extends SparkSpec {
     // edge list and run Graph.lpaIters synchronous weighted-vote rounds
     // in plain Scala — tie-break (vote desc, label asc), absent voters
     // keep their label — the engine must match it exactly
-    val li = Tables.lineitem(spark, sf).select(col("l_orderkey"), col("l_suppkey"))
-    val ord = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_custkey"))
-    val cust = Tables.customer(spark, sf).select(col("c_custkey"), col("c_nationkey"))
-    val supp = Tables.supplier(spark, sf).select(col("s_suppkey"), col("s_nationkey"))
-    val und = li.join(ord, col("l_orderkey") === col("o_orderkey"))
-      .join(cust, col("o_custkey") === col("c_custkey"))
-      .join(supp, col("l_suppkey") === col("s_suppkey"))
-      .where(col("c_nationkey") =!= col("s_nationkey"))
-      .groupBy(least(col("c_nationkey"), col("s_nationkey")).as("a"),
-        greatest(col("c_nationkey"), col("s_nationkey")).as("b"))
-      .agg(count(lit(1)).as("w"))
-      .collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong, r.getLong(2)))
-    val sw = und.map(_._3).sum
-    val ne = und.length.toLong
-    val strong = und.filter { case (_, _, w) => w * ne > sw }
-    val sym = strong.flatMap { case (a, b, w) => Seq((a, b, w), (b, a, w)) }
-    val nodeIds = Tables.nation(spark, sf)
-      .select(col("n_nationkey").cast("long")).collect().map(_.getLong(0))
-    var labels: Map[Long, Long] = nodeIds.map(n => n -> n).toMap
+    val sym = strongEdges.flatMap { case (a, b, w) => Seq((a, b, w), (b, a, w)) }
+    var labels: Map[Long, Long] = nationNames.keys.map(n => n -> n).toMap
     for (_ <- 0 until Graph.lpaIters) {
       val votes = sym.groupBy(_._1).map { case (src, es) =>
         val byLbl = es.groupBy { case (_, dst, _) => labels(dst) }
@@ -134,15 +184,25 @@ class GraphSpec extends SparkSpec {
     df.unpersist()
   }
 
-  test("graph: driver iteration fast path ≡ distributed loop, all four queries") {
-    // maxDriverEdges = -1 forces the distributed path; MaxValue forces
-    // the driver path — both must produce bit-identical frames (the
-    // guard only chooses WHERE the exact integer recurrence runs)
-    def both(f: Long => org.apache.spark.sql.DataFrame): Unit =
-      assert(f(Long.MaxValue).collect().toSeq === f(-1L).collect().toSeq)
-    both(g => Graph.nationTradePageRank(spark, sf, maxDriverEdges = g))
-    both(g => Graph.boundedShortestPaths(spark, sf, maxDriverEdges = g))
-    both(g => Graph.tradeTriangles(spark, sf, maxDriverEdges = g))
-    both(g => Graph.tradeCommunities(spark, sf, maxDriverEdges = g))
+  test("graph builders run their fact pass at construction: pinned job counts") {
+    // the four builders are eager (Graph.graphMaxDriverEdges scaladoc):
+    // the one collect of the nation-pair edge list (plus the nation ids
+    // for pagerank and communities) runs while the frame is built, and
+    // nothing else does
+    val sc = spark.sparkContext
+    def constructionJobs(build: => DataFrame): Int = {
+      val group = s"graph-construction-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(group, "graph builder construction")
+      try build finally sc.clearJobGroup()
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val jobs = Seq(
+      "pagerank" -> constructionJobs(Graph.nationTradePageRank(spark, sf)),
+      "shortest" -> constructionJobs(Graph.boundedShortestPaths(spark, sf)),
+      "triangles" -> constructionJobs(Graph.tradeTriangles(spark, sf)),
+      "communities" -> constructionJobs(Graph.tradeCommunities(spark, sf)))
+    assert(jobs === Seq("pagerank" -> 6, "shortest" -> 5,
+      "triangles" -> 5, "communities" -> 6))
   }
 }

@@ -195,19 +195,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("shortest paths: relaxation rounds join broadcast distance frames") {
-    // distributed path (forced past the driver fast-path guard): the 4
-    // relaxation rounds + the final name join each read the O(nodes)
-    // frame via broadcast — the fact table never re-shuffles into an
-    // iteration
-    val p = plan(graft.ops.Graph.boundedShortestPaths(spark, sf,
-      maxDriverEdges = -1L))
-    assert(countOccurrences(p, "BroadcastExchange") >= 5, p)
-    assert(!p.contains("CartesianProduct"), p)
-    // driver fast path (the default at bounded edge counts): the
-    // iteration collapses to one broadcast of the driver-computed
-    // distance frame — no iteration joins left in the plan
+    // the relaxation rounds run on the driver at construction: the plan
+    // is one broadcast of the driver-computed distance frame into the
+    // nation name join — no iteration joins left in the plan
     val q = plan(graft.ops.Graph.boundedShortestPaths(spark, sf))
     assert(q.contains("LocalTableScan"), q)
+    assert(q.contains("BroadcastExchange"), q)
     assert(!q.contains("CartesianProduct"), q)
   }
 
