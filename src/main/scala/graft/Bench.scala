@@ -2,7 +2,9 @@ package graft
 
 import java.lang.management.ManagementFactory
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Shared timing protocol for [[Bench]] / [[BenchOne]].
@@ -57,7 +59,9 @@ private[graft] object Timing {
   final case class Sample(sec: Double, gcSec: Double, rows: Long,
                           checksum: Long, ok: Boolean, err: String)
 
-  /** One timed evaluation with GC attribution; never throws. */
+  /** One timed evaluation with GC attribution. A non-fatal failure
+    * becomes a sample with `ok = false`; fatal errors (out of memory,
+    * interruption) propagate. */
   def timeOnce(fn: => DataFrame): Sample = {
     val gc0 = gcSeconds()
     val t0 = System.nanoTime()
@@ -66,7 +70,7 @@ private[graft] object Timing {
       Sample((System.nanoTime() - t0) / 1e9, gcSeconds() - gc0, n, chk,
         ok = true, err = "")
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         Sample((System.nanoTime() - t0) / 1e9, gcSeconds() - gc0, -1L, 0L,
           ok = false, err = Option(e.getMessage).getOrElse(e.getClass.getName)
             .replaceAll("[\"\\\\\n\r\t]", " ").take(200))
@@ -142,13 +146,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.sources.GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.sources.GraftSession.local()
     // warm the session (codegen, parquet decode paths, shuffle machinery,
     // JIT) so per-query times measure the plans, not JVM startup; count()
     // alone is metadata-only and left the first real query paying the

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-capture harness for the optimization rounds: writes
   * `.explain("formatted")` for each named query to plans/<tag>/<query>.txt
@@ -8,13 +7,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.sources.GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.sources.GraftSession.local()
     val outDir = java.nio.file.Paths.get(args.head)
     java.nio.file.Files.createDirectories(outDir)
     args.tail.foreach { name =>

@@ -7,7 +7,6 @@ import scala.util.Try
 import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Perf-work diagnostic harness (measurement only — not part of the
   * driver contract): for each named query, separates plan-build /
@@ -23,13 +22,7 @@ object ProfileOne {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.sources.GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.sources.GraftSession.local()
     import org.apache.spark.sql.functions._
     spark.read.parquet(s"$sfDir/documents.parquet")
       .agg(avg(length(col("text")))).collect()

@@ -1,26 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.registry result → parquet, plus its
+  * oracle SQL in oracle_sql.json, for the DuckDB compare
+  * (`tools/check_oracle.py`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.sources.GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.sources.GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // optional comma-separated prefix filter for local iteration: only the
     // matching queries and their oracles are written, so check_oracle.py
     // compares just that family; the driver sets no filter and dumps
     // everything
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    def selected(name: String): Boolean = only.forall(_.exists(name.startsWith))
+    val selected = SparkEntry.registry.filter(spec => only.forall(_.exists(spec.name.startsWith)))
     // gate-rung guard (round-9 ADVICE): several dump-twin oracle CTEs pin
     // the GATE-rung geometry (one sign word / word_idx = 0, nProbe = 8 of
     // nlist = 16, shortlist c = 128, PQ probe/shortlist 8/64,
@@ -34,11 +28,13 @@ object Verify {
       System.err.println(s"[verify] WARNING: gate corpus has $nEmb embedding " +
         "rows > 2048 — the sign-LSH / IVF / ANN twin SQL pins gate-rung " +
         "literals and WILL hash-mismatch at wider adaptive rungs")
-    SparkEntry.queries.filter { case (name, _) => selected(name) }.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    // registry order, so two runs of the same code dump and log in the
+    // same sequence
+    selected.foreach { spec =>
+      try spec.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${spec.name}")
       catch { case NonFatal(e) =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${spec.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -64,12 +60,14 @@ object Verify {
       try graft.ops.Layout.fileStatsVersionDirs(spark, sfDir)
       catch { case NonFatal(_) => ("/graft_fstats_unseeded_v1",
         "/graft_fstats_unseeded_v2") }
-    val json = SparkEntry.oracleSql.filter { case (k, _) => selected(k) }
-      .map { case (k, v) =>
-        s"${q(k)}: ${q(v.replace(graft.explore.Stats.verifyOutToken, outAbs)
+    // keys in name order, so two dumps of the same code compare with diff
+    val json = selected.sortBy(_.name).flatMap { spec =>
+      spec.oracle.map { sql =>
+        s"${q(spec.name)}: ${q(sql.replace(graft.explore.Stats.verifyOutToken, outAbs)
           .replace(graft.ops.Layout.fstatsV1Token, fsV1)
           .replace(graft.ops.Layout.fstatsV2Token, fsV2))}"
-      }.mkString("{", ",", "}")
+      }
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

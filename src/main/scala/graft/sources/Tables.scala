@@ -213,4 +213,18 @@ object GraftSession {
       // The id stays visible in the generated source's comment.
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+
+  /** The session graft's `main`s run on: `local[cpus]` with `cpus` from
+    * `SPARK_GRAFT_CPUS` (default 32), one shuffle partition per core, no
+    * UI, WARN logging. */
+  def local(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = configure(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -66,16 +66,10 @@ object SessionAudit {
     * `runMain org.apache.spark.graft.SessionAudit <passes> <probe> [<query-prefix-filter>]`. */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = if (args.nonEmpty) args(0).toInt else 2
     val probe = if (args.length > 1) args(1) else "q_assoc_rules"
     val filter = if (args.length > 2) Some(args(2)) else None
-    val spark = graft.sources.GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.sources.GraftSession.local()
     import org.apache.spark.sql.functions._
     spark.read.parquet(s"$sfDir/documents.parquet")
       .agg(avg(length(col("text")))).collect()

@@ -64,9 +64,17 @@ class ContractSpec extends SparkSpec {
       "end to end (the q_sim_pq_codebooks pattern); TextSpec pins a " +
       "planted-vocab fit + encode round-trip"))
 
+  test("registry: every query name is declared once") {
+    // a duplicate would silently replace the earlier entry in the
+    // derived SparkEntry.queries / oracleSql maps
+    val dups = SparkEntry.registry.groupBy(_.name).collect {
+      case (name, specs) if specs.size > 1 => name
+    }
+    assert(dups.isEmpty, s"names declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+  }
+
   test("rows-only set: exactly the enlisted irreducible queries") {
-    val declared = SparkEntry.queries.keySet
-    val rowsOnly = declared -- SparkEntry.oracleSql.keySet
+    val rowsOnly = SparkEntry.registry.filter(_.oracle.isEmpty).map(_.name).toSet
     val unlisted = rowsOnly -- rowsOnlyContract.keySet
     val stale = rowsOnlyContract.keySet -- rowsOnly
     assert(unlisted.isEmpty, s"rows-only queries without a declared " +
@@ -75,9 +83,6 @@ class ContractSpec extends SparkSpec {
       "with the spec that makes rows-only honest")
     assert(stale.isEmpty, s"rowsOnlyContract entries that are no longer " +
       s"rows-only (or no longer declared): ${stale.toSeq.sorted.mkString(", ")}")
-    // every oracle key must be a declared query (no orphan SQL)
-    val orphans = SparkEntry.oracleSql.keySet -- declared
-    assert(orphans.isEmpty, s"oracleSql without a query: $orphans")
   }
 
   test("no declared query emits a top-level array/map column") {
@@ -86,14 +91,13 @@ class ContractSpec extends SparkSpec {
     // the recording even when the parquet dump is fine (round-9 verdict
     // #1: q_dedup_embed_signs / q_sim_ivf_centroids). Schema resolution is
     // lazy, so this sweeps all declared queries without executing them.
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val nested = fn(spark, sf).schema.fields.collect {
-          case f if f.dataType.isInstanceOf[ArrayType]
-            || f.dataType.isInstanceOf[MapType] => f.name
-        }
-        if (nested.isEmpty) None
-        else Some(s"$name(${nested.mkString(",")})")
+    val offenders = SparkEntry.registry.flatMap { q =>
+      val nested = q.build(spark, sf).schema.fields.collect {
+        case f if f.dataType.isInstanceOf[ArrayType]
+          || f.dataType.isInstanceOf[MapType] => f.name
+      }
+      if (nested.isEmpty) None
+      else Some(s"${q.name}(${nested.mkString(",")})")
     }
     assert(offenders.isEmpty,
       s"declared queries with harness-breaking top-level array/map " +
