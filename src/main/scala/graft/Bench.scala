@@ -1,13 +1,19 @@
 package graft
 
 import java.lang.management.ManagementFactory
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
-/** Shared timing protocol for [[Bench]] / [[BenchOne]].
+/** Shared timing protocol for every mode of [[Bench]].
   *
   * A timed run evaluates EVERY output column of the query: `count()` lets
   * Catalyst drop the final sort and prune unreferenced per-row expressions
@@ -144,9 +150,9 @@ object Bench {
     } finally in.close()
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.sources.GraftSession.local()
+  /** Session warm-up shared by every mode, run before anything is timed
+    * or planned. */
+  private def warmUp(spark: SparkSession, sfDir: String): Unit = {
     // warm the session (codegen, parquet decode paths, shuffle machinery,
     // JIT) so per-query times measure the plans, not JVM startup; count()
     // alone is metadata-only and left the first real query paying the
@@ -185,7 +191,128 @@ object Bench {
     // q_text_sparse_sim still tokenizes live, only its scheduled
     // consumers (ER, hybrid fusion) read the table
     graft.ops.Text.ensureRarePostingIndex(spark, sfDir)
+  }
 
+  /** Modes, all on the same session and warm-up:
+    *  - no arguments: the driver protocol (one JSON artifact line, below);
+    *  - `<query> ...`: query mode, [[profile]] per named query;
+    *  - `explain <outDir> <query> ...`: each query's formatted physical
+    *    plan written to `<outDir>/<query>.txt`.
+    * The corpus is `SPARK_GRAFT_SF_DIR` (default sf0.1). */
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val (explainDir, names) = args.toList match {
+      case "explain" :: dir :: qs if qs.nonEmpty => (Some(dir), qs)
+      case qs => (None, qs)
+    }
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown query: ${unknown.mkString(", ")}; " +
+      "usage: graft.Bench [<query> ... | explain <outDir> <query> ...]")
+    val spark = graft.sources.GraftSession.local()
+    warmUp(spark, sfDir)
+    val failed = explainDir match {
+      case Some(dir) => explain(spark, sfDir, dir, names); Nil
+      case None if names.nonEmpty =>
+        names.flatMap { name =>
+          val p = profile(spark, sfDir, name)
+          val err = p.runs.find(!_.ok).map(_.err)
+          if (err.isEmpty) println(p.report)
+          err.map(p.name -> _)
+        }
+      case None => driverProtocol(spark, sfDir)
+    }
+    spark.stop()
+    if (failed.nonEmpty) {
+      failed.foreach { case (name, err) =>
+        System.err.println(s"BENCH FAIL $name: $err")
+      }
+      sys.exit(1)
+    }
+  }
+
+  /** Explain mode: writes `.explain("formatted")` of each named query to
+    * `<outDir>/<query>.txt`. */
+  private def explain(spark: SparkSession, sfDir: String, outDir: String,
+                      names: Seq[String]): Unit = {
+    val out = Paths.get(outDir)
+    Files.createDirectories(out)
+    val queries = SparkEntry.queries
+    names.foreach { name =>
+      val txt = queries(name)(spark, sfDir).queryExecution
+        .explainString(FormattedMode)
+      Files.writeString(out.resolve(s"$name.txt"), txt)
+      println(s"EXPLAINED $name -> ${out.resolve(s"$name.txt")}")
+    }
+  }
+
+  /** One completed stage of a profiled run. */
+  final case class StageRow(id: Int, name: String, tasks: Int, runMs: Long,
+                            cpuMs: Long, shufReadMb: Double,
+                            shufWriteMb: Double, inMb: Double)
+
+  /** Query mode's record of one query: three timed runs, each with the
+    * builder's construction seconds (eager jobs included), and the stages
+    * of the last run. */
+  final case class Profile(name: String, runs: Seq[Timing.Sample],
+                           buildSec: Seq[Double], stages: Seq[StageRow]) {
+    /** `BENCHONE` line (run seconds, GC seconds, distinct checksums), a
+      * `PROFILE` line with the construction seconds, then one line per
+      * stage of the last run. */
+    def report: String = {
+      def secs(xs: Seq[Double]) = xs.map(x => f"$x%.2f").mkString(" ")
+      (Seq(
+        s"BENCHONE $name ${secs(runs.map(_.sec))} gc=${secs(runs.map(_.gcSec))}" +
+          s" chk=${runs.map(_.checksum).distinct.mkString(",")}",
+        s"PROFILE $name build=${secs(buildSec)} stages=${stages.length}") ++
+        stages.map(r =>
+          f"  stage ${r.id}%4d tasks=${r.tasks}%3d run=${r.runMs}%6dms " +
+            f"cpu=${r.cpuMs}%6dms in=${r.inMb}%7.1fMB sr=${r.shufReadMb}%6.1fMB " +
+            f"sw=${r.shufWriteMb}%6.1fMB  ${r.name}")).mkString("\n")
+    }
+  }
+
+  /** Query mode for one query: three runs under the driver protocol's
+    * evaluation, construction inside each timed run, so the first run
+    * shows the first-plan (Janino, scan) cost apart from the steady ones.
+    * Only the last run's stages are recorded: the listener bus is drained
+    * before the listener is added, so no earlier run's late event reaches
+    * it, and again before it is removed, so the run's own late events do. */
+  def profile(spark: SparkSession, sfDir: String, name: String): Profile = {
+    val fn = SparkEntry.queries(name)
+    def run(): (Timing.Sample, Double) = {
+      var buildSec = 0.0
+      val s = Timing.timeOnce {
+        val t0 = System.nanoTime()
+        try fn(spark, sfDir) finally buildSec = (System.nanoTime() - t0) / 1e9
+      }
+      (s, buildSec)
+    }
+    val first = Seq(run(), run())
+    val sc = spark.sparkContext
+    val stages = new ConcurrentLinkedQueue[StageRow]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val si = e.stageInfo
+        val m = si.taskMetrics
+        stages.add(StageRow(si.stageId, si.name.takeWhile(_ != '\n').take(60),
+          si.numTasks, m.executorRunTime, m.executorCpuTime / 1000000L,
+          m.shuffleReadMetrics.totalBytesRead / 1048576.0,
+          m.shuffleWriteMetrics.bytesWritten / 1048576.0,
+          m.inputMetrics.bytesRead / 1048576.0))
+      }
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    val last = try { val r = run(); ListenerBus.drain(sc); r }
+      finally sc.removeSparkListener(listener)
+    val runs = first :+ last
+    Profile(name, runs.map(_._1), runs.map(_._2),
+      stages.asScala.toSeq.sortBy(_.id))
+  }
+
+  /** The driver protocol: returns the failed queries' (name, error). */
+  private def driverProtocol(spark: SparkSession, sfDir: String)
+      : Seq[(String, String)] = {
     val steady = steadyRef(sfDir)
 
     // headlineRun: which run became the headline (0 = pass 1, 1 =
@@ -196,8 +323,7 @@ object Bench {
     final case class QResult(name: String, headline: Timing.Sample,
                              runs: Seq[Timing.Sample], steadySec: Option[Double],
                              above2x: Boolean, load0: Double, load1: Double,
-                             headlineRun: Int, hLoad0: Double, hLoad1: Double,
-                             cc: String)
+                             headlineRun: Int, hLoad0: Double, hLoad1: Double)
 
     // sorted order: per-query timings comparable run-to-run and
     // round-to-round (Map iteration order is hash-dependent)
@@ -208,18 +334,11 @@ object Bench {
     // are seconds-scale, so two samples of the same query separated by
     // a full pass (~minutes) cannot both land inside one burst — the
     // min defeats the noise mechanically instead of reactively. Pass 1
-    // carries the load bracket and contraction attribution; pass 2 is
-    // timing-only.
-    val pass1 = ordered.map { case (name, fn) =>
+    // carries the load bracket; pass 2 is timing-only.
+    val pass1 = ordered.map { case (_, fn) =>
       val load0 = Timing.loadAvg()
-      val cc0 = graft.ops.Dedup.lastContraction.get()
       val first = Timing.timeOnce(fn(spark, sfDir))
-      val load1 = Timing.loadAvg()
-      // if this query ran a connected-components contraction, attach the
-      // per-round breakdown (rounds, edge counts, per-round seconds)
-      val cc1 = graft.ops.Dedup.lastContraction.get()
-      val cc = if (cc1 != cc0) cc1 else ""
-      (name, first, load0, load1, cc)
+      (first, load0, Timing.loadAvg())
     }
     val pass2 = ordered.map { case (name, fn) =>
       val l0 = Timing.loadAvg()
@@ -228,7 +347,7 @@ object Bench {
     }.toMap
 
     val results = ordered.zip(pass1).map { case ((name, fn),
-        (_, first, load0, pass1Load1, cc)) =>
+        (first, load0, pass1Load1)) =>
       val st = steady.get(name)
       // re-time while the best run so far exceeds the trigger: 2× the
       // recorded steady (and the absolute floor), or the stall floor
@@ -258,7 +377,7 @@ object Bench {
       val headlineRun = runs.indexWhere(_._1 eq headline)
       val above2x = st.exists(s => over(s, headline.sec))
       QResult(name, headline, runs.map(_._1).toSeq, st, above2x,
-        load0, pass1Load1, headlineRun, hLoad0, hLoad1, cc)
+        load0, pass1Load1, headlineRun, hLoad0, hLoad1)
     }
 
     val failed = results.filter(!_.headline.ok)
@@ -277,8 +396,7 @@ object Bench {
         s""""load_hr":${r.hLoad0},"load_hr_after":${r.hLoad1},""" +
         s""""rows":${r.headline.rows},""" +
         s""""chk":${r.headline.checksum},"ok":${r.headline.ok},""" +
-        s""""stall_suspected":${r.runs.size > 2},"err":"${r.headline.err}"""" +
-        (if (r.cc.nonEmpty) s""","cc":"${r.cc}"""" else "") + "}"
+        s""""stall_suspected":${r.runs.size > 2},"err":"${r.headline.err}"}"""
     }.mkString("{", ",", "}")
     val total = results.map(_.headline.sec).sum
     // wall_total: EVERY timed second spent, re-runs included (the honest
@@ -299,7 +417,7 @@ object Bench {
     println(line)
     // belt-and-braces for the driver's parser: the same line as a file,
     // immune to any build-tool log-prefix mangling
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), line)
+    Files.writeString(Paths.get("bench_out.json"), line)
     // compact headline as the FINAL stdout line: the driver captures only
     // a bounded (~2 KB) stdout tail, so the ~35 KB detail line above was
     // never machine-parseable (five rounds of parsed:null). This line is
@@ -310,12 +428,6 @@ object Bench {
         s""""wall_total":$wallTotal,"gc_total":$gcTotal,""" +
         s""""stalls_retimed":$nStalls,"n_failed":${failed.size},""" +
         s""""n_above_2x_steady":$nAbove,"steady_total":$steadyTotal}""")
-    spark.stop()
-    if (failed.nonEmpty) {
-      failed.foreach { r =>
-        System.err.println(s"BENCH FAIL ${r.name}: ${r.headline.err}")
-      }
-      sys.exit(1)
-    }
+    failed.map(r => r.name -> r.headline.err)
   }
 }

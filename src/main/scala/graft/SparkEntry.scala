@@ -971,19 +971,22 @@ object SparkEntry {
     // envelopes read from actual parquet footers of stored snapshot
     // versions (arrival-cut vs genuinely compacted), with the pruning
     // decision for a selective 31-day window. DuckDB groups the same
-    // physical snapshot files by filename and recomputes each file's row
-    // count and day envelope FROM THE DATA — footer statistics must agree
-    // with physical reality file by file, and the pruning rule (envelope
-    // intersects the min+100..min+130 window) is shared
+    // physical snapshot files by filename (write UUID removed) and
+    // recomputes each file's row count and day envelope FROM THE DATA —
+    // footer statistics must agree with physical reality file by file,
+    // and the pruning rule (envelope intersects the min+100..min+130
+    // window) is shared
     QuerySpec("q_layout_file_stats", (s, d) => Layout.fileStatsAudit(s, d),
       Some(s"""WITH f1 AS (
-         | SELECT regexp_extract(filename, '[^/]*$$') AS file,
+         | SELECT regexp_replace(regexp_extract(filename, '[^/]*$$'),
+         |   '${Layout.writeUuidRegex}', '') AS file,
          |   count(*) AS n_rows, min(day) AS min_day, max(day) AS max_day
          | FROM read_parquet('${graft.ops.Layout.fstatsV1Token}/*.parquet',
          |                   filename=true)
          | GROUP BY 1),
          |f2 AS (
-         | SELECT regexp_extract(filename, '[^/]*$$') AS file,
+         | SELECT regexp_replace(regexp_extract(filename, '[^/]*$$'),
+         |   '${Layout.writeUuidRegex}', '') AS file,
          |   count(*) AS n_rows, min(day) AS min_day, max(day) AS max_day
          | FROM read_parquet('${graft.ops.Layout.fstatsV2Token}/*.parquet',
          |                   filename=true)

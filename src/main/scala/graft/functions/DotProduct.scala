@@ -551,7 +551,10 @@ object GraftFunctions {
   private[functions] val simhashBuilder =
     arity(simhashName, 1)(exprs => SimhashSig(exprs.head))
 
-  private def registrations = Seq(
+  /** Every native scalar/aggregate function as (identifier, info,
+    * builder): the one list both [[register]] and [[GraftExtensions]]
+    * install. */
+  private[graft] def registrations = Seq(
     (FunctionIdentifier(dotName),
       new ExpressionInfo(classOf[DotProduct].getName, dotName), dotBuilder),
     (FunctionIdentifier(polyHashName),
@@ -623,8 +626,9 @@ object GraftFunctions {
         .queryExecution.logical
     }
 
-  private def versionTvfInfo =
-    new ExpressionInfo("graft.store.Snapshots", versionTvfName)
+  private[functions] def versionTvf = (FunctionIdentifier(versionTvfName),
+    new ExpressionInfo("graft.store.Snapshots", versionTvfName),
+    versionTvfBuilder)
 
   /** Idempotent per-session registration; query builders call this before
     * using [[dot]] / [[polyHash]] / [[topK]]. */
@@ -636,9 +640,9 @@ object GraftFunctions {
       }
     }
     val tvfs = spark.sessionState.tableFunctionRegistry
-    val tvfIdent = FunctionIdentifier(versionTvfName)
+    val (tvfIdent, tvfInfo, tvfBuilder) = versionTvf
     if (!tvfs.functionExists(tvfIdent)) {
-      tvfs.registerFunction(tvfIdent, versionTvfInfo, versionTvfBuilder)
+      tvfs.registerFunction(tvfIdent, tvfInfo, tvfBuilder)
     }
   }
 
@@ -714,54 +718,7 @@ object GraftFunctions {
   * extension is a convenience, not a requirement. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier(GraftFunctions.dotName),
-      new ExpressionInfo(classOf[DotProduct].getName, GraftFunctions.dotName),
-      GraftFunctions.dotBuilder))
-    ext.injectFunction((FunctionIdentifier(GraftFunctions.polyHashName),
-      new ExpressionInfo(classOf[PolyHash].getName, GraftFunctions.polyHashName),
-      GraftFunctions.polyHashBuilder))
-    ext.injectFunction((FunctionIdentifier(GraftFunctions.topKName),
-      new ExpressionInfo(classOf[BoundedTopK].getName, GraftFunctions.topKName),
-      GraftFunctions.topKBuilder))
-    ext.injectFunction((FunctionIdentifier(GraftFunctions.signBitsName),
-      new ExpressionInfo(classOf[SignBits].getName, GraftFunctions.signBitsName),
-      GraftFunctions.signBitsBuilder))
-    ext.injectFunction((FunctionIdentifier(GraftFunctions.ngramName),
-      new ExpressionInfo(classOf[NGramHashes].getName, GraftFunctions.ngramName),
-      GraftFunctions.ngramBuilder))
-    ext.injectFunction((FunctionIdentifier(GraftFunctions.ngramWideName),
-      new ExpressionInfo(classOf[NGramHashesWide].getName,
-        GraftFunctions.ngramWideName),
-      GraftFunctions.ngramWideBuilder))
-    ext.injectFunction((FunctionIdentifier(GraftFunctions.minhashName),
-      new ExpressionInfo(classOf[MinHashSigs].getName, GraftFunctions.minhashName),
-      GraftFunctions.minhashBuilder))
-    ext.injectFunction((FunctionIdentifier(GraftFunctions.tokenHashesName),
-      new ExpressionInfo(classOf[TokenPolyHashes].getName,
-        GraftFunctions.tokenHashesName),
-      GraftFunctions.tokenHashesBuilder))
-    ext.injectFunction((FunctionIdentifier(GraftFunctions.cellArgMinName),
-      new ExpressionInfo(classOf[CellArgMin].getName,
-        GraftFunctions.cellArgMinName),
-      GraftFunctions.cellArgMinBuilder))
-    ext.injectFunction((FunctionIdentifier(GraftFunctions.bpeEncodeName),
-      new ExpressionInfo(classOf[BpeEncodeDoc].getName,
-        GraftFunctions.bpeEncodeName),
-      GraftFunctions.bpeEncodeBuilder))
-    ext.injectFunction((FunctionIdentifier(GraftFunctions.vecDivName),
-      new ExpressionInfo(classOf[VecDivScalar].getName,
-        GraftFunctions.vecDivName),
-      GraftFunctions.vecDivBuilder))
-    ext.injectFunction((FunctionIdentifier(GraftFunctions.cellResidualName),
-      new ExpressionInfo(classOf[CellResidual].getName,
-        GraftFunctions.cellResidualName),
-      GraftFunctions.cellResidualBuilder))
-    ext.injectFunction((FunctionIdentifier(GraftFunctions.simhashName),
-      new ExpressionInfo(classOf[SimhashSig].getName,
-        GraftFunctions.simhashName),
-      GraftFunctions.simhashBuilder))
-    ext.injectTableFunction((FunctionIdentifier(GraftFunctions.versionTvfName),
-      new ExpressionInfo("graft.store.Snapshots", GraftFunctions.versionTvfName),
-      GraftFunctions.versionTvfBuilder))
+    GraftFunctions.registrations.foreach(ext.injectFunction)
+    ext.injectTableFunction(GraftFunctions.versionTvf)
   }
 }

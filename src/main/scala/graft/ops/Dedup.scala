@@ -23,27 +23,6 @@ import graft.sources.Tables
   */
 object Dedup {
 
-  /** Diagnostics from the most recent [[connectedComponents]] run in this
-    * JVM: a monotonic generation id (so two runs that happen to format
-    * identically still compare unequal in [[graft.Bench]]'s before/after
-    * snapshot), round count, total seconds, and per-round (edge count,
-    * seconds). Bench snapshots it around each timed query so a
-    * contraction query's bench record carries its own per-round
-    * breakdown — the round-4 driver artifact had a 13 s
-    * `q_dedup_clusters` with no way to attribute the time to a round vs
-    * the host. */
-  val lastContraction = new java.util.concurrent.atomic.AtomicReference[String]("")
-  private val contractionGen = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Locale-independent 2dp seconds (the f"%.2f" interpolator follows the
-    * default locale — a decimal comma would corrupt the cc field's
-    * comma-separated grammar). */
-  private def sec2(nanos: Long): String = {
-    val centis = math.rint(nanos / 1e7).toLong
-    val frac = (centis % 100).toString
-    s"${centis / 100}.${if (frac.length < 2) "0" + frac else frac}"
-  }
-
   val P: Long = 1000000007L
   /** Affine MinHash permutation constants h_j(x) = (A(j)·x + B(j)) mod P. */
   val A: Seq[Long] = Seq(601L, 709L, 809L, 907L, 1009L, 1109L, 1201L, 1301L)
@@ -425,7 +404,6 @@ object Dedup {
     // against either path's cost) decides the route
     val nEdges = cur.count()
     if (nEdges <= maxDriverEdges) {
-      val tStart = System.nanoTime()
       val spark = edges.sparkSession
       val es = cur.collect()
       // union-find with path compression; roots re-mapped to the
@@ -459,8 +437,6 @@ object Dedup {
         out.add(org.apache.spark.sql.Row(n.longValue(), minOfRoot.get(find(n)).longValue()))
       }
       freeCheckpoint(cur)
-      lastContraction.set(s"g=${contractionGen.incrementAndGet()}," +
-        s"driver,edges=$nEdges,total=${sec2(System.nanoTime() - tStart)}")
       return spark.createDataFrame(out,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("doc_id",
@@ -493,11 +469,8 @@ object Dedup {
 
     var converged = false
     var i = 0
-    val tStart = System.nanoTime()
-    val roundLog = scala.collection.mutable.ListBuffer.empty[String]
     try {
       while (!converged && i < maxIters) {
-        val tRound = System.nanoTime()
         // localCheckpoint materializes the round (the one action per
         // round) and truncates lineage so round r+1 never recomputes
         // round r
@@ -506,10 +479,7 @@ object Dedup {
         // one exploded per-node degree aggregate (map-side combined, two
         // stages; the round-4 probe was a distinct + join + agg chain):
         // star forest ⟺ no child has two parents (child-degree ≤ 1) AND
-        // no node is both child and parent. Σ child-degree = edge count,
-        // recorded per round so a blown-up bench timing carries its own
-        // contraction diagnosis (round-4 verdict: 13 s driver run with no
-        // way to tell which round — or whether the host — ate the time).
+        // no node is both child and parent.
         val c = next.select(explode(array(
             struct(col("hi").as("node"), lit(1L).as("c"), lit(0L).as("p")),
             struct(col("lo").as("node"), lit(0L).as("c"), lit(1L).as("p"))))
@@ -517,21 +487,16 @@ object Dedup {
           .groupBy(col("d.node"))
           .agg(sum(col("d.c")).as("nc"), sum(col("d.p")).as("np"))
           .agg(count(when(col("nc") > 1 ||
-              (col("nc") > 0 && col("np") > 0), 1)).as("bad"),
-            coalesce(sum(col("nc")), lit(0L)).as("edges"))
+              (col("nc") > 0 && col("np") > 0), 1)).as("bad"))
           .head()
         converged = c.getLong(0) == 0L
         freeCheckpoint(cur)   // superseded: next is materialized
         cur = next
         i += 1
-        roundLog += s"r$i:e=${c.getLong(1)},s=${sec2(System.nanoTime() - tRound)}"
       }
       if (!converged) throw new IllegalStateException(
         s"dupClusters did not reach a star forest within $maxIters " +
           "rounds — pathological edge growth; raise maxIters")
-      lastContraction.set(s"g=${contractionGen.incrementAndGet()}," +
-        s"rounds=$i,total=${sec2(System.nanoTime() - tStart)}," +
-        roundLog.mkString(";"))
     } catch {
       case e: Throwable =>
         // no result will be returned: release the live frames too

@@ -601,8 +601,16 @@ object Layout {
       graft.store.Snapshots.versionPath(spark, base, vs.last))
   }
 
+  /** The write-job UUID inside Spark's part-file names
+    * (`part-<task>-<uuid>-c<n>.<ext>`). Every write draws a fresh one, so a
+    * name with it removed is the file's identity across runs of the same
+    * write; the DuckDB twin and LayoutSpec strip it with this pattern. */
+  val writeUuidRegex: String =
+    "-[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+
   /** REAL per-file zone-map stats off the parquet FOOTERS of one stored
-    * snapshot version: (file, footer row count, footer min/max of `day`)
+    * snapshot version: (file name without its write UUID, footer row
+    * count, footer min/max of `day`)
     * — the file-level stats index production pruning actually reads
     * (Iceberg manifests / Delta file stats), not a model. One footer
     * read per file on the planner — O(files) metadata, no data I/O; at
@@ -628,7 +636,7 @@ object Layout {
           val stats = blocks.flatMap(_.getColumns.asScala
             .find(_.getPath.toDotString == "day").map(_.getStatistics))
           if (rows == 0 || stats.isEmpty) None
-          else Some((s.getPath.getName, rows,
+          else Some((s.getPath.getName.replaceFirst(writeUuidRegex, ""), rows,
             stats.map(_.genericGetMin.asInstanceOf[java.lang.Long].toLong).min,
             stats.map(_.genericGetMax.asInstanceOf[java.lang.Long].toLong).max))
         } finally rd.close()

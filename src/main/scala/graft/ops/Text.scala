@@ -347,29 +347,25 @@ object Text {
     * are distinct, so the shared count is a plain `count(*)` after the
     * join. At 100 TB the corpus explode streams; nothing is ever
     * pairwise. */
-  def decontaminateNgram(spark0: SparkSession, dir: String,
+  def decontaminateNgram(spark: SparkSession, dir: String,
                          minShared: Int = 3): DataFrame = {
-    // Conf surgery on a CLONED session (the bloom-join precedent — never
-    // the caller's conf): InferFiltersFromGenerate adds `size(hs) > 0`
-    // for the explode below, and predicate pushdown then substitutes the
-    // FULL shingle expression into that Filter — re-evaluating the token
-    // transform per shingle index, O(tokens²) per document (measured
-    // 180 s at sf0.1 vs ~1 s with the rule off). The inferred filter is
-    // an optimization, not a correctness requirement: explode of an
-    // empty array emits nothing either way.
-    val spark = spark0.newSession()
-    spark.conf.set("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
     val docs = Tables.documents(spark, dir)
     // shingle via the dedup pack's materialized two-step projection —
     // NEVER an inline shingleHashes column, which re-evaluates the token
     // transform per shingle index (the same quadratic shape, at plan
     // construction instead of optimization)
     val sh = Dedup.shingleSets(docs)
+    // explode_OUTER on both sides: InferFiltersFromGenerate infers
+    // `size(hs) > 0` only for a non-outer Generate, and predicate
+    // pushdown would substitute the FULL shingle expression into that
+    // filter — re-evaluating the token transform per shingle index,
+    // O(tokens²) per document (measured 180 s at sf0.1 vs ~1 s without
+    // the filter). The null `h` an empty `hs` yields never passes the
+    // inner equi-join on `h`, so the result is the plain explode's.
     val benchSet = sh.where(pmod(col("doc_id"), lit(50)) === 0)
-      .select(explode(col("hs")).as("h")).distinct()
+      .select(explode_outer(col("hs")).as("h")).distinct()
     val flagged = sh.where(pmod(col("doc_id"), lit(50)) =!= 0)
-      .select(col("doc_id"), explode(col("hs")).as("h"))
+      .select(col("doc_id"), explode_outer(col("hs")).as("h"))
       .join(broadcast(benchSet), "h")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shared"))

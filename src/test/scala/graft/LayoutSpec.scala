@@ -366,10 +366,12 @@ class LayoutSpec extends SparkSpec {
     // intersects at most the straddling pair of files
     assert(v2.count(_.getLong(5) == 1L) <= 2, v2.mkString("\n"))
     // the footer statistics agree with the DATA of the physical files —
-    // an independent spark-side recompute, file by file
+    // an independent spark-side recompute, file by file (each file keyed
+    // by its name without the write UUID, as the audit reports it)
     val (d1, d2) = Layout.fileStatsVersionDirs(spark, sf)
     def recompute(path: String) = spark.read.parquet(path)
-      .groupBy(element_at(split(input_file_name(), "/"), -1).as("file"))
+      .groupBy(regexp_replace(element_at(split(input_file_name(), "/"), -1),
+        Layout.writeUuidRegex, "").as("file"))
       .agg(count(lit(1)).as("n"), min(col("day")).as("mn"),
         max(col("day")).as("mx"))
       .collect()

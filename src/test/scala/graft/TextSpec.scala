@@ -181,8 +181,8 @@ class TextSpec extends SparkSpec {
     // the shingle-combine arithmetic (marker: the 1009 multiplier) must
     // never appear inside a Filter — InferFiltersFromGenerate once pushed
     // an inlined `size(hs) > 0` below the projections and made the scan
-    // O(tokens²) per doc (180 s at sf0.1); the rule is excluded on the
-    // query's cloned session
+    // O(tokens²) per doc (180 s at sf0.1); the query's explodes are outer,
+    // which that rule does not match
     assert(!p.linesIterator.exists(l => l.contains("Filter") && l.contains("1009")), p)
     val flagged = df.collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap

@@ -151,8 +151,8 @@ def main(argv):
                  "local[32] JVM (a 30x corpus in one process at sf3) "
                  "and this host shows seconds-scale phantom-load "
                  "bursts, so treat a single-run SUPER flag as a "
-                 "hypothesis, not a verdict — fresh-JVM `BenchOne` "
-                 "isolation (3 repeats, min) is the arbitration, "
+                 "hypothesis, not a verdict — fresh-JVM `graft.Bench "
+                 "<query>` isolation (3 repeats, min) is the arbitration, "
                  "recorded in the isolation section below. Round 9's "
                  "arbitration found and fixed three real scale defects "
                  "(quadratic band keys, one-row-group audit corpora, "
