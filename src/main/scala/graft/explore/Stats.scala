@@ -281,7 +281,6 @@ object Stats {
     * O(parts·k) rows, never a full sort), and a broadcast single-row
     * stats frame for the shares. */
   def keySkewProfile(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val counts = Tables.lineitem(spark, dir)
       .groupBy(col("l_orderkey")).agg(count(lit(1)).as("cnt"))
     val stats = counts.agg(count(lit(1)).as("n_keys"), sum(col("cnt")).as("n_rows"),

@@ -480,7 +480,9 @@ case class CellResidual(first: Expression, second: Expression,
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
-/** Session registration for graft's native expressions. */
+/** Graft's native expressions and their column helpers. A helper resolves
+  * its function by name in the session's registry, so it needs a session
+  * with [[GraftExtensions]] installed (see [[graft.sources.GraftSession]]). */
 object GraftFunctions {
 
   val dotName = "graft_dot"
@@ -552,8 +554,7 @@ object GraftFunctions {
     arity(simhashName, 1)(exprs => SimhashSig(exprs.head))
 
   /** Every native scalar/aggregate function as (identifier, info,
-    * builder): the one list both [[register]] and [[GraftExtensions]]
-    * install. */
+    * builder): the list [[GraftExtensions]] installs. */
   private[graft] def registrations = Seq(
     (FunctionIdentifier(dotName),
       new ExpressionInfo(classOf[DotProduct].getName, dotName), dotBuilder),
@@ -630,92 +631,76 @@ object GraftFunctions {
     new ExpressionInfo("graft.store.Snapshots", versionTvfName),
     versionTvfBuilder)
 
-  /** Idempotent per-session registration; query builders call this before
-    * using [[dot]] / [[polyHash]] / [[topK]]. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registrations.foreach { case (ident, info, builder) =>
-      if (!registry.functionExists(ident)) {
-        registry.registerFunction(ident, info, builder)
-      }
-    }
-    val tvfs = spark.sessionState.tableFunctionRegistry
-    val (tvfIdent, tvfInfo, tvfBuilder) = versionTvf
-    if (!tvfs.functionExists(tvfIdent)) {
-      tvfs.registerFunction(tvfIdent, tvfInfo, tvfBuilder)
-    }
-  }
-
-  /** Codegen'd dot product column; requires [[register]] on the session. */
+  /** Codegen'd dot product column. */
   def dot(a: Column, b: Column): Column = call_function(dotName, a, b)
 
-  /** Codegen'd polynomial hash column; requires [[register]]. */
+  /** Codegen'd polynomial hash column. */
   def polyHash(c: Column): Column = call_function(polyHashName, c)
 
   /** Bounded-heap top-k aggregate ([[BoundedTopK]]): the k smallest values
-    * of `c` as a sorted ascending array; requires [[register]]. */
+    * of `c` as a sorted ascending array. */
   def topK(c: Column, k: Int): Column = call_function(topKName, c, lit(k))
 
   /** Packed hyperplane sign bits ([[SignBits]]); `planes` must be a
-    * literal array-of-arrays column; requires [[register]]. */
+    * literal array-of-arrays column. */
   def signBits(v: Column, planes: Column): Column =
     call_function(signBitsName, v, planes)
 
   /** Rolling n-gram hash combine over a token-hash array
-    * ([[NGramHashes]]); `n` must be a literal; requires [[register]]. */
+    * ([[NGramHashes]]); `n` must be a literal. */
   def ngramHashes(th: Column, n: Int): Column =
     call_function(ngramName, th, lit(n))
 
   /** Wide (~60-bit) two-fold n-gram key ([[NGramHashesWide]]) — the
-    * posting-index variant; requires [[register]]. */
+    * posting-index variant. */
   def ngramHashesWide(th: Column, n: Int): Column =
     call_function(ngramWideName, th, lit(n))
 
   /** One-pass MinHash signature bank ([[MinHashSigs]]) over literal
-    * multiplier/offset banks; requires [[register]]. */
+    * multiplier/offset banks. */
   def minhashSigs(hs: Column, a: Seq[Long], b: Seq[Long]): Column =
     call_function(minhashName, hs,
       org.apache.spark.sql.functions.typedLit(a),
       org.apache.spark.sql.functions.typedLit(b))
 
   /** Fused tokenize-and-poly-hash of a space-separated string
-    * ([[TokenPolyHashes]]); requires [[register]]. */
+    * ([[TokenPolyHashes]]). */
   def tokenHashes(text: Column): Column =
     call_function(tokenHashesName, text)
 
   /** IVF cell assignment ([[CellArgMin]]): argmin cell index of `v`
-    * against a literal centroid matrix; requires [[register]]. */
+    * against a literal centroid matrix. */
   def cellArgMin(v: Column, centroids: Column): Column =
     call_function(cellArgMinName, v, centroids)
 
   /** Greedy-BPE document encode ([[BpeEncodeDoc]]) against a literal
-    * merge table: `struct<n_bpe, bpe_text>`; requires [[register]]. */
+    * merge table: `struct<n_bpe, bpe_text>`. */
   def bpeEncode(toks: Column, a: Seq[String], b: Seq[String]): Column =
     call_function(bpeEncodeName, toks,
       org.apache.spark.sql.functions.typedLit(a),
       org.apache.spark.sql.functions.typedLit(b))
 
-  /** Fused element-wise array/scalar division ([[VecDivScalar]]);
-    * requires [[register]]. */
+  /** Fused element-wise array/scalar division ([[VecDivScalar]]). */
   def vecDiv(arr: Column, s: Column): Column =
     call_function(vecDivName, arr, s)
 
   /** Fused residual against a literal centroid matrix row
-    * ([[CellResidual]]); requires [[register]]. */
+    * ([[CellResidual]]). */
   def cellResidual(v: Column, cell: Column, centroids: Column): Column =
     call_function(cellResidualName, v, cell, centroids)
 
   /** Fused one-pass SimHash signature over raw text ([[SimhashSig]]);
-    * null for token-less documents; requires [[register]]. */
+    * null for token-less documents. */
   def simhash(text: Column): Column = call_function(simhashName, text)
 }
 
-/** `spark.sql.extensions` entry point: registers graft's native functions
-  * at session build time (`--conf spark.sql.extensions=
-  * graft.functions.GraftExtensions`) so SQL users get `graft_dot` /
-  * `graft_polyhash` / `graft_top_k` without touching the Scala API. Query
-  * builders also self-register via [[GraftFunctions.register]], so the
-  * extension is a convenience, not a requirement. */
+/** `spark.sql.extensions` entry point and the only way graft's native
+  * functions and the `graft_version` table function get installed: at
+  * session build time (`--conf spark.sql.extensions=
+  * graft.functions.GraftExtensions`, set by
+  * [[graft.sources.GraftSession.configure]]). Query builders and SQL users
+  * alike resolve `graft_dot` / `graft_polyhash` / `graft_top_k` / … from
+  * the registry it fills; sessions forked with `newSession()` inherit it. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.registrations.foreach(ext.injectFunction)

@@ -27,7 +27,6 @@ object Metrics {
   /** (vec_id, label, score_0..score_C) — the deterministic linear scorer's
     * per-class scores, shared by argmax prediction and log-loss. */
   private def scoredFrame(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Similarity.embDouble(spark, dir).select(
       col("vec_id") +: col("label").cast("long").as("label") +:
         (0 until numClasses).map { c =>

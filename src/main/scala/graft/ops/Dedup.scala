@@ -119,7 +119,6 @@ object Dedup {
     * re-evaluate the whole token-hash transform per sequence element,
     * turning an O(tokens) row into O(tokens²) (measured 5× on the bench). */
   private def tokenHashedOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         graft.functions.GraftFunctions.tokenHashes(col("text")).as("th"))
@@ -163,7 +162,6 @@ object Dedup {
     // materialized in its OWN projection before the per-column
     // element_at reads it — collapsed, the expression would re-run 8×
     // per row (the `tokenHashedOf` O(n²) trap).
-    graft.functions.GraftFunctions.register(sh.sparkSession)
     val withSigs = sh.select((col("doc_id") +: keep) :+
       graft.functions.GraftFunctions.minhashSigs(col("hs"), A, B)
         .as("graft_sigs"): _*)
@@ -1010,7 +1008,6 @@ object Dedup {
     * 30-way vote aggregate reads |doc|·|vocab-per-doc| rows instead of
     * token occurrences — both map-side combinable hash-aggs. */
   private def simhashSig(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // ONE fused codegen pass per document ([[graft.functions.SimhashSig]])
     // — replaces the explode → (doc, token) count → 61-field vote
     // aggregate pipeline, which shuffled every token of the corpus twice
@@ -1029,7 +1026,6 @@ object Dedup {
     * spec-pinned against (kept test-visible only — the shipped path is
     * the fused one-pass [[graft.functions.SimhashSig]]). */
   private[graft] def simhashSigDeclarative(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val tokenCnt = docs
       .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("tok"))
@@ -1358,7 +1354,6 @@ object Dedup {
     * bank instead of nPlanes codegen blocks — the 64-expression form's
     * first-plan compile was most of this query's fresh-JVM cost. */
   private def signWordsOf(emb: DataFrame, nPlanes: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val words = lshPlanes(nPlanes).grouped(64).map { bank =>
       graft.functions.GraftFunctions.signBits(col("embedding"),
         typedLit(bank.map(_.toSeq).toSeq))

@@ -178,7 +178,6 @@ object Features {
     * engine-specific twin. Explode + one partial-agg'd group-by: the
     * shuffle carries ≤ nDims rows per doc. */
   def hashedBagOfWords(spark: SparkSession, dir: String, nDims: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"), explode(Text.tokens(col("text"))).as("token"))
       .select(col("doc_id"),
@@ -256,7 +255,6 @@ object Features {
     * a user tunes the dimension against. Size-guarded dim join
     * ([[Hints.dimHint]]) + one grouped aggregate. */
   def crossFeatures(spark: SparkSession, dir: String, nDims: Int = 32): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.orders(spark, dir)
       .join(Hints.dimHint(Tables.customer(spark, dir)
         .select(col("c_custkey"), col("c_mktsegment"))),

@@ -360,7 +360,6 @@ object Layout {
     * straight into the query. */
   def sqlTimeTravelDiff(spark: SparkSession, dir: String): DataFrame = {
     val base = ensureTtHistory(spark, dir)
-    graft.functions.GraftFunctions.register(spark)
     val vs = graft.store.Snapshots.versions(spark, base)
     spark.sql(
       s"""SELECT coalesce(a.o_orderpriority, b.o_orderpriority)
@@ -454,7 +453,6 @@ object Layout {
     * feed join; Catalyst compiles both to the same operators. */
   def sqlMergeSummary(spark: SparkSession, dir: String): DataFrame = {
     val base = ensureMergeBase(spark, dir)
-    graft.functions.GraftFunctions.register(spark)
     val v1 = graft.store.Snapshots.versions(spark, base).head
     val (addM, chgM, remM) = Validate.snapshotDiffMods
     spark.sql(

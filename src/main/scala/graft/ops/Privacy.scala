@@ -83,7 +83,6 @@ object Privacy {
     * scanned once and never shuffled. */
   def anonymizedExport(spark: SparkSession, dir: String,
                        k: Int = kAnon): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // the fold modulus is the ONE shared constant (Dedup.P) — the DuckDB
     // twin interpolates it and PrivacySpec replays with it, so the three
     // sites can never silently diverge (round-12 ADVICE)
@@ -126,7 +125,6 @@ object Privacy {
     * pre-erasure snapshot stays auditable while every live reader sees
     * the purged table. */
   def erasureAudit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val cust = Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"),
         col("c_name"))
@@ -191,7 +189,6 @@ object Privacy {
     * Both published frames are scanned once per declared read, and the
     * report aggregate is bounded by |segments|. */
   def erasureApply(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val fp = graft.store.FeatureStore.versionFingerprint(
       spark, s"$dir/customer.parquet")
     val custBase = s"graft_er_cust_${Relational.dirSlug(dir)}_$fp"

@@ -131,7 +131,6 @@ object Relational {
     * tiebreak) reproduces the window's order exactly — oracle-checked
     * equal to the window form's SQL. */
   def topPartsPerBrandAgg(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val keyed = struct((-col("p_retailprice")).as("negprice"), col("p_partkey"),
       col("p_name"), col("p_retailprice"))
     Tables.part(spark, dir)
@@ -846,7 +845,6 @@ object Relational {
     * `q_topk_brand_agg`. */
   def sqlTopPartsPerBrand(spark: SparkSession, dir: String,
                           k: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.part(spark, dir).createOrReplaceTempView("graft_part")
     spark.sql(
       s"""SELECT p_brand, col.p_partkey AS p_partkey, col.p_name AS p_name,
@@ -959,7 +957,6 @@ object Relational {
     * it exists only as the oracle's replay. Same polyHash fold both
     * sides, so the sampled ids are bit-identical cross-engine. */
   def groupReservoirSample(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val keyed = struct(
       graft.functions.GraftFunctions.polyHash(col("event_id").cast("string")).as("rk"),
       col("event_id"), col("user_id"), round(col("value"), 2).as("value"))

@@ -48,7 +48,6 @@ object Similarity {
     * fold per pair (the dot) instead of three; at N×M pairs that's 3×
     * less interpreted-HOF work, the dominant cost of brute-force scoring. */
   def embWithNorm(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     embDouble(spark, dir)
       .withColumn("nrm",
         sqrt(GraftFunctions.dot(col("embedding"), col("embedding"))))
@@ -313,7 +312,6 @@ object Similarity {
     * aliases the adaptive v1 table of the same corpus. */
   private[graft] def ensureSignIndexAt(spark: SparkSession, dir: String,
                                        nPlanes: Int, fp: Long): String = {
-    GraftFunctions.register(spark)
     require(nPlanes % 64 == 0, s"sign-index width $nPlanes must pack whole words")
     val wordCols = indexPlanesN(nPlanes).grouped(64).toSeq.zipWithIndex.map {
       case (bank, w) =>
@@ -376,7 +374,6 @@ object Similarity {
     * (512–4096 cells, [[adaptiveNlist]]). */
   private def assignCells(emb: DataFrame,
                           centroids: Array[Array[Double]]): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     emb.withColumn("cell", GraftFunctions.cellArgMin(col("embedding"),
       typedLit(centroids.map(_.toSeq).toSeq)))
   }
@@ -397,7 +394,6 @@ object Similarity {
     * third pass). */
   private def ensureIvfCellsFp(spark: SparkSession, dir: String,
                                fp: Long): String = {
-    GraftFunctions.register(spark)
     val nlist = adaptiveNlist(embCount(spark, dir, fp))
     FeatureStore.ensurePartitionedTable(spark,
       assignCells(embWithNorm(spark, dir),
@@ -957,7 +953,6 @@ object Similarity {
     * publish was paying (round 15; the same hoist family as
     * CellArgMin's). */
   private def embNormalized(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     embWithNorm(spark, dir).where(col("nrm") > 0)
       .withColumn("nv", GraftFunctions.vecDiv(col("embedding"), col("nrm")))
   }
@@ -969,7 +964,6 @@ object Similarity {
     * every published layout. */
   private[ops] def ensurePqCodes(spark: SparkSession, dir: String,
                                  fp: Long): String = {
-    GraftFunctions.register(spark)
     val cbs = pqCodebooks(spark, dir, fp)
     FeatureStore.ensurePlainTable(spark,
       embNormalized(spark, dir).select(col("vec_id") +: pqCodeCols(cbs): _*),
@@ -1079,7 +1073,6 @@ object Similarity {
     * variant (one table per query, any probe count). */
   private[ops] def ensureIvfPqCodes(spark: SparkSession, dir: String,
                                     fp: Long): String = {
-    GraftFunctions.register(spark)
     val nlist = adaptiveNlist(embCount(spark, dir, fp))
     val cents = quantizerCentroids(spark, dir, nlist, fp = fp)
     val cbs = pqCodebooks(spark, dir, fp)
@@ -1246,7 +1239,6 @@ object Similarity {
     * [[ensureIvfPqCodes]] — only the quantization frame changes. */
   private[ops] def ensureIvfRpqCodes(spark: SparkSession, dir: String,
                                      fp: Long): String = {
-    GraftFunctions.register(spark)
     val nlist = adaptiveNlist(embCount(spark, dir, fp))
     val cents = quantizerCentroids(spark, dir, nlist, fp = fp)
     val cbs = residualPqCodebooks(spark, dir, fp)
@@ -1418,7 +1410,6 @@ object Similarity {
     * lake is scanned once and emits 16 doubles/row instead of 64).
     * Rounded 6dp; exploded to scalar rows for the harness. */
   def pcaProject(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val fp = embFingerprint(spark, dir)
     val (mean, comps) = pcaModel(spark, dir, fp)
     val meanLit = typedLit(mean.toSeq)
@@ -1540,7 +1531,6 @@ object Similarity {
   def labelCentroidStats(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
     import org.apache.spark.ml.stat.Summarizer
-    GraftFunctions.register(spark)
     val e = embDouble(spark, dir)
     val cent = e.groupBy(col("label"))
       .agg(count(lit(1)).as("n"),
@@ -1697,7 +1687,6 @@ object Similarity {
   private[graft] def semanticDedupLshOf(emb: DataFrame,
                                         minCos: Double, nPlanes: Int,
                                         bands: Int): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     semanticKeepList(emb,
       Dedup.bandedVerifiedPairs(
         emb.select(col("vec_id"),

@@ -133,7 +133,6 @@ object Text {
     * elsewhere — the composition is oracle-checked here. */
   def trainingCorpus(spark: SparkSession, dir: String,
                      minQuality: Double = 0.70): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val drop = Dedup.clusterDropList(spark, dir)
     val bucket =
       pmod(graft.functions.GraftFunctions.polyHash(col("text")), lit(10))
@@ -211,7 +210,6 @@ object Text {
     * lambda reads it (the inlined form is the O(n²) trap documented on
     * `Dedup.shingled`). */
   def bigramCounts(spark: SparkSession, dir: String, k: Int = 50): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // <2-token docs: sequence(1, size-1) would count DOWN into index 0
     // (ANSI array-index error); the size guard keeps them out entirely
     val th = Tables.documents(spark, dir)
@@ -259,7 +257,6 @@ object Text {
     * and a sort-merge join.) The only exchange in the plan is the final
     * presentation sort. */
   def repetitionSignals(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // longest run of equal values in a sorted array: fold carrying
     // (prev, current run, best run). -1 sentinel: hashes are mod-P ≥ 0.
     def longestRun(sorted: Column): Column =
@@ -383,7 +380,6 @@ object Text {
     * [[fingerprintFast]] — Spark's native codegen'd xxhash64.
     */
   def fingerprintPoly(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.polyHash(col("text")).as("fp"))
@@ -409,7 +405,6 @@ object Text {
     * oracle (xxhash64 would be the faster engine-specific variant, same
     * trade as [[fingerprintFast]]). */
   def corpusSplit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val bucket = pmod(graft.functions.GraftFunctions.polyHash(col("text")), lit(10))
     Tables.documents(spark, dir)
       .select(col("doc_id"),
@@ -489,7 +484,6 @@ object Text {
   /** Core of [[lmQualityScore]] over any documents-shaped frame. */
   private[graft] def lmQualityScoreOf(docs: DataFrame,
                                       k: Double = 0.5): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val th = docs
       .select(col("doc_id"),
         graft.functions.GraftFunctions.tokenHashes(col("text")).as("th"))
@@ -594,7 +588,6 @@ object Text {
   /** (doc_id, sh) rolling window hashes — the span primitive shared by
     * [[boilerplateSpans]] and [[boilerplateRatio]]. */
   private def spanHashes(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val w = boilWindowTokens
     val s = boilStride
     val th = docs
@@ -687,7 +680,6 @@ object Text {
                                          w: Int = substrWindowTokens,
                                          minDocs: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val th = docs
       .select(col("doc_id"),
         graft.functions.GraftFunctions.tokenHashes(col("text")).as("th"))
@@ -748,7 +740,6 @@ object Text {
                                               w: Int = substrWindowTokens)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val base = docs.select(col("doc_id"), col("text"),
       tokens(col("text")).as("toks"))
     val th = base.where(size(col("toks")) >= w)
@@ -848,7 +839,6 @@ object Text {
                                    target: String = dsirTargetSource,
                                    frac: Double = dsirSelectFrac): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val th = docs
       .select(col("doc_id"), col("source"),
         graft.functions.GraftFunctions.tokenHashes(col("text")).as("th"))
@@ -914,7 +904,6 @@ object Text {
     * exactly once. */
   def temperatureMix(spark: SparkSession, dir: String,
                      alpha: Double = mixAlpha): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val bySource = docs.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
     val maxW = bySource.agg(
@@ -1185,7 +1174,6 @@ object Text {
     * shingles|·dfCap rows. */
   private[graft] def rarePostings(spark: SparkSession, dir: String,
                                   dfCap: Int = sparseSimDfCap): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val n = sparseSimShingleWords
     // Shingles are HASHED to 8-byte keys before anything shuffles or
     // materializes — the same rolling token-hash combine the dedup
@@ -1517,7 +1505,6 @@ object Text {
     * vocabulary table. At 100 TB it is embarrassingly parallel over
     * scan partitions. */
   def bpeEncodedDocs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val m = bpeMerges(spark, dir)
     Tables.documents(spark, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
@@ -1549,9 +1536,7 @@ object Text {
     * tokenizer export), NOT from a refit. The collect is bounded by the
     * merge-table size ([[bpeMaxMerges]] rows — an artifact, not data),
     * and the encode stays the single codegen kernel projection. */
-  def bpeEncodeWith(spark: SparkSession, docs: DataFrame,
-                    merges: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
+  def bpeEncodeWith(docs: DataFrame, merges: DataFrame): DataFrame = {
     val m = merges.select(col("rank"), col("a"), col("b"))
       .orderBy(col("rank")).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
@@ -1573,7 +1558,7 @@ object Text {
     val fp = graft.store.FeatureStore.versionFingerprint(
       spark, s"$dir/documents.parquet")
     graft.store.FeatureStore.ensurePlainTable(spark,
-      bpeEncodeWith(spark,
+      bpeEncodeWith(
         Tables.documents(spark, dir).select(col("doc_id"), col("text")),
         spark.table(ensureBpeMergesTable(spark, dir))),
       s"graft_bpe_encoded_${Relational.dirSlug(dir)}", fp)

@@ -159,16 +159,20 @@ object Tables {
 }
 
 /** Session-build configuration graft's readers rely on — applied once at
-  * build time instead of mutated from inside readers. Also installs
-  * [[graft.functions.GraftExtensions]] so `graft_dot` / `graft_polyhash` /
-  * `graft_top_k` are available to SQL users from session start (query
-  * builders still self-register idempotently, so sessions built without
-  * this helper keep working).
+  * build time instead of mutated from inside readers. It also installs
+  * [[graft.functions.GraftExtensions]], the only source of graft's native
+  * functions (`graft_dot`, `graft_polyhash`, `graft_top_k`, …) and of the
+  * `graft_version` table function, for query builders and SQL users alike.
+  *
+  * The session contract: every session graft runs on is built by
+  * [[configure]], or sets `spark.sql.extensions` to a list including
+  * `graft.functions.GraftExtensions` plus
+  * `spark.sql.legacy.parquet.nanosAsLong=true` itself. Sessions forked
+  * with `newSession()` inherit both.
   *
   * NOTE: this helper OWNS the `spark.sql.extensions` key (builder config
   * is last-write-wins). Deployments that stack other extensions should
-  * set the key themselves to a comma-separated list including
-  * `graft.functions.GraftExtensions` instead of calling this. */
+  * set the key themselves, as above, instead of calling this. */
 object GraftSession {
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.legacy.parquet.nanosAsLong", "true")

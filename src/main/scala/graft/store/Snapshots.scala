@@ -725,21 +725,21 @@ object Snapshots {
   private def isBaseVersion(spark: SparkSession, base: String, v: Long): Boolean =
     deltaKeys(spark, base, v).isEmpty && dvKeys(spark, base, v).isEmpty
 
-  /** The live physical row set at version `v` with its positional
-    * identity: every column of the stored rows plus `__f` (absolute file
-    * path) and `__p` (row position within the file) — the anchor base's
-    * files unioned with every stacked DV delta's upsert files. The
-    * deletion vectors are NOT applied here; this is the scan side both
-    * [[readVersionMerged]] (minus-DV) and [[publishDeltaDV]] (position
-    * lookup) share. */
+  /** The live physical row set of base version `anchorV` under the DV
+    * deltas `dvs` with its positional identity: every column of the
+    * stored rows plus `__f` (absolute file path) and `__p` (row position
+    * within the file) — the anchor base's files unioned with every
+    * stacked DV delta's upsert files. The deletion vectors are NOT
+    * applied here; this is the scan side both [[readVersionMerged]]
+    * (minus-DV) and [[publishDeltaDV]] (position lookup) share. */
   private def liveScanWithPos(spark: SparkSession, base: String,
-                              dirs: Seq[Path]): DataFrame = {
+                              anchorV: Long, dvs: Seq[Long]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val anchor = spark.read.parquet(dirs.head.toString)
+    val anchor = readVersion(spark, base, anchorV)
     // delta dirs get the anchor's schema explicitly: a delete-only batch
     // stores ZERO upsert rows, and a fileless parquet dir can't infer
-    (anchor +: dirs.tail.map(d =>
-      spark.read.schema(anchor.schema).parquet(d.toString)))
+    (anchor +: dvs.map(d =>
+      spark.read.schema(anchor.schema).parquet(versionDir(spark, base, d).toString)))
       .map(_.select(col("*"), col("_metadata.file_path").as("__f"),
         col("_metadata.row_index").as("__p")))
       .reduce(_.unionByName(_))
@@ -799,10 +799,8 @@ object Snapshots {
       // positions to kill: every live physical row whose key the batch
       // touches (upsert = superseded, delete = removed) — key columns +
       // metadata only, never the full row width
-      val liveDirs = versionDir(spark, base, anchor) +:
-        stack.map(versionDir(spark, base, _))
       val touched = changes.select(keys.map(col): _*).distinct()
-      val dv = liveScanWithPos(spark, base, liveDirs)
+      val dv = liveScanWithPos(spark, base, anchor, stack)
         .select((keys.map(col) :+ col("__f") :+ col("__p")): _*)
         .join(touched, keys, "left_semi")
         .select(col("__f").as("file"), col("__p").as("pos"))
@@ -869,12 +867,11 @@ object Snapshots {
     val stack = versions(spark, base).filter(d => d > anchor && d <= v)
     if (stack.exists(dvKeys(spark, base, _).isDefined)) {
       val (_, dvs) = dvStack(spark, base, v) // validates the stack is all-DV
-      val dirs = versionDir(spark, base, anchor) +: dvs.map(versionDir(spark, base, _))
       val dv = dvs.map(d => spark.read.schema(dvSchema)
           .parquet(dvDir(spark, base, d).toString))
         .reduce(_.unionByName(_))
         .select(col("file").as("__f"), col("pos").as("__p"))
-      liveScanWithPos(spark, base, dirs)
+      liveScanWithPos(spark, base, anchor, dvs)
         .join(dv, Seq("__f", "__p"), "left_anti")
         .drop("__f", "__p")
     } else {
@@ -991,13 +988,22 @@ object Snapshots {
     dir.toUri.getPath
   }
 
-  /** Time travel: the frozen content of committed version `v`. */
+  /** Time travel: the frozen content of committed version `v`, read
+    * under its recorded schema ([[versionSchema]], column ids removed so
+    * the frame's schema is the published frame's). That spares the
+    * parquet schema-inference job a bare read runs while the query is
+    * built; only versions published before schema recording infer. */
   def readVersion(spark: SparkSession, base: String, v: Long): DataFrame = {
+    import org.apache.spark.sql.types.{MetadataBuilder, StructType}
     val (hfs, _) = fs(spark)
     val dir = versionDir(spark, base, v)
     require(hfs.exists(new Path(dir, commitMarker)),
       s"snapshot $base v$v does not exist or is not committed")
-    spark.read.parquet(dir.toString)
+    val reader = versionSchema(spark, base, v).fold(spark.read) { st =>
+      spark.read.schema(StructType(st.fields.map(f => f.copy(metadata =
+        new MetadataBuilder().withMetadata(f.metadata).remove(colIdKey).build()))))
+    }
+    reader.parquet(dir.toString)
   }
 
   /** Project `df` onto `target` BY NAME: missing columns as typed NULLs,

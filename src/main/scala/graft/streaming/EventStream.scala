@@ -170,9 +170,7 @@ object EventStream {
     * what the streaming state store round-trips every micro-batch, so
     * per-(type) state stays capped at k entries no matter how long the
     * stream runs. Spec asserts parity with the batch twin. */
-  def topEventsPerType(spark: SparkSession, stream: DataFrame,
-                       k: Int = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
+  def topEventsPerType(stream: DataFrame, k: Int = 5): DataFrame = {
     stream
       .groupBy(col("event_type"))
       .agg(graft.functions.GraftFunctions.topK(

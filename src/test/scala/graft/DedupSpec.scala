@@ -439,7 +439,6 @@ class DedupSpec extends SparkSpec {
   test("embedding LSH in its real regime (cos >= 0.9): recall >= 0.9 on planted near-dups") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, sqrt => ssqrt}
-    graft.functions.GraftFunctions.register(spark)
     // 40 planted near-dup pairs (noise ⇒ cos ≈ 0.99) + 200 random
     // background vectors, all 64-dim — the regime the operator exists
     // for, which this synthetic corpus can't provide
@@ -484,7 +483,6 @@ class DedupSpec extends SparkSpec {
                                Set[(Long, Long)]) = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, sqrt => ssqrt}
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(13)
     def unit(): Array[Double] = {
       val v = Array.fill(64)(rnd.nextGaussian())
@@ -697,7 +695,6 @@ class DedupSpec extends SparkSpec {
 
   test("simhash: fused one-pass expression ≡ declarative vote aggregate") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.sources.Tables.documents(spark, sf)
     // corpus parity: every (doc_id, simhash) row identical, including the
     // absent-row contract for token-less documents

@@ -3,9 +3,8 @@ package graft
 /** The `spark.sql.extensions` deployment path: the shared test session is
   * built through `GraftSession.configure`, which installs
   * `GraftExtensions`. Assertions run on a FRESH `newSession()`: its
-  * function registry is rebuilt from the extension injections only, so a
-  * sibling suite's runtime `GraftFunctions.register` call cannot mask a
-  * broken extension wiring. */
+  * function registry is rebuilt from the extension injections only, so
+  * the functions found there come from the extension alone. */
 class ExtensionsSpec extends SparkSpec {
 
   private lazy val fresh = spark.newSession()
@@ -47,8 +46,7 @@ class ExtensionsSpec extends SparkSpec {
     Snapshots.retain(spark, base, keep = 0)
     Snapshots.publish(spark, spark.range(3).toDF("id"), base)
     Snapshots.publish(spark, spark.range(5).toDF("id"), base)
-    // the TVF comes from the extension injection alone on this session —
-    // no runtime register() call has touched `fresh`
+    // the TVF on `fresh` comes from the extension injection alone
     assert(fresh.sql(s"SELECT count(*) AS n FROM graft_version('$base', 1)")
       .head().getLong(0) === 3L)
     assert(fresh.sql(s"SELECT count(*) AS n FROM graft_version('$base', 2)")

@@ -189,14 +189,6 @@ class GraphSpec extends SparkSpec {
     // the one collect of the nation-pair edge list (plus the nation ids
     // for pagerank and communities) runs while the frame is built, and
     // nothing else does
-    val sc = spark.sparkContext
-    def constructionJobs(build: => DataFrame): Int = {
-      val group = s"graph-construction-${java.util.UUID.randomUUID()}"
-      sc.setJobGroup(group, "graph builder construction")
-      try build finally sc.clearJobGroup()
-      org.apache.spark.graft.ListenerBus.drain(sc)
-      sc.statusTracker.getJobIdsForGroup(group).length
-    }
     val jobs = Seq(
       "pagerank" -> constructionJobs(Graph.nationTradePageRank(spark, sf)),
       "shortest" -> constructionJobs(Graph.boundedShortestPaths(spark, sf)),

@@ -770,6 +770,55 @@ class LayoutSpec extends SparkSpec {
     Snapshots.retain(spark, base, keep = 0)
   }
 
+  test("snapshot reads run no job at construction: the recorded schema replaces inference") {
+    import graft.store.Snapshots
+    import spark.implicits._
+    val base = "graft_spec_read_nojob"
+    Snapshots.retain(spark, base, keep = 0)
+    Snapshots.publish(spark, Seq((1L, "a", 1.5), (2L, "b", 2.5)).toDF("k", "s", "x"), base)
+    Snapshots.publishDeltaDV(spark,
+      Seq((2L, "b2", 3.5, "upsert")).toDF("k", "s", "x", "_op"), base, Seq("k"))
+    assert(constructionJobs(Snapshots.readVersion(spark, base, 1L)) === 0)
+    // the DV reconcile reads its anchor through the same path
+    assert(constructionJobs(Snapshots.readVersionMerged(spark, base, 2L)) === 0)
+    assert(Snapshots.readVersionMerged(spark, base, 2L).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
+      === Set((1L, "a", 1.5), (2L, "b2", 3.5)))
+    Snapshots.retain(spark, base, keep = 0)
+  }
+
+  test("recorded snapshot schema == parquet inference for base, key-delta and DV-delta versions") {
+    import graft.store.Snapshots
+    import spark.implicits._
+    import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
+    def loose(t: DataType): DataType = t match {
+      case ArrayType(e, _) => ArrayType(loose(e), containsNull = true)
+      case other => other
+    }
+    val base = "graft_spec_schema_infer"
+    val keyed = "graft_spec_schema_infer_keyed"
+    Seq(base, keyed).foreach(Snapshots.retain(spark, _, keep = 0))
+    val rows = Seq((1L, "a", 1.5, Seq(1, 2), java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
+      (2L, "b", 2.5, Seq(3), java.sql.Timestamp.valueOf("2024-01-02 00:00:00")))
+    val cols = Seq("k", "s", "x", "arr", "ts")
+    val ops = Seq((2L, "b2", 3.5, Seq(4), java.sql.Timestamp.valueOf("2024-01-03 00:00:00"),
+      "upsert")).toDF(cols :+ "_op": _*)
+    val vBase = Snapshots.publish(spark, rows.toDF(cols: _*), base)
+    val vDv = Snapshots.publishDeltaDV(spark, ops, base, Seq("k"))
+    Snapshots.publish(spark, rows.toDF(cols: _*), keyed)
+    val vKey = Snapshots.publishDelta(spark, ops, keyed, Seq("k"))
+    Seq((base, vBase), (base, vDv), (keyed, vKey)).foreach { case (b, v) =>
+      val inferred = spark.read.parquet(Snapshots.versionPath(spark, b, v)).schema
+      val recorded = Snapshots.versionSchema(spark, b, v).get
+      // (name, type) per field; inference reads every level nullable
+      def fields(st: StructType) = st.fields.map(f => (f.name, loose(f.dataType))).toSeq
+      assert(fields(recorded) === fields(inferred), s"$b v$v")
+      // and the read's frame carries exactly the inferred schema
+      assert(Snapshots.readVersion(spark, b, v).schema === inferred, s"$b v$v")
+    }
+    Seq(base, keyed).foreach(Snapshots.retain(spark, _, keep = 0))
+  }
+
   test("exactly-once CDC DV sink: one delta per micro-batch, redelivery no-op, state == batch apply") {
     import graft.store.Snapshots
     import spark.implicits._

@@ -42,7 +42,6 @@ object GraftProps extends Properties("graft") {
   property("topK.equalsSortTake") = Prop.forAll(
     Gen.nonEmptyListOf(Gen.choose(-1000, 1000)), Gen.choose(1, 12)) { (xs, k) =>
     Prop.propBoolean(xs.nonEmpty) ==> {
-      graft.functions.GraftFunctions.register(spark)
       val got = xs.map(x => (1, x)).toDF("g", "x")
         .repartition(3) // force multiple partial buffers + a merge
         .groupBy(col("g"))
@@ -78,7 +77,6 @@ object GraftProps extends Properties("graft") {
   // native PolyHash == declarative char fold for arbitrary ASCII strings
   property("polyHash.nativeEqualsFold") = Prop.forAll(
     Gen.nonEmptyListOf(Gen.choose(32.toChar, 126.toChar)).map(_.mkString)) { s =>
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(s).toDF("text").select(
       aggregate(split(col("text"), ""), lit(0L),
         (acc, ch) => (acc * 31 + ascii(ch)) % 1000000007L).as("fold"),
@@ -92,7 +90,6 @@ object GraftProps extends Properties("graft") {
     Gen.zip(Gen.listOfN(8, Gen.choose(-10.0, 10.0)),
       Gen.listOfN(8, Gen.choose(-10.0, 10.0)))) { case (a, b) =>
     Prop.propBoolean(a.exists(_ != 0.0) && b.exists(_ != 0.0)) ==> {
-      graft.functions.GraftFunctions.register(spark)
       val df = Seq((a, b)).toDF("a", "b")
       val r = df.select(
         graft.functions.GraftFunctions.dot(col("a"), col("b")).as("ab"),

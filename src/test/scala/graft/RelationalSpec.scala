@@ -368,7 +368,6 @@ class RelationalSpec extends SparkSpec {
     val perType = out.groupBy("event_type").count()
     assert(perType.filter(col("count") =!= k).count() === 0)
     // semantic reference: window rank over (polyHash, event_id)
-    graft.functions.GraftFunctions.register(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type"))
       .orderBy(graft.functions.GraftFunctions

@@ -15,7 +15,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("native DotProduct is bit-identical to the declarative fold") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Similarity.embDouble(spark, sf)
     val both = emb.select(
       Similarity.dot(col("embedding"), col("embedding")).as("fold"),
@@ -177,7 +176,6 @@ class SimilaritySpec extends SparkSpec {
     // the expression-array form assignCells used through round 9:
     // argmin over cells of lit(|c|^2) - 2*dot(v, c), ties -> lowest cell
     // via array_position(distArr, array_min(distArr)) - 1
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(3)
     val cents = Array.fill(64)(Array.fill(64)(rnd.nextGaussian()))
     val emb = Similarity.embWithNorm(spark, sf)
@@ -199,7 +197,6 @@ class SimilaritySpec extends SparkSpec {
     // the interpreted forms they replace on the corpus-sized code-table
     // publishes: transform(v, x => x / s) and zip_with(v, cn, _ - _)
     // behind a broadcast (cell -> cn) join (round 15)
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val cents = Array.fill(16)(Array.fill(64)(rnd.nextGaussian()))
     val cnLit = typedLit(cents.map(_.toSeq).toSeq)
@@ -491,7 +488,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("semdedup LSH scale path: planted near-dups co-cluster with recall >= 0.9") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // same planted geometry as the embed-LSH pair spec (DedupSpec): 40
     // noise-perturbed duplicates (cos ~ 0.99) over 200 random unit
     // vectors — the near-dup regime SemDeDup exists for

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
@@ -20,4 +20,15 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs run while `build` constructs its frame (job group +
+    * listener-bus drain, so every job is counted). */
+  def constructionJobs(build: => DataFrame): Int = {
+    val sc = spark.sparkContext
+    val group = s"construction-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "frame construction")
+    try build finally sc.clearJobGroup()
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
 }

@@ -215,14 +215,14 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming top-k == batch top-k on the corpus (many groups, real ties)") {
     val stream = EventStream.readEvents(spark, sf)
-    val q = EventStream.topEventsPerType(spark, stream, k = 5)
+    val q = EventStream.topEventsPerType(stream, k = 5)
       .writeStream.format("memory").queryName("stream_topk_corpus")
       .outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()
     val got = spark.table("stream_topk_corpus")
       .orderBy("event_type", "rnk").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    val want = EventStream.topEventsPerType(spark,
+    val want = EventStream.topEventsPerType(
         graft.sources.Tables.events(spark, sf), k = 5)
       .orderBy("event_type", "rnk").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
@@ -253,7 +253,7 @@ class StreamingSpec extends SparkSpec {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
       .parquet(s"$dir/b*")
-    val q = EventStream.topEventsPerType(spark, stream, k = 3)
+    val q = EventStream.topEventsPerType(stream, k = 3)
       .writeStream.format("memory").queryName("stream_topk")
       .outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()

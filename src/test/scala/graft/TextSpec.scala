@@ -87,7 +87,6 @@ class TextSpec extends SparkSpec {
   }
 
   test("native PolyHash is bit-identical to the declarative char fold") {
-    graft.functions.GraftFunctions.register(spark)
     val declarative = aggregate(split(col("text"), ""), lit(0L),
       (acc, ch) => (acc * 31 + ascii(ch)) % 1000000007L)
     val both = Tables.documents(spark, sf).select(
@@ -773,7 +772,6 @@ class TextSpec extends SparkSpec {
     // round-12 ADVICE: unequal-length, null, or null-entry merge arrays
     // must fail at analysis, not throw AIOOBE/NPE at plan/run time or
     // silently drop merges
-    graft.functions.GraftFunctions.register(spark)
     spark.range(1).createOrReplaceTempView("bpe_misuse_one")
     def fails(call: String, frag: String): Unit = {
       val e = intercept[org.apache.spark.sql.AnalysisException] {
@@ -824,7 +822,7 @@ class TextSpec extends SparkSpec {
     // apply path must NOT refit, just replay corpus A's merges
     val docsB = Seq((1L, "zqwx zqwx"), (2L, "the of and"), (3L, ""))
       .toDF("doc_id", "text")
-    val out = Text.bpeEncodeWith(spark, docsB, merges).collect()
+    val out = Text.bpeEncodeWith(docsB, merges).collect()
       .map(r => r.getLong(0) -> (r.getLong(2), r.getString(3))).toMap
     val kernel = new graft.functions.BpeTable(m.map(_._1), m.map(_._2))
     Seq(1L -> "zqwx zqwx", 2L -> "the of and", 3L -> "").foreach {

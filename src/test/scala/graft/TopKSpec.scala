@@ -9,7 +9,6 @@ import graft.ops.Similarity
 class TopKSpec extends SparkSpec {
 
   test("graft_top_k is result-identical to slice(array_sort(collect_list))") {
-    GraftFunctions.register(spark)
     val emb = Similarity.embWithNorm(spark, sf)
     val queries = emb.where(col("vec_id") < 7)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qn"))
@@ -30,7 +29,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_top_k survives ObjectHashAggregate's sort-based fallback (many groups)") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // > spark.sql.objectHashAggregate.sortBased.fallbackThreshold (128)
     // distinct groups per partition forces the fallback, which round-trips
@@ -46,7 +44,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_top_k with k larger than the group returns the whole group sorted") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1, 5.0), (1, 1.0), (1, 3.0), (2, 2.0)).toDF("g", "x")
     val got = df.groupBy($"g").agg(GraftFunctions.topK(struct($"x"), 10).as("t"))
@@ -57,7 +54,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_top_k skips nulls like collect_list") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq[(Int, java.lang.Double)]((1, 4.0), (1, null), (1, 2.0))
       .toDF("g", "x")
@@ -66,7 +62,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_dot rejects array<float> and wrong types at analysis time") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val floats = graft.sources.Tables.embeddings(spark, sf)
     // embeddings' native type is array<float>: silently-wrong reads before,
@@ -83,7 +78,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_dot/graft_top_k reject wrong arity with a clear error") {
-    GraftFunctions.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT graft_dot(array(1.0d))").collect()
     }
@@ -91,7 +85,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_sign_bits is bit-identical to the per-plane dot-sign fold") {
-    GraftFunctions.register(spark)
     import org.apache.spark.sql.functions.{typedLit, when}
     val rnd = new scala.util.Random(99)
     val dim = 16
@@ -111,7 +104,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_ngram_hashes is bit-identical to the sequence/element_at combine fold") {
-    GraftFunctions.register(spark)
     import graft.ops.{Dedup, Text}
     val th = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), transform(Text.tokens(col("text")),
@@ -140,7 +132,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_ngram_hashes_wide is bit-identical to the two-fold declarative combine") {
-    GraftFunctions.register(spark)
     import graft.ops.{Dedup, Text}
     import org.apache.spark.sql.Column
     val n = Text.sparseSimShingleWords
@@ -173,7 +164,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_minhash_sigs is bit-identical to the per-j array_min transform bank") {
-    GraftFunctions.register(spark)
     import graft.ops.Dedup
     val hs = Dedup.shingleSets(graft.sources.Tables.documents(spark, sf))
     val native = GraftFunctions.minhashSigs(col("hs"), Dedup.A, Dedup.B)
@@ -196,7 +186,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_token_hashes is bit-identical to the split/filter/poly-hash pipeline") {
-    GraftFunctions.register(spark)
     import graft.ops.{Dedup, Text}
     val both = graft.sources.Tables.documents(spark, sf).select(
       GraftFunctions.tokenHashes(col("text")).as("native"),
@@ -216,7 +205,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_ngram_hashes/graft_minhash_sigs reject bad shapes at analysis time") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1, Seq(1L, 2L, 3L))).toDF("n", "th")
     // non-literal n
@@ -233,7 +221,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_sign_bits rejects >64 planes and non-literal matrices at analysis time") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1L, Seq(1.0, 2.0))).toDF("id", "v")
     val tooMany = org.apache.spark.sql.functions.typedLit(

@@ -7,11 +7,15 @@ Usage:
   python3 tools/bench_diff.py OLD.json NEW.json [--top N]
 
 Prints header totals, per-query coverage (added/dropped), and the top-N
-per-query deltas by absolute seconds (with ratios), worst first.
+per-query deltas by absolute seconds (with ratios), worst first. Then it
+compares each shared query's result (`detail.<q>.rows` and
+`detail.<q>.chk`), lists every mismatch, prints `N/M checksums
+identical`, and exits 1 if any result differs.
 Driver-side tooling only — the shipped library is pure Scala/Spark.
 """
 import argparse
 import json
+import sys
 
 
 def load(path):
@@ -64,7 +68,19 @@ def main():
               f"({nq[q] / oq[q] if oq[q] else float('inf'):5.2f}x)  {q}")
     net = sum(d for d, _ in shared)
     print(f"\nnet shared delta: {net:+.2f}s")
+    od, nd = old.get("detail", {}), new.get("detail", {})
+    names = sorted(set(od) & set(nd))
+    differ = [q for q in names
+              if (od[q].get("rows"), od[q].get("chk"))
+              != (nd[q].get("rows"), nd[q].get("chk"))]
+    if differ:
+        print("\nresult mismatches (rows, chk):")
+        for q in differ:
+            print(f"  {q}: ({od[q].get('rows')}, {od[q].get('chk')}) -> "
+                  f"({nd[q].get('rows')}, {nd[q].get('chk')})")
+    print(f"\n{len(names) - len(differ)}/{len(names)} checksums identical")
+    return 1 if differ else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
