@@ -22,6 +22,17 @@ object Mining {
   val assocMinSupport = 0.01
   val assocTopK = 100
 
+  /** Ordered 2-combinations of a sorted array column: element i paired
+    * (as `pair(x, y)`) with every later element, in array order — the
+    * n·(n−1)/2 pairs of an n-element array, each once, flattened into
+    * one array for a single `explode`. Shared by association-rule pair
+    * expansion and the ppjoin / sparse-similarity candidate generators. */
+  private[ops] def orderedPairs(arr: Column)(
+      pair: (Column, Column) => Column): Column =
+    flatten(transform(arr, (x, i) =>
+      transform(slice(arr, i + lit(2), greatest(size(arr) - i - 1, lit(0))),
+        y => pair(x, y))))
+
   /** Pairwise association rules over order baskets: items are part
     * brands, baskets are orders. Emits each unordered frequent pair once
     * with its exact support counts and both conditional confidences plus
@@ -89,13 +100,9 @@ object Mining {
     // sorted order of `its`
     val freqArr = freq.agg(sort_array(collect_list(col("item"))).as("fi"))
 
-    // per-basket ordered 2-combinations of the (pruned) item set: for a
-    // sorted array its, pair its[i] with every later element — struct
-    // rows (a, b) with a < b, so each unordered pair counts exactly once
-    val combos: Column = flatten(transform(col("itsp"), (x, i) =>
-      transform(slice(col("itsp"), i + lit(2),
-        greatest(size(col("itsp")) - i - 1, lit(0))),
-        y => struct(x.as("a"), y.as("b")))))
+    // per-basket ordered 2-combinations of the (pruned, sorted) item
+    // set: rows (a, b) with a < b, so each unordered pair counts once
+    val combos = orderedPairs(col("itsp"))((x, y) => struct(x.as("a"), y.as("b")))
     val pairs = basketSets
       .crossJoin(broadcast(freqArr))
       .select(array_intersect(col("its"), col("fi")).as("itsp"))

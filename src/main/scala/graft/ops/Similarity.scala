@@ -1,7 +1,5 @@
 package graft.ops
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -170,12 +168,14 @@ object Similarity {
   private def signature(v: Column): Column =
     GraftFunctions.signBits(v, typedLit(indexPlanes.map(_.toSeq).toSeq))
 
+  private def embPath(dir: String): String = s"$dir/embeddings.parquet"
+
   /** Fingerprint of the embeddings corpus — the version key for both the
-    * centroid cache and the published vector layouts
-    * ([[graft.store.FeatureStore.versionFingerprint]] for semantics and
-    * honest limits). */
+    * driver-side fits ([[FeatureStore.cachedFit]]) and the published
+    * vector layouts ([[graft.store.FeatureStore.versionFingerprint]] for
+    * semantics and honest limits). */
   private def embFingerprint(spark: SparkSession, dir: String): Long =
-    FeatureStore.versionFingerprint(spark, s"$dir/embeddings.parquet")
+    FeatureStore.versionFingerprint(spark, embPath(dir))
 
   /** IVF cell count is a property of the PUBLISHED layout, not a per-call
     * knob — a differing per-call value would be silently ignored whenever
@@ -267,18 +267,13 @@ object Similarity {
     * outside this rung is flagged before the hash mismatch. */
   private[graft] val pqTwinShortlist: Int = adaptiveShortlist(2048L)
 
-  /** Corpus row-count cache keyed like [[centroidCache]] (dir +
-    * fingerprint): [[adaptiveNlist]] needs n, and re-counting the lake
-    * per query call would be a full narrow scan each time. Superseded
-    * fingerprints are evicted so a long-lived JVM that rewrites the
-    * corpus doesn't accumulate entries. */
-  private val embCountCache = TrieMap.empty[(String, Long), Long]
-  private def embCount(spark: SparkSession, dir: String, fp: Long): Long = {
-    embCountCache.keys.filter(k => k._1 == dir && k._2 != fp)
-      .foreach(embCountCache.remove)
-    embCountCache.getOrElseUpdate((dir, fp),
-      Tables.embeddings(spark, dir).count())
-  }
+  /** Corpus row count, cached per corpus version: [[adaptiveNlist]]
+    * needs n, and re-counting the lake per query call would be a full
+    * narrow scan each time. */
+  private def embCount(spark: SparkSession, dir: String, fp: Long): Long =
+    FeatureStore.cachedFit(embPath(dir), fp, "count") {
+      Tables.embeddings(spark, dir).count()
+    }
 
   /** Publish the narrow ANN sign index: (vec_id, sign_bits). 16 bytes per
     * row vs ~520 for the embedding row — the shortlist scan reads ~30×
@@ -550,17 +545,6 @@ object Similarity {
       .orderBy(col("dim"))
   }
 
-  /** Coarse-quantizer centroid cache: (sf dir, corpus mtime, nlist,
-    * sampleMod, sampleCap) → centroids. The quantizer is corpus geometry,
-    * not query state — refitting it per query was the #2 bench hotspot in
-    * round 1 and at 100 TB would re-scan the lake per call. Plain arrays,
-    * so the cache is valid across sessions. The corpus file's modification
-    * time is part of the key, so rewriting the data under `dir` within one
-    * JVM can't serve stale centroids, and differing sample parameters no
-    * longer alias to one entry (round-2 ADVICE). */
-  private val centroidCache =
-    TrieMap.empty[(String, Long, Int, Int, Int), Array[Array[Double]]]
-
   /** Adaptive fit-sample modulus (round-11 ADVICE #4): the widest
     * 1-in-`mod` hash filter whose EXPECTED hit count n/mod still covers
     * the fit cap — `max(1, min(5, n / cap))`. Large corpora keep the
@@ -583,15 +567,31 @@ object Similarity {
   private[graft] def fitSampleCap(nlist: Int): Int =
     math.max(4096, 16 * nlist)
 
-  /** Fit (or fetch) the IVF coarse quantizer: seeded k-means++ + 8 Lloyd
-    * iterations over a deterministic, *bounded* hash-sample of the corpus
-    * (1-in-`sampleMod` by id hash, capped at `sampleCap` rows). The
-    * default cap is ADAPTIVE — max(4096, 16·nlist), i.e. ≥ 16 sample
-    * points per cell, ≤ 64 Ki rows / ~33 MB of driver memory at the
-    * 4096-cell rung ([[adaptiveNlist]]) regardless of corpus size. The
-    * default `sampleMod = 0` resolves ADAPTIVELY too (round-11 ADVICE
-    * #4): the widest hash modulus whose expected hit count still covers
-    * the cap — `max(1, min(5, n / cap))` — so a corpus whose 1-in-5
+  /** The deterministic bounded fit sample of the embeddings corpus: rows
+    * whose `vec_id` hash is 0 mod `mod`, the first `cap` of them by
+    * `vec_id` (ordered → the same rows on every run), as double arrays.
+    * Every driver-side fit (IVF quantizer, PQ, residual PQ, PCA) reads
+    * its sample here; each passes its own `mod` and `cap`. */
+  private def fitSample(spark: SparkSession, dir: String, mod: Int,
+                        cap: Int): Array[Array[Double]] = {
+    val sampled = embDouble(spark, dir)
+      .select(col("vec_id"), col("embedding"))
+      .where(pmod(xxhash64(col("vec_id")), lit(mod)) === 0)
+      .orderBy(col("vec_id")).limit(cap)
+      .collect().map(_.getSeq[Double](1).toArray)
+    require(sampled.nonEmpty, s"empty embedding sample for $dir")
+    sampled
+  }
+
+  /** Fit (or fetch) the IVF coarse quantizer for corpus version `fp`:
+    * seeded k-means++ + 8 Lloyd iterations over a deterministic,
+    * *bounded* hash-sample of the corpus ([[fitSample]]). The cap is
+    * ADAPTIVE — max(4096, 16·nlist), i.e. ≥ 16 sample points per cell,
+    * ≤ 64 Ki rows / ~33 MB of driver memory at the 4096-cell rung
+    * ([[adaptiveNlist]]) regardless of corpus size. The hash modulus
+    * resolves ADAPTIVELY too (round-11 ADVICE #4): the widest modulus
+    * whose expected hit count still covers the cap —
+    * `max(1, min(5, n / cap))` — so a corpus whose 1-in-5
     * sample would undershoot the fit target (e.g. 2 100 rows for a
     * 256-entry codebook) is sampled densely (down to whole-corpus at
     * small n) instead of silently starving the fit, while large corpora
@@ -601,39 +601,15 @@ object Similarity {
     * flat Lloyd to 256 cells, two-level above) takes milliseconds to
     * tens of milliseconds, vs. 8 distributed passes (3+ s of scheduler
     * overhead at any SF, 8 full lake scans at 100 TB) for a
-    * cluster-side fit. */
+    * cluster-side fit. Callers pass the fingerprint they already hold,
+    * so the fit and the published layout stay pinned to one version. */
   private[ops] def quantizerCentroids(spark: SparkSession, dir: String,
-                                      nlist: Int, sampleMod: Int = 0,
-                                      sampleCap: Int = 0,
-                                      fp: Long = Long.MinValue): Array[Array[Double]] = {
-    // callers holding a fingerprint pass it in (one FS listing per query,
-    // and cache + published layout stay pinned to the SAME version).
-    // sampleCap = 0 → the adaptive 16-per-cell default; the RESOLVED cap
-    // is the cache-key component, so an explicit equal cap aliases.
-    val cap = if (sampleCap == 0) fitSampleCap(nlist) else sampleCap
-    val mtime = if (fp == Long.MinValue) embFingerprint(spark, dir) else fp
-    // adaptive modulus: never let the hash filter starve the fit below
-    // its per-centroid target (round-11 ADVICE #4)
-    val mod = if (sampleMod != 0) sampleMod
-      else adaptiveSampleMod(embCount(spark, dir, mtime), cap)
-    // evict superseded-mtime entries for the same config: without this,
-    // a long-lived JVM that rewrites the corpus accumulates one centroid
-    // matrix per rewrite forever (round-3 review finding)
-    centroidCache.keys
-      .filter(k => k._1 == dir && k._3 == nlist && k._4 == mod &&
-        k._5 == cap && k._2 != mtime)
-      .foreach(centroidCache.remove)
-    centroidCache.getOrElseUpdate(
-      (dir, mtime, nlist, mod, cap), {
-      val sampled = embDouble(spark, dir)
-        .select(col("vec_id"), col("embedding"))
-        .where(pmod(xxhash64(col("vec_id")), lit(mod)) === 0)
-        .orderBy(col("vec_id")).limit(cap)   // ordered → deterministic
-        .collect().map(_.getSeq[Double](1).toArray)
-      require(sampled.nonEmpty, s"empty embedding sample for $dir")
-      fitCentroids(sampled, nlist)
-    })
-  }
+                                      nlist: Int, fp: Long): Array[Array[Double]] =
+    FeatureStore.cachedFit(embPath(dir), fp, ("ivf", nlist)) {
+      val cap = fitSampleCap(nlist)
+      val mod = adaptiveSampleMod(embCount(spark, dir, fp), cap)
+      fitCentroids(fitSample(spark, dir, mod, cap), nlist)
+    }
 
   /** Cell-count threshold above which [[fitCentroids]] switches from one
     * flat Lloyd fit to the two-level coarse-then-residual fit. 256 keeps
@@ -871,37 +847,25 @@ object Similarity {
   private[graft] def adaptivePqKsub(n: Long): Int =
     if (n <= 2048L) 16 else 256
 
-  /** PQ codebook cache, keyed like [[centroidCache]] (dir + corpus
-    * fingerprint + ksub); superseded fingerprints are evicted. Shape:
-    * [M][ksub][subDim]. */
-  private val pqCache =
-    TrieMap.empty[(String, Long, Int), Array[Array[Array[Double]]]]
-
-  /** Fit (or fetch) the PQ codebooks: for each of the [[pqM]] subspaces,
-    * seeded k-means ([[lloyd]], seed 42 + 1000·m so subspace fits are
-    * independent) over the subvectors of the same deterministic bounded
-    * hash-sample the IVF quantizer uses — NORMALIZED first (v/‖v‖), so
+  /** Fit (or fetch) the PQ codebooks, shape [M][ksub][subDim]: for each
+    * of the [[pqM]] subspaces, seeded k-means ([[lloyd]], seed
+    * 42 + 1000·m so subspace fits are independent) over the subvectors
+    * of a deterministic bounded hash-sample ([[fitSample]], with the IVF
+    * quantizer's adaptive modulus) — NORMALIZED first (v/‖v‖), so
     * ADC's euclidean arithmetic is monotone with cosine
     * (‖q−x‖² = 2 − 2·cos on the unit sphere). Fit cost is
     * O(sample · ksub · subDim) per subspace = one full-dim fit total. */
   private[ops] def pqCodebooks(spark: SparkSession, dir: String,
                                fp: Long): Array[Array[Array[Double]]] = {
     val ksub = adaptivePqKsub(embCount(spark, dir, fp))
-    pqCache.keys.filter(k => k._1 == dir && k._2 != fp)
-      .foreach(pqCache.remove)
-    pqCache.getOrElseUpdate((dir, fp, ksub), {
+    FeatureStore.cachedFit(embPath(dir), fp, ("pq", ksub)) {
       val cap = math.max(4096, 16 * ksub)
       // adaptive modulus, same rule as the IVF quantizer: 1-in-5 only
       // while the expected hit count covers the fit target; corpora in
       // the 2 049–20 480 band would otherwise feed a 256-code fit < 2
       // points per centroid (round-11 ADVICE #4)
-      val mod = adaptiveSampleMod(embCount(spark, dir, fp), cap)
-      val sampled = embDouble(spark, dir)
-        .select(col("vec_id"), col("embedding"))
-        .where(pmod(xxhash64(col("vec_id")), lit(mod)) === 0)
-        .orderBy(col("vec_id")).limit(cap)   // ordered → deterministic
-        .collect().map(_.getSeq[Double](1).toArray)
-      require(sampled.nonEmpty, s"empty embedding sample for $dir")
+      val sampled = fitSample(spark, dir,
+        adaptiveSampleMod(embCount(spark, dir, fp), cap), cap)
       val normed = sampled.flatMap { v =>
         val n = math.sqrt(v.map(x => x * x).sum)
         if (n > 0) Some(v.map(_ / n)) else None
@@ -909,7 +873,7 @@ object Similarity {
       Array.tabulate(pqM)(m =>
         lloyd(normed.map(_.slice(m * pqSubDim, (m + 1) * pqSubDim)),
           ksub, iters = 8, seed = 42 + 1000 * m))
-    })
+    }
   }
 
   /** The PQ codebooks as a DECLARED dump query — the [[ivfCentroidsDump]]
@@ -1145,10 +1109,6 @@ object Similarity {
   // extra shuffle).
   // ------------------------------------------------------------------
 
-  /** Residual PQ codebook cache — keyed like [[pqCache]]. */
-  private val rpqCache =
-    TrieMap.empty[(String, Long, Int), Array[Array[Array[Double]]]]
-
   /** Normalized coarse centroid cn = c/‖c‖ — the residual frame's
     * anchor. Left-to-right square-sum fold, same order the twin's
     * `list_reduce` replays. */
@@ -1157,28 +1117,23 @@ object Similarity {
     if (n > 0) c.map(_ / n) else c
   }
 
-  /** Fit (or fetch) the RESIDUAL PQ codebooks: the same deterministic
-    * bounded sample as [[pqCodebooks]], each point assigned to its
-    * coarse cell by the engine's argmin form (‖c‖² − 2·v·c over the RAW
-    * vector, lowest-cell ties — [[assignCells]]'s arithmetic), then
-    * per-subspace seeded k-means over nv − cn(cell). Seeds offset from
-    * the plain-PQ fit so the banks are independent. */
+  /** Fit (or fetch) the RESIDUAL PQ codebooks: a bounded hash-sample
+    * ([[fitSample]]) with the same cap as [[pqCodebooks]] but a FIXED
+    * 1-in-5 modulus, not [[adaptiveSampleMod]] — below 5·cap rows it
+    * sees about a fifth of what the PQ fit sees (at n = 1 000 the PQ fit
+    * samples every row). Each point is assigned to its coarse cell by
+    * the engine's argmin form (‖c‖² − 2·v·c over the RAW vector,
+    * lowest-cell ties — [[assignCells]]'s arithmetic), then per-subspace
+    * seeded k-means runs over nv − cn(cell). Seeds offset from the
+    * plain-PQ fit so the banks are independent. */
   private[ops] def residualPqCodebooks(spark: SparkSession, dir: String,
                                        fp: Long): Array[Array[Array[Double]]] = {
     val n = embCount(spark, dir, fp)
     val ksub = adaptivePqKsub(n)
-    rpqCache.keys.filter(k => k._1 == dir && k._2 != fp)
-      .foreach(rpqCache.remove)
-    rpqCache.getOrElseUpdate((dir, fp, ksub), {
+    FeatureStore.cachedFit(embPath(dir), fp, ("rpq", ksub)) {
       val cents = quantizerCentroids(spark, dir, adaptiveNlist(n), fp = fp)
       val cns = cents.map(normCentroid)
-      val cap = math.max(4096, 16 * ksub)
-      val sampled = embDouble(spark, dir)
-        .select(col("vec_id"), col("embedding"))
-        .where(pmod(xxhash64(col("vec_id")), lit(5)) === 0)
-        .orderBy(col("vec_id")).limit(cap)
-        .collect().map(_.getSeq[Double](1).toArray)
-      require(sampled.nonEmpty, s"empty embedding sample for $dir")
+      val sampled = fitSample(spark, dir, 5, math.max(4096, 16 * ksub))
       val residuals = sampled.flatMap { v =>
         val nrm = math.sqrt(v.foldLeft(0.0)((acc, x) => acc + x * x))
         if (nrm <= 0) None else {
@@ -1196,7 +1151,7 @@ object Similarity {
       Array.tabulate(pqM)(m =>
         lloyd(residuals.map(_.slice(m * pqSubDim, (m + 1) * pqSubDim)),
           ksub, iters = 8, seed = 542 + 1000 * m))
-    })
+    }
   }
 
   /** The residual codebooks as a DECLARED rows-only dump — the
@@ -1332,7 +1287,7 @@ object Similarity {
   // ------------------------------------------------------------------
   // PCA for embedding columns (Pearson 1901; the energy-compacting
   // rotation OPQ-style PQ pipelines run first — Ge et al. CVPR'13):
-  // fit on the same deterministic bounded sample as the quantizers,
+  // fit on a deterministic bounded sample (fixed 1-in-5, 4096 rows),
   // dump (mean + components) rows-only, and hash-check the PROJECTION,
   // which given the dumped floats is pure replayable matmul — the
   // ivfCentroidsDump / pqCodebooksDump verification pattern.
@@ -1341,28 +1296,18 @@ object Similarity {
   /** Principal components kept (64 → 16 = 4× narrower). */
   val pcaK = 16
 
-  /** PCA model cache keyed like the quantizer caches. */
-  private val pcaCache =
-    TrieMap.empty[(String, Long, Int), (Array[Double], Array[Array[Double]])]
-
   /** Fit (or fetch) the PCA model: sample mean + top-[[pcaK]]
     * eigenvectors of the sample covariance (breeze `eigSym` on the
-    * driver-side 64×64 matrix — the sample is the quantizers' bounded
-    * deterministic hash-sample, so the fit is O(sample·dim²) and never
-    * touches the lake twice). Eigenvectors sort by eigenvalue DESC and
-    * are sign-canonicalized (largest-|entry| coordinate made positive,
+    * driver-side 64×64 matrix — the sample is [[fitSample]] with a FIXED
+    * 1-in-5 modulus and a 4096-row cap, not the quantizers' adaptive
+    * modulus; the fit is O(sample·dim²) and never touches the lake
+    * twice). Eigenvectors sort by eigenvalue DESC and are
+    * sign-canonicalized (largest-|entry| coordinate made positive,
     * lowest index on ties) so the fit is stable run to run. */
   private[ops] def pcaModel(spark: SparkSession, dir: String,
-                            fp: Long): (Array[Double], Array[Array[Double]]) = {
-    pcaCache.keys.filter(k => k._1 == dir && k._2 != fp)
-      .foreach(pcaCache.remove)
-    pcaCache.getOrElseUpdate((dir, fp, pcaK), {
-      val sampled = embDouble(spark, dir)
-        .select(col("vec_id"), col("embedding"))
-        .where(pmod(xxhash64(col("vec_id")), lit(5)) === 0)
-        .orderBy(col("vec_id")).limit(4096)
-        .collect().map(_.getSeq[Double](1).toArray)
-      require(sampled.nonEmpty, s"empty embedding sample for $dir")
+                            fp: Long): (Array[Double], Array[Array[Double]]) =
+    FeatureStore.cachedFit(embPath(dir), fp, ("pca", pcaK)) {
+      val sampled = fitSample(spark, dir, 5, 4096)
       val d = sampled.head.length
       val n = sampled.length
       val mean = Array.tabulate(d)(i => sampled.foldLeft(0.0)(_ + _(i)) / n)
@@ -1385,8 +1330,7 @@ object Similarity {
         if (v(pivot) < 0) v.map(-_) else v
       }.toArray
       (mean, comps)
-    })
-  }
+    }
 
   /** The PCA model as a DECLARED rows-only dump — scalar rows
     * (component, dim, value); component −1 carries the sample mean. The

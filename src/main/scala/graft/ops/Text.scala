@@ -1147,19 +1147,13 @@ object Text {
     // array — the same ≤ df²/2 pairs, generated map-side into the pair
     // aggregate's partial combine. `docs` is materialized by the
     // aggregate before the pairing lambda reads it, so the nested
-    // element_at probes are O(df²) array reads, not re-evaluations.
+    // slices are O(df²) array reads, not re-evaluations.
     val perToken = p.groupBy(col("token"))
       .agg(sort_array(collect_list(col("doc_id"))).as("docs"))
-      // df-1 tokens pair with nothing; the guard also keeps
-      // sequence(1, 0) from counting DOWN (the ANSI descending trap)
-      .where(size(col("docs")) >= 2)
+      .where(size(col("docs")) >= 2)   // df-1 tokens pair with nothing
     perToken
-      .select(explode(flatten(transform(
-        sequence(lit(1), size(col("docs")) - 1),
-        i => transform(
-          slice(col("docs"), (i + 1).cast("int"), size(col("docs")) - i),
-          b => struct(element_at(col("docs"), i).as("doc_a"),
-            b.as("doc_b")))))).as("pr"))
+      .select(explode(Mining.orderedPairs(col("docs"))((a, b) =>
+        struct(a.as("doc_a"), b.as("doc_b")))).as("pr"))
       .select(col("pr.doc_a").as("doc_a"), col("pr.doc_b").as("doc_b"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
@@ -1324,7 +1318,7 @@ object Text {
     // reading the same shuffle (round-17 profile; the round-16 pre-sort
     // exchange had fixed only the sampler re-run). Grouping each token's
     // prefix postings into one doc_id-sorted array and exploding its
-    // ordered 2-combinations (the [[Mining]] basket-combo idiom) emits
+    // ordered 2-combinations ([[Mining.orderedPairs]]) emits
     // the SAME pair multiset with a single prefix pass — and replaces
     // the self-join's broadcast of a corpus-sized prefix frame with one
     // narrow postings shuffle keyed by token, honest at any scale. The
@@ -1349,13 +1343,10 @@ object Text {
       .where(size(col("ds")) > 1)
     // ordered 2-combinations of the doc_id-sorted posting array: element
     // i paired with every later element, so doc_a ≤ doc_b by construction
-    val combos = flatten(transform(col("ds"), (x, i) =>
-      transform(slice(col("ds"), i + lit(2),
-        greatest(size(col("ds")) - i - 1, lit(0))),
-        y => struct(
-          x.getField("doc_id").as("doc_a"), y.getField("doc_id").as("doc_b"),
-          x.getField("nw").as("na"), y.getField("nw").as("nb"),
-          x.getField("pos").as("pa"), y.getField("pos").as("pb")))))
+    val combos = Mining.orderedPairs(col("ds"))((x, y) => struct(
+      x.getField("doc_id").as("doc_a"), y.getField("doc_id").as("doc_b"),
+      x.getField("nw").as("na"), y.getField("nw").as("nb"),
+      x.getField("pos").as("pa"), y.getField("pos").as("pb")))
     // the grouped-postings frame is SMALL in bytes (one row per prefix
     // token) but each row carries O(df²) combination-generation CPU, so
     // AQE's byte-proxy coalescing runs the explode at 1-4 tasks (round-17
@@ -1398,16 +1389,13 @@ object Text {
     * full-corpus fit closely (the standard practical recipe). */
   val bpeFitWords = 4096
 
-  private val bpeCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Seq[(String, String)]]
-
   /** Fit (or fetch) the corpus BPE merge table — ranked (a, b) symbol
-    * pairs, fingerprint-cached like the quantizer fits. */
+    * pairs, cached per corpus version like the quantizer fits
+    * ([[graft.store.FeatureStore.cachedFit]]). */
   private[graft] def bpeMerges(spark: SparkSession, dir: String): Seq[(String, String)] = {
-    val fp = graft.store.FeatureStore.versionFingerprint(
-      spark, s"$dir/documents.parquet")
-    bpeCache.keys.filter(k => k._1 == dir && k._2 != fp).foreach(bpeCache.remove)
-    bpeCache.getOrElseUpdate((dir, fp), {
+    val path = s"$dir/documents.parquet"
+    val fp = graft.store.FeatureStore.versionFingerprint(spark, path)
+    graft.store.FeatureStore.cachedFit(path, fp, "bpe") {
       val wc = Tables.documents(spark, dir)
         .select(explode(tokens(col("text"))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c"))
@@ -1415,7 +1403,7 @@ object Text {
         .limit(bpeFitWords)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       fitBpe(wc, bpeMaxMerges)
-    })
+    }
   }
 
   /** Deterministic greedy BPE fit over a bounded word-count table: each

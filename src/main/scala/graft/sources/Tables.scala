@@ -109,36 +109,26 @@ object Tables {
   def lineitem(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "lineitem", lineitemSchema)
 
   /** Raw-long → micros divisor for `events.ts`, sniffed ONCE per file
-    * from the parquet footer (no data scan): with `nanosAsLong` set, a
-    * NANOS-annotated column infers as LongType (→ divide by 1000), while
-    * a MICROS column infers as a timestamp type (→ divide by 1). Cached
-    * per path — the unit is a property of the published file, and the
-    * footer read is driver-side metadata only.
+    * version from the parquet footer (no data scan): with `nanosAsLong`
+    * set, a NANOS-annotated column infers as LongType (→ divide by 1000),
+    * while a MICROS column infers as a timestamp type (→ divide by 1).
+    * Cached per [[graft.store.FeatureStore.versionFingerprint]] of the
+    * file: the corpus is regenerated in place between rounds and has
+    * flipped encodings before (nanos in r5, micros in r6), so a
+    * long-lived session must re-sniff a rewritten file, not decode with
+    * a stale divisor (round-6 ADVICE).
     *
     * Supported physical encodings are INT64 (MICROS- or NANOS-annotated,
     * or unannotated raw longs, which are treated as nanos). Legacy INT96
     * timestamps are rejected loudly by the raw-long scan — a corpus drop
     * in that encoding should be rewritten, not silently reinterpreted. */
-  private val tsDivisorCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def eventsTsDivisor(spark: SparkSession, dir: String): Long = {
     val path = s"$dir/events.parquet"
-    // cache key includes length + mtime, not path alone: the corpus is
-    // regenerated in place between rounds and has flipped encodings
-    // before (nanos in r5, micros in r6) — a long-lived session must
-    // re-sniff a rewritten file, not decode with a stale divisor
-    // (round-6 ADVICE). Hadoop getFileStatus works for files and
-    // directories (a rewritten directory's mtime changes too).
-    val key = try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(p)
-      s"$path@${st.getLen}@${st.getModificationTime}"
-    } catch { case _: java.io.IOException => path }
-    tsDivisorCache.computeIfAbsent(key, { _ =>
+    val fp = graft.store.FeatureStore.versionFingerprint(spark, path)
+    graft.store.FeatureStore.cachedFit(path, fp, "tsDivisor") {
       val inferred = spark.read.parquet(path).schema("ts").dataType
       if (inferred == LongType) 1000L else 1L
-    })
+    }
   }
 
   /** Events with `ts` as a proper TimestampType (micros, UTC), converted

@@ -81,6 +81,24 @@ object FeatureStore {
     h
   }
 
+  /** Driver-side fits of a corpus file (quantizer and PQ codebooks, BPE
+    * merges, a row count, a footer sniff), keyed (corpus file,
+    * [[versionFingerprint]], fit key). Plain driver values, so an entry
+    * serves every session in the JVM. */
+  private val fits =
+    scala.collection.concurrent.TrieMap.empty[(String, Long, Any), Any]
+
+  /** The fit of `path` at version `fp` named by `key` (which carries the
+    * fit's parameters): computed on the first call, served from memory
+    * after that. Entries of `path` at any other fingerprint are dropped
+    * first, so a long-lived JVM that rewrites a corpus in place keeps
+    * one version's fits, never a stale one. `fit` may itself call
+    * `cachedFit` (the residual-PQ fit reads the quantizer's). */
+  def cachedFit[V](path: String, fp: Long, key: Any)(fit: => V): V = {
+    fits.keys.filter(k => k._1 == path && k._2 != fp).foreach(fits.remove)
+    fits.getOrElseUpdate((path, fp, key), fit).asInstanceOf[V]
+  }
+
   /** Serializes publishers per BASE name: concurrent in-JVM publishers of
     * the same layout (e.g. the two futures in
     * [[graft.ops.Relational.publishBucketedJoinTables]] racing a warmup
@@ -191,7 +209,4 @@ object FeatureStore {
         .partitionBy(partCol)
         .saveAsTable(table)
     }
-
-  def readParquet(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(path)
 }

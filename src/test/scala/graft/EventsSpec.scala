@@ -65,6 +65,28 @@ class EventsSpec extends SparkSpec {
     assert(a.head._2 === "2024-01-01 00:00:00.123456")
   }
 
+  test("events reader re-sniffs the ts encoding after an in-place MICROS → NANOS rewrite") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val dir = Files.createTempDirectory("graft_ts_rewrite")
+    val ev = dir.resolve("events.parquet")
+    Files.copy(Paths.get(sf, "events.parquet"), ev)
+    def decoded() = Tables.events(spark, dir.toString)
+      .select(col("event_id"), col("ts").cast("string"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+    assert(Tables.eventsTsDivisor(spark, dir.toString) === 1L)
+    val micros = decoded()
+    // same path, same logical content, ts now raw-long nanos
+    val staged = Files.createTempDirectory("graft_ts_staged").resolve("e")
+    spark.read.schema(Tables.eventsRawSchema).parquet(ev.toString)
+      .withColumn("ts", col("ts") * 1000L)
+      .coalesce(1).write.parquet(staged.toString)
+    val part = Files.list(staged).filter(_.getFileName.toString.endsWith(".parquet"))
+      .findFirst.get
+    Files.move(part, ev, StandardCopyOption.REPLACE_EXISTING)
+    assert(Tables.eventsTsDivisor(spark, dir.toString) === 1000L)
+    assert(decoded() === micros)
+  }
+
   test("tumbling windows: event counts conserved, starts aligned to the hour") {
     val df = Events.tumblingCounts(spark, sf).cache()
     assert(df.agg(sum("n_events")).collect().head.getLong(0) ===

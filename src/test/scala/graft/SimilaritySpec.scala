@@ -708,6 +708,31 @@ class SimilaritySpec extends SparkSpec {
       .sameElements(dump.map(t => s"[${t._1},${t._2},${t._3}]")))
   }
 
+  test("driver-side fits run once per corpus version; an in-place rewrite refits once") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val dir = Files.createTempDirectory("graft_fit_cache")
+    val emb = dir.resolve("embeddings.parquet")
+    Files.copy(Paths.get(sf, "embeddings.parquet"), emb)
+    def ivf() = Similarity.ivfCentroidsDump(spark, dir.toString)
+    def pca() = Similarity.pcaComponentsDump(spark, dir.toString)
+    def jobs() = (constructionJobs(ivf()), constructionJobs(pca()))
+    val first = jobs()
+    assert(first._1 >= 1 && first._2 >= 1, s"first fits ran no job: $first")
+    assert(jobs() === ((0, 0)))
+    val before = ivf().collect().toSeq
+    // rewrite the copy in place with half its rows: a new corpus version
+    val staged = Files.createTempDirectory("graft_fit_cache_staged").resolve("e")
+    spark.read.parquet(emb.toString).where(col("vec_id") % 2 === 0)
+      .coalesce(1).write.parquet(staged.toString)
+    val part = Files.list(staged).filter(_.getFileName.toString.endsWith(".parquet"))
+      .findFirst.get
+    Files.move(part, emb, StandardCopyOption.REPLACE_EXISTING)
+    val refit = jobs()
+    assert(refit._1 >= 1 && refit._2 >= 1, s"rewrite served stale fits: $refit")
+    assert(jobs() === ((0, 0)))
+    assert(ivf().collect().toSeq !== before)
+  }
+
   test("residual PQ: code table shape, codes in range, deterministic rerun") {
     val n = Tables.embeddings(spark, sf).count()
     val codes = Similarity.rpqCodesDump(spark, sf).collect()
