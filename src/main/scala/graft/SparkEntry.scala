@@ -1091,37 +1091,19 @@ object SparkEntry {
     // exact-cosine top-10 from RAW embeddings — the dump is input, not the
     // answer. Literals mirror ivfTopKCosine's defaults.
     QuerySpec("q_sim_ivf_topk", (s, d) => Similarity.ivfTopKCosine(s, d),
-      Some(s"""WITH cent AS (SELECT cell, list(value ORDER BY dim) AS c
-         | FROM '${graft.explore.Stats.verifyOutToken}/q_sim_ivf_centroids/*.parquet'
-         | GROUP BY cell),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |n AS (SELECT vec_id, v,
          |  sqrt(list_reduce(list_transform(generate_series(1,64), i -> v[i]*v[i]), (x,y) -> x+y)) AS nrm
          | FROM e),
-         |ad AS (SELECT n.vec_id, cent.cell,
-         |  list_reduce(list_transform(generate_series(1,64), i -> cent.c[i]*cent.c[i]), (x,y) -> x+y)
-         |  - 2.0 * list_reduce(list_transform(generate_series(1,64), i -> n.v[i]*cent.c[i]), (x,y) -> x+y) AS dist
-         | FROM n CROSS JOIN cent),
-         |asg AS (SELECT vec_id, cell FROM (
-         |  SELECT vec_id, cell,
-         |   row_number() OVER (PARTITION BY vec_id ORDER BY dist, cell) AS r
-         |  FROM ad) WHERE r = 1),
+         |${ivfCtes("n")},
          |q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n WHERE vec_id < 10),
-         |pd AS (SELECT q.q_id, cent.cell,
-         |  list_reduce(list_transform(generate_series(1,64), i -> q.qv[i]*cent.c[i]), (x,y) -> x+y)
-         |   / nullif(q.qn * sqrt(list_reduce(list_transform(generate_series(1,64), i -> cent.c[i]*cent.c[i]), (x,y) -> x+y)), 0.0) AS cdist
-         | FROM q CROSS JOIN cent),
-         |probed AS (SELECT q_id, cell FROM (
-         |  SELECT q_id, cell,
-         |   row_number() OVER (PARTITION BY q_id ORDER BY cdist DESC, cell) AS cr
-         |  FROM pd) WHERE cr <= 8),
          |scored AS (SELECT q.q_id, n.vec_id AS cand_id,
          |  round(list_reduce(list_transform(generate_series(1,64), i -> q.qv[i]*n.v[i]), (x,y) -> x+y)
          |   / nullif(q.qn * n.nrm, 0.0), 6) AS cos_sim
-         | FROM probed JOIN q ON probed.q_id = q.q_id
-         |      JOIN asg ON asg.cell = probed.cell
-         |      JOIN n ON n.vec_id = asg.vec_id
-         | WHERE n.vec_id <> q.q_id)
+         | FROM ipr JOIN q ON ipr.q_id = q.q_id
+         |      JOIN iasg ON iasg.cell = ipr.cell
+         |      JOIN n ON n.vec_id = iasg.vec_id
+         | WHERE ipr.cr <= 8 AND n.vec_id <> q.q_id)
          |SELECT q_id, cand_id, cos_sim, CAST(rnk AS BIGINT) AS rnk FROM (
          | SELECT *, row_number() OVER (PARTITION BY q_id
          |   ORDER BY cos_sim DESC, cand_id) AS rnk
@@ -1134,37 +1116,17 @@ object SparkEntry {
     // oracle-checked, not a single operating point
     QuerySpec("q_sim_probe_curve", (s, d) => Similarity.ivfProbeRecallCurve(s, d), Some {
       val levels = Seq(1, 2, 4, 8)
-      val shared = simTopkCtes + "," +
-        s"""
-           |cent AS (SELECT cell, list(value ORDER BY dim) AS c
-           | FROM '${graft.explore.Stats.verifyOutToken}/q_sim_ivf_centroids/*.parquet'
-           | GROUP BY cell),
-           |ad AS (SELECT n.vec_id, cent.cell,
-           |  list_reduce(list_transform(generate_series(1,64), i -> cent.c[i]*cent.c[i]), (x,y) -> x+y)
-           |  - 2.0 * list_reduce(list_transform(generate_series(1,64), i -> n.v[i]*cent.c[i]), (x,y) -> x+y) AS dist
-           | FROM n CROSS JOIN cent),
-           |asg AS (SELECT vec_id, cell FROM (
-           |  SELECT vec_id, cell,
-           |   row_number() OVER (PARTITION BY vec_id ORDER BY dist, cell) AS r
-           |  FROM ad) WHERE r = 1),
-           |qq AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n WHERE vec_id < 10),
-           |pd AS (SELECT qq.q_id, cent.cell,
-           |  list_reduce(list_transform(generate_series(1,64), i -> qq.qv[i]*cent.c[i]), (x,y) -> x+y)
-           |   / nullif(qq.qn * sqrt(list_reduce(list_transform(generate_series(1,64), i -> cent.c[i]*cent.c[i]), (x,y) -> x+y)), 0.0) AS cdist
-           | FROM qq CROSS JOIN cent),
-           |pr AS (SELECT q_id, cell,
-           |  row_number() OVER (PARTITION BY q_id ORDER BY cdist DESC, cell) AS cr
-           | FROM pd)""".stripMargin
+      val shared = simTopkCtes + ",\n" + ivfCtes("n") + ",\n" +
+        "qq AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n WHERE vec_id < 10)"
       val perLevel = levels.map { p =>
         s""",
            |sc$p AS (SELECT qq.q_id, n.vec_id AS cand_id,
            |  round(list_reduce(list_transform(generate_series(1,64), i -> qq.qv[i]*n.v[i]), (x,y) -> x+y)
            |   / nullif(qq.qn * n.nrm, 0.0), 6) AS cos_sim
-           | FROM (SELECT q_id, cell FROM pr WHERE cr <= $p) pb
-           |      JOIN qq ON pb.q_id = qq.q_id
-           |      JOIN asg ON asg.cell = pb.cell
-           |      JOIN n ON n.vec_id = asg.vec_id
-           | WHERE n.vec_id <> qq.q_id),
+           | FROM ipr JOIN qq ON ipr.q_id = qq.q_id
+           |      JOIN iasg ON iasg.cell = ipr.cell
+           |      JOIN n ON n.vec_id = iasg.vec_id
+           | WHERE ipr.cr <= $p AND n.vec_id <> qq.q_id),
            |tp$p AS (SELECT q_id, cand_id FROM (
            |  SELECT *, row_number() OVER (PARTITION BY q_id
            |    ORDER BY cos_sim DESC, cand_id) AS rnk FROM sc$p) t
@@ -1212,31 +1174,14 @@ object SparkEntry {
          | GROUP BY pdt.q_id, pasg.vec_id),
          |${pqRerankTail("padc")}""".stripMargin)),
     // IVF-PQ replay: coarse-cell assignment + probe ranking from the
-    // q_sim_ivf_centroids dump (exactly the q_sim_ivf_topk twin's
-    // arithmetic), PQ codes + ADC from the q_sim_pq_codebooks dump, ADC
+    // q_sim_ivf_centroids dump (the shared ivfCtes block, as in the
+    // q_sim_ivf_topk twin), PQ codes + ADC from the q_sim_pq_codebooks dump, ADC
     // restricted to candidates in the query's 8 probed cells, then the
     // shared shortlist + exact re-rank tail.
     QuerySpec("q_sim_ivfpq_topk", (s, d) => Similarity.ivfPqTopKCosine(s, d),
       Some(s"""WITH $pqCtes,
-         |icent AS (SELECT cell, list(value ORDER BY dim) AS c
-         | FROM '${graft.explore.Stats.verifyOutToken}/q_sim_ivf_centroids/*.parquet'
-         | GROUP BY cell),
-         |iad AS (SELECT pw.vec_id, icent.cell,
-         |  list_reduce(list_transform(generate_series(1,64), i -> icent.c[i]*icent.c[i]), (x,y) -> x+y)
-         |  - 2.0 * list_reduce(list_transform(generate_series(1,64), i -> pw.v[i]*icent.c[i]), (x,y) -> x+y) AS dist
-         | FROM pw CROSS JOIN icent),
-         |iasg AS (SELECT vec_id, cell FROM (
-         |  SELECT vec_id, cell,
-         |   row_number() OVER (PARTITION BY vec_id ORDER BY dist, cell) AS r
-         |  FROM iad) WHERE r = 1),
-         |ipd AS (SELECT pq.q_id, icent.cell,
-         |  list_reduce(list_transform(generate_series(1,64), i -> pq.qv[i]*icent.c[i]), (x,y) -> x+y)
-         |   / nullif(pq.qn * sqrt(list_reduce(list_transform(generate_series(1,64), i -> icent.c[i]*icent.c[i]), (x,y) -> x+y)), 0.0) AS cdist
-         | FROM pq CROSS JOIN icent),
-         |iprobed AS (SELECT q_id, cell FROM (
-         |  SELECT q_id, cell,
-         |   row_number() OVER (PARTITION BY q_id ORDER BY cdist DESC, cell) AS cr
-         |  FROM ipd) WHERE cr <= 8),
+         |${ivfCtes("pw")},
+         |iprobed AS (SELECT q_id, cell FROM ipr WHERE cr <= 8),
          |iadc AS (SELECT pdt.q_id, pasg.vec_id AS cand_id,
          |  list_reduce(list(pdt.term ORDER BY pdt.subspace), (x,y) -> x+y) AS adc
          | FROM pasg
@@ -1295,21 +1240,13 @@ object SparkEntry {
          |       CAST(code AS BIGINT) AS code
          |FROM rasg ORDER BY vec_id, subspace""".stripMargin)),
     // residual IVF-PQ (IVFADC) replay: probe ranking from the centroid
-    // dump (the q_sim_ivfpq_topk twin's arithmetic), PER-(query, probed
+    // dump (the shared ivfCtes block), PER-(query, probed
     // cell) residual distance tables (qrv = qw − cn), candidates scored
     // via their own cell's table, shared shortlist + exact re-rank.
     QuerySpec("q_sim_ivfrpq_topk", (s, d) => Similarity.ivfRpqTopKCosine(s, d),
       Some(s"""WITH $rpqCtes,
-         |pq AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, w AS qw
-         |       FROM pw WHERE vec_id < 10),
-         |ipd AS (SELECT pq.q_id, icent.cell,
-         |  list_reduce(list_transform(generate_series(1,64), i -> pq.qv[i]*icent.c[i]), (x,y) -> x+y)
-         |   / nullif(pq.qn * sqrt(list_reduce(list_transform(generate_series(1,64), i -> icent.c[i]*icent.c[i]), (x,y) -> x+y)), 0.0) AS cdist
-         | FROM pq CROSS JOIN icent),
-         |iprobed AS (SELECT q_id, cell FROM (
-         |  SELECT q_id, cell,
-         |   row_number() OVER (PARTITION BY q_id ORDER BY cdist DESC, cell) AS cr
-         |  FROM ipd) WHERE cr <= 8),
+         |pq AS (SELECT vec_id AS q_id, w AS qw FROM pw WHERE vec_id < 10),
+         |iprobed AS (SELECT q_id, cell FROM ipr WHERE cr <= 8),
          |rqd AS (SELECT pq.q_id, iprobed.cell,
          |  list_transform(generate_series(1,64), i -> pq.qw[i] - icn.cn[i]) AS qrv
          | FROM pq JOIN iprobed USING (q_id) JOIN icn USING (cell)),
@@ -3577,20 +3514,10 @@ object SparkEntry {
        |pw AS (SELECT vec_id, v, nrm,
        |  list_transform(generate_series(1,64), i -> v[i]/nrm) AS w
        | FROM pn WHERE nrm > 0),
-       |icent AS (SELECT cell, list(value ORDER BY dim) AS c
-       | FROM '${graft.explore.Stats.verifyOutToken}/q_sim_ivf_centroids/*.parquet'
-       | GROUP BY cell),
+       |${ivfCtes("pw")},
        |icn AS (SELECT cell, c, list_transform(c, x ->
        |  x / sqrt(list_reduce(list_transform(generate_series(1,64), i -> c[i]*c[i]), (x,y) -> x+y))) AS cn
        | FROM icent),
-       |iad AS (SELECT pw.vec_id, icent.cell,
-       |  list_reduce(list_transform(generate_series(1,64), i -> icent.c[i]*icent.c[i]), (x,y) -> x+y)
-       |  - 2.0 * list_reduce(list_transform(generate_series(1,64), i -> pw.v[i]*icent.c[i]), (x,y) -> x+y) AS dist
-       | FROM pw CROSS JOIN icent),
-       |iasg AS (SELECT vec_id, cell FROM (
-       |  SELECT vec_id, cell,
-       |   row_number() OVER (PARTITION BY vec_id ORDER BY dist, cell) AS r
-       |  FROM iad) WHERE r = 1),
        |rres AS (SELECT pw.vec_id, iasg.cell,
        |  list_transform(generate_series(1,64), i -> pw.w[i] - icn.cn[i]) AS rv
        | FROM pw JOIN iasg USING (vec_id) JOIN icn USING (cell)),
@@ -3602,6 +3529,33 @@ object SparkEntry {
        |  SELECT vec_id, subspace, code,
        |   row_number() OVER (PARTITION BY vec_id, subspace ORDER BY dist, code) AS r
        |  FROM rsub) WHERE r = 1)""".stripMargin
+
+  /** Shared IVF CTE block for the IVF-family twins, replayed from the
+    * `q_sim_ivf_centroids` dump: `icent` (centroid vectors), `iasg`
+    * (every `src` row's cell — argmin ‖c‖²−2·v·c, lowest-cell tie-break,
+    * [[graft.ops.Similarity.assignCells]]) and `ipr` (each query's cells
+    * ranked `cr` by cosine-to-centroid DESC, cell — the probe ranking).
+    * `src` is the (vec_id, v, nrm) CTE the engine side reads: `n` (every
+    * row, embWithNorm) or `pw` (nrm > 0 only, embNormalized). The caller
+    * applies the probe cutoff `cr <= p` (the probe curve sweeps it). */
+  private def ivfCtes(src: String): String =
+    s"""icent AS (SELECT cell, list(value ORDER BY dim) AS c
+       | FROM '${graft.explore.Stats.verifyOutToken}/q_sim_ivf_centroids/*.parquet'
+       | GROUP BY cell),
+       |iad AS (SELECT $src.vec_id, icent.cell,
+       |  list_reduce(list_transform(generate_series(1,64), i -> icent.c[i]*icent.c[i]), (x,y) -> x+y)
+       |  - 2.0 * list_reduce(list_transform(generate_series(1,64), i -> $src.v[i]*icent.c[i]), (x,y) -> x+y) AS dist
+       | FROM $src CROSS JOIN icent),
+       |iasg AS (SELECT vec_id, cell FROM (
+       |  SELECT vec_id, cell,
+       |   row_number() OVER (PARTITION BY vec_id ORDER BY dist, cell) AS r
+       |  FROM iad) WHERE r = 1),
+       |ipr AS (SELECT q_id, cell,
+       |  row_number() OVER (PARTITION BY q_id ORDER BY cdist DESC, cell) AS cr
+       | FROM (SELECT $src.vec_id AS q_id, icent.cell,
+       |  list_reduce(list_transform(generate_series(1,64), i -> $src.v[i]*icent.c[i]), (x,y) -> x+y)
+       |   / nullif($src.nrm * sqrt(list_reduce(list_transform(generate_series(1,64), i -> icent.c[i]*icent.c[i]), (x,y) -> x+y)), 0.0) AS cdist
+       |  FROM $src CROSS JOIN icent WHERE $src.vec_id < 10))""".stripMargin
 
   /** ADC-shortlist (by adc asc, cand_id tie-break) + exact-cosine
     * re-rank tail shared by the `q_sim_pq_topk` / `q_sim_ivfpq_topk`

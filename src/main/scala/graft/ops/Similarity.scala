@@ -51,6 +51,25 @@ object Similarity {
         sqrt(GraftFunctions.dot(col("embedding"), col("embedding"))))
   }
 
+  /** Query side of the exact scorers: rows `vec_id < nQueries` of an
+    * [[embWithNorm]]-shaped frame as (q_id, qv, qn, extra…). */
+  private def queryVecs(emb: DataFrame, nQueries: Int, extra: Column*): DataFrame =
+    emb.where(col("vec_id") < nQueries)
+      .select(Seq(col("vec_id").as("q_id"), col("embedding").as("qv"),
+        col("nrm").as("qn")) ++ extra: _*)
+
+  /** Candidate side of the exact scorers: (cand_id, cv, cn, extra…). */
+  private def candVecs(emb: DataFrame, extra: Column*): DataFrame =
+    emb.select(Seq(col("vec_id").as("cand_id"), col("embedding").as("cv"),
+      col("nrm").as("cn")) ++ extra: _*)
+
+  /** Rounded exact cosine `cos_sim` of query vector `qv` (norm `qn`)
+    * against candidate `cv` (norm `cn`): one dot product per pair off the
+    * [[embWithNorm]] norms, 6dp — the arithmetic every twin replays. */
+  private def cosSim: Column =
+    round(GraftFunctions.dot(col("qv"), col("cv")) /
+      nullif(col("qn") * col("cn"), lit(0.0)), 6).as("cos_sim")
+
   /** Scored (q_id, cand_id, cos_sim) → top-k rows (q_id, cand_id, cos_sim,
     * rnk) via the bounded-heap aggregate. The struct sort key orders by
     * (-cos asc, cand_id asc) = best cosine first with a deterministic id
@@ -81,10 +100,8 @@ object Similarity {
   def topKCosine(spark: SparkSession, dir: String, nQueries: Int = 10,
                  k: Int = 10): DataFrame = {
     val emb = embWithNorm(spark, dir)
-    val queries = emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("nrm").as("qn"))
-    val cands = emb.select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-      col("nrm").as("cn"))
+    val queries = queryVecs(emb, nQueries)
+    val cands = candVecs(emb)
 
     // fan the candidate side out before the dense scoring pass: the
     // whole-corpus scan arrives in O(1) row-group splits locally, which
@@ -93,9 +110,7 @@ object Similarity {
     // parallel (Hints.fanOut — size-guarded like dimHint)
     val scored = Hints.fanOut(cands).crossJoin(broadcast(queries))
       .where(col("q_id") =!= col("cand_id"))
-      .select(col("q_id"), col("cand_id"),
-        round(GraftFunctions.dot(col("qv"), col("cv")) / nullif(col("qn") * col("cn"), lit(0.0)), 6)
-          .as("cos_sim"))
+      .select(col("q_id"), col("cand_id"), cosSim)
     topKSelect(scored, k)
   }
 
@@ -348,9 +363,7 @@ object Similarity {
     * with DuckDB `list(value ORDER BY dim)`; [[graft.ContractSpec]]
     * pins the no-top-level-array invariant for every declared query. */
   def ivfCentroidsDump(spark: SparkSession, dir: String): DataFrame = {
-    val fp = embFingerprint(spark, dir)
-    val cents = quantizerCentroids(spark, dir,
-      adaptiveNlist(embCount(spark, dir, fp)), fp = fp)
+    val cents = layoutCentroids(spark, dir, embFingerprint(spark, dir))
     spark.createDataFrame(
       cents.toIndexedSeq.zipWithIndex.flatMap { case (c, i) =>
         c.toIndexedSeq.zipWithIndex.map { case (v, d) => (i, d, v) } })
@@ -389,16 +402,14 @@ object Similarity {
     * third pass). */
   private def ensureIvfCellsFp(spark: SparkSession, dir: String,
                                fp: Long): String = {
-    val nlist = adaptiveNlist(embCount(spark, dir, fp))
     FeatureStore.ensurePartitionedTable(spark,
-      assignCells(embWithNorm(spark, dir),
-        quantizerCentroids(spark, dir, nlist, fp = fp)),
+      assignCells(embWithNorm(spark, dir), layoutCentroids(spark, dir, fp)),
       s"graft_ivf_cells_${Relational.dirSlug(dir)}", "cell", fp)
   }
 
   /** Publish the vector-search layouts (sign index, IVF cells, PQ codes,
-    * IVF-PQ codes) for one sf dir — Bench warmup calls this; queries
-    * self-publish idempotently. */
+    * IVF-PQ codes, residual IVF-PQ codes) for one sf dir — Bench warmup
+    * calls this; queries self-publish idempotently. */
   def ensureVectorLayout(spark: SparkSession, dir: String): Unit = {
     ensureSignIndex(spark, dir)
     ensureIvfCells(spark, dir)
@@ -422,9 +433,9 @@ object Similarity {
     *     xor+popcount, codegen'd: E[hamming] = 64·θ/π, monotone in angle),
     *     keep the `shortlist` closest per query with the bounded-heap
     *     aggregate (shuffle = O(q·partitions·shortlist));
-    *  2. re-rank — fetch ONLY the shortlisted vectors (broadcast id join
-    *     into the wide table) and score them with the exact codegen'd
-    *     cosine; [[topKSelect]] takes the final k.
+    *  2. re-rank — [[exactRerank]], the PQ family's tail: fetch ONLY the
+    *     shortlisted vectors (broadcast id join into the wide table),
+    *     score them with the exact cosine, keep the final k.
     *
     * Versus banding ([[Dedup.embeddingDupPairsLshOf]], kept for
     * thresholded pair mining where it's the right shape): a hamming
@@ -439,14 +450,10 @@ object Similarity {
                     k: Int = 10, shortlist: Int = 128): DataFrame = {
     val indexTable = ensureSignIndex(spark, dir)
     val c = math.max(shortlist, 2 * k)
-    val emb = embWithNorm(spark, dir)
-    val queries = emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"), signature(col("embedding")).as("q_bits"))
-
-    val index = spark.table(indexTable)
-    val short = index
-      .crossJoin(broadcast(queries.select(col("q_id"), col("q_bits"))))
+    val qBits = embDouble(spark, dir).where(col("vec_id") < nQueries)
+      .select(col("vec_id").as("q_id"), signature(col("embedding")).as("q_bits"))
+    val short = spark.table(indexTable)
+      .crossJoin(broadcast(qBits))
       .where(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"))
       .agg(GraftFunctions.topK(
@@ -454,16 +461,7 @@ object Similarity {
           col("vec_id").as("cand_id")), c).as("top"))
       .select(col("q_id"), explode(col("top")).as("e"))
       .select(col("q_id"), col("e.cand_id").as("cand_id"))
-
-    val scored = emb
-      .select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-        col("nrm").as("cn"))
-      .join(broadcast(short), "cand_id")
-      .join(broadcast(queries.select(col("q_id"), col("qv"), col("qn"))), "q_id")
-      .select(col("q_id"), col("cand_id"),
-        round(GraftFunctions.dot(col("qv"), col("cv")) /
-          nullif(col("qn") * col("cn"), lit(0.0)), 6).as("cos_sim"))
-    topKSelect(scored, k)
+    exactRerank(spark, dir, short, nQueries, k)
   }
 
   /** Radius (range) search via the persisted sign index: every corpus
@@ -492,9 +490,7 @@ object Similarity {
     val indexTable = ensureSignIndex(spark, dir)
     val hamCut = Dedup.hamCutFor(64, minCos)
     val emb = embWithNorm(spark, dir)
-    val queries = emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"), signature(col("embedding")).as("q_bits"))
+    val queries = queryVecs(emb, nQueries, signature(col("embedding")).as("q_bits"))
     val cand = spark.table(indexTable)
       .crossJoin(broadcast(queries.select(col("q_id"), col("q_bits"))))
       .where(col("vec_id") =!= col("q_id") &&
@@ -503,13 +499,10 @@ object Similarity {
     // exact verify on candidates only; candidate volume is data-dependent
     // (radius semantics), so the join strategy is left to AQE — never a
     // forced broadcast of an unbounded set
-    emb.select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-        col("nrm").as("cn"))
+    candVecs(emb)
       .join(cand, "cand_id")
       .join(broadcast(queries.select(col("q_id"), col("qv"), col("qn"))), "q_id")
-      .select(col("q_id"), col("cand_id"),
-        round(GraftFunctions.dot(col("qv"), col("cv")) /
-          nullif(col("qn") * col("cn"), lit(0.0)), 6).as("cos_sim"))
+      .select(col("q_id"), col("cand_id"), cosSim)
       .where(col("cos_sim") >= minCos)
       .orderBy(col("q_id"), col("cos_sim").desc, col("cand_id"))
   }
@@ -610,6 +603,12 @@ object Similarity {
       val mod = adaptiveSampleMod(embCount(spark, dir, fp), cap)
       fitCentroids(fitSample(spark, dir, mod, cap), nlist)
     }
+
+  /** The quantizer of the published layout: [[quantizerCentroids]] at
+    * the corpus's [[adaptiveNlist]] rung. */
+  private def layoutCentroids(spark: SparkSession, dir: String,
+                              fp: Long): Array[Array[Double]] =
+    quantizerCentroids(spark, dir, adaptiveNlist(embCount(spark, dir, fp)), fp = fp)
 
   /** Cell-count threshold above which [[fitCentroids]] switches from one
     * flat Lloyd fit to the two-level coarse-then-residual fit. 256 keeps
@@ -752,39 +751,37 @@ object Similarity {
                     k: Int = 10, nProbe: Int = 0): DataFrame = {
     val fp = embFingerprint(spark, dir)
     val cellsTable = ensureIvfCellsFp(spark, dir, fp)
-    val nlist = adaptiveNlist(embCount(spark, dir, fp))
-    // nProbe = 0 (default) sizes the probe to the layout rung — the
-    // `bands = 0` convention of semanticDedupLsh
-    val probes = if (nProbe == 0) adaptiveNProbe(nlist) else nProbe
-    val centroids = quantizerCentroids(spark, dir, nlist, fp = fp)
+    val probed = probedCells(spark, dir, fp,
+      queryVecs(embWithNorm(spark, dir), nQueries), nProbe)
+    val scored = candVecs(spark.table(cellsTable), col("cell"))
+      .join(broadcast(probed), Seq("cell"))
+      .where(col("q_id") =!= col("cand_id"))
+      .select(col("q_id"), col("cand_id"), cosSim)
+    topKSelect(scored, k)
+  }
 
-    // centroid table is tiny: broadcast to rank cells per query
-    val centDf = spark.createDataFrame(
-      centroids.toIndexedSeq.zipWithIndex.map { case (c, i) => (i, c) })
+  /** Each query's `nProbe` nearest IVF cells (`nProbe = 0` sizes the probe
+    * to the layout rung — the `bands = 0` convention of semanticDedupLsh):
+    * the tiny centroid table is broadcast and ranked per query by cosine
+    * to the query's RAW vector `qv` (norm `qn`), ties to the lower cell.
+    * Returns the caller's query columns plus `cell`; the caller chooses
+    * the query frame ([[embWithNorm]] or [[embNormalized]] rows). */
+  private def probedCells(spark: SparkSession, dir: String, fp: Long,
+                          queries: DataFrame, nProbe: Int): DataFrame = {
+    val nlist = adaptiveNlist(embCount(spark, dir, fp))
+    val probes = if (nProbe == 0) adaptiveNProbe(nlist) else nProbe
+    val centDf = spark.createDataFrame(quantizerCentroids(spark, dir, nlist, fp = fp)
+        .toIndexedSeq.zipWithIndex.map { case (c, i) => (i, c) })
       .toDF("cell", "centroid")
-    val queries = embWithNorm(spark, dir).where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"))
-    val probed = queries.crossJoin(broadcast(centDf))
-      .withColumn("cdist",
-        GraftFunctions.dot(col("qv"), col("centroid").cast("array<double>")) /
-        nullif(col("qn") * sqrt(GraftFunctions.dot(col("centroid").cast("array<double>"),
-          col("centroid").cast("array<double>"))), lit(0.0)))
+    val cent = col("centroid").cast("array<double>")
+    queries.crossJoin(broadcast(centDf))
+      .withColumn("cdist", GraftFunctions.dot(col("qv"), cent) /
+        nullif(col("qn") * sqrt(GraftFunctions.dot(cent, cent)), lit(0.0)))
       .withColumn("crnk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
           .orderBy(col("cdist").desc, col("cell"))))
       .where(col("crnk") <= probes)
-      .select(col("q_id"), col("qv"), col("qn"), col("cell"))
-
-    val cands = spark.table(cellsTable)
-      .select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-        col("nrm").as("cn"), col("cell"))
-    val scored = cands.join(broadcast(probed), Seq("cell"))
-      .where(col("q_id") =!= col("cand_id"))
-      .select(col("q_id"), col("cand_id"),
-        round(GraftFunctions.dot(col("qv"), col("cv")) / nullif(col("qn") * col("cn"), lit(0.0)), 6)
-          .as("cos_sim"))
-    topKSelect(scored, k)
+      .select((queries.columns :+ "cell").map(col): _*)
   }
 
   /** Symmetric int8 scalar quantization diagnostics — the storage-side
@@ -884,9 +881,12 @@ object Similarity {
     * `q_sim_ivfpq_topk` are all hash-checked END TO END with this dump as
     * input. Scalar-only layout: one row per centroid component
     * (subspace, code, dim, value). */
-  def pqCodebooksDump(spark: SparkSession, dir: String): DataFrame = {
-    val fp = embFingerprint(spark, dir)
-    val cbs = pqCodebooks(spark, dir, fp)
+  def pqCodebooksDump(spark: SparkSession, dir: String): DataFrame =
+    codebooksDump(spark, pqCodebooks(spark, dir, embFingerprint(spark, dir)))
+
+  /** A [M][ksub][subDim] codebook bank as scalar dump rows. */
+  private def codebooksDump(spark: SparkSession,
+                            cbs: Array[Array[Array[Double]]]): DataFrame =
     spark.createDataFrame(
       for { (bank, m) <- cbs.toIndexedSeq.zipWithIndex
             (c, j) <- bank.toIndexedSeq.zipWithIndex
@@ -894,16 +894,14 @@ object Similarity {
         yield (m, j, d, v))
       .toDF("subspace", "code", "dim", "value")
       .orderBy(col("subspace"), col("code"), col("dim"))
-  }
 
-  /** Per-subspace code columns (code_0 … code_7): argmin over the
-    * subspace codebook of ‖c‖² − 2·v_m·c with lowest-code tie-break —
-    * the SAME fused [[graft.functions.CellArgMin]] codegen the IVF
-    * assignment uses, over the normalized subvector slice. */
-  private def pqCodeCols(cbs: Array[Array[Array[Double]]]): Seq[Column] =
+  /** Per-subspace code columns (code_0 … code_7) of the vector column `v`:
+    * argmin over the subspace codebook of ‖c‖² − 2·v_m·c with lowest-code
+    * tie-break — the SAME fused [[graft.functions.CellArgMin]] codegen the
+    * IVF assignment uses, over the subvector slice. */
+  private def codeCols(v: Column, cbs: Array[Array[Array[Double]]]): Seq[Column] =
     (0 until pqM).map { m =>
-      GraftFunctions.cellArgMin(
-        slice(col("nv"), m * pqSubDim + 1, pqSubDim),
+      GraftFunctions.cellArgMin(slice(v, m * pqSubDim + 1, pqSubDim),
         typedLit(cbs(m).map(_.toSeq).toSeq)).as(s"code_$m")
     }
 
@@ -930,7 +928,7 @@ object Similarity {
                                  fp: Long): String = {
     val cbs = pqCodebooks(spark, dir, fp)
     FeatureStore.ensurePlainTable(spark,
-      embNormalized(spark, dir).select(col("vec_id") +: pqCodeCols(cbs): _*),
+      embNormalized(spark, dir).select(col("vec_id") +: codeCols(col("nv"), cbs): _*),
       s"graft_pq_codes_${Relational.dirSlug(dir)}", fp)
   }
 
@@ -939,33 +937,35 @@ object Similarity {
     * normalization + per-subspace argmin from the [[pqCodebooksDump]]
     * parquet, so the code assignment itself is hash-verified, not just
     * the retrieval built on it. */
-  def pqCodesDump(spark: SparkSession, dir: String): DataFrame = {
-    val fp = embFingerprint(spark, dir)
-    val t = ensurePqCodes(spark, dir, fp)
-    spark.table(t)
+  def pqCodesDump(spark: SparkSession, dir: String): DataFrame =
+    codesDump(spark, ensurePqCodes(spark, dir, embFingerprint(spark, dir)))
+
+  /** A published code table exploded to scalar (vec_id, subspace, code). */
+  private def codesDump(spark: SparkSession, table: String): DataFrame =
+    spark.table(table)
       .select(col("vec_id"),
         posexplode(array((0 until pqM).map(m => col(s"code_$m")): _*)))
       .select(col("vec_id"), col("pos").cast("long").as("subspace"),
         col("col").cast("long").as("code"))
       .orderBy(col("vec_id"), col("subspace"))
-  }
 
-  /** Queries frame with the per-query ADC distance table:
-    * (q_id, dtab[M][ksub]) where dtab[m][j] = ‖q_m − c_{m,j}‖² as an
-    * ordered left fold — computed in ONE projection from the codebook
-    * literal (nQueries · M · ksub terms, no shuffle, no collect). */
+  /** ADC distance table dtab[M][ksub] of the query vector column `qv`:
+    * dtab[m][j] = ‖q_m − c_{m,j}‖² as an ordered left fold — ONE
+    * projection off the codebook literal (no shuffle, no collect). */
+  private def dtab(qv: Column, cbs: Array[Array[Array[Double]]]): Column =
+    transform(typedLit(cbs.map(_.map(_.toSeq).toSeq).toSeq), (bank, m) =>
+      transform(bank, c =>
+        aggregate(zip_with(slice(qv, m * lit(pqSubDim) + 1, lit(pqSubDim)), c,
+          (x, y) => (x - y) * (x - y)), lit(0.0), (acc, e) => acc + e)))
+
+  /** Queries frame (q_id, dtab) for plain PQ: one table per query over
+    * its normalized vector. */
   private def pqQueryDtab(spark: SparkSession, dir: String, nQueries: Int,
-                          cbs: Array[Array[Array[Double]]]): DataFrame = {
-    val cbLit = typedLit(cbs.map(_.map(_.toSeq).toSeq).toSeq)
+                          cbs: Array[Array[Array[Double]]]): DataFrame =
     embNormalized(spark, dir).where(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("nv").as("qnv"))
-      .withColumn("dtab", transform(cbLit, (bank, m) =>
-        transform(bank, c =>
-          aggregate(zip_with(slice(col("qnv"), m * lit(pqSubDim) + 1,
-            lit(pqSubDim)), c, (x, y) => (x - y) * (x - y)),
-            lit(0.0), (acc, e) => acc + e))))
+      .withColumn("dtab", dtab(col("qnv"), cbs))
       .select(col("q_id"), col("dtab"))
-  }
 
   /** ADC distance for a code row against the joined dtab: the fixed-order
     * left-to-right sum of the [[pqM]] table lookups — the DuckDB twin
@@ -983,18 +983,32 @@ object Similarity {
                           shortIds: DataFrame, nQueries: Int,
                           k: Int): DataFrame = {
     val emb = embWithNorm(spark, dir)
-    val qraw = emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"))
-    val slq = shortIds.join(qraw, "q_id")
-    val scored = emb
-      .select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-        col("nrm").as("cn"))
+    val slq = shortIds.join(queryVecs(emb, nQueries), "q_id")
+    val scored = candVecs(emb)
       .join(broadcast(slq), "cand_id")
-      .select(col("q_id"), col("cand_id"),
-        round(GraftFunctions.dot(col("qv"), col("cv")) /
-          nullif(col("qn") * col("cn"), lit(0.0)), 6).as("cos_sim"))
+      .select(col("q_id"), col("cand_id"), cosSim)
     topKSelect(scored, k)
+  }
+
+  /** ADC shortlist → exact re-rank, the tail of every PQ plan: `scanned`
+    * is a code table joined to the query distance tables (q_id, vec_id,
+    * code_*, dtab); each query keeps its `shortlist` lowest-ADC candidates
+    * (bounded heap, ties to the lower id; 0 = [[adaptiveShortlist]]) and
+    * [[exactRerank]] takes the exact-cosine top-k. */
+  private def adcTopK(spark: SparkSession, dir: String, fp: Long,
+                      scanned: DataFrame, shortlist: Int, nQueries: Int,
+                      k: Int): DataFrame = {
+    val sl = if (shortlist == 0)
+      adaptiveShortlist(embCount(spark, dir, fp)) else shortlist
+    val shortIds = scanned
+      .where(col("q_id") =!= col("vec_id"))
+      .select(col("q_id"), col("vec_id").as("cand_id"), adcExpr.as("adc"))
+      .groupBy(col("q_id"))
+      .agg(GraftFunctions.topK(struct(col("adc"), col("cand_id")), sl)
+        .as("top"))
+      .select(col("q_id"), explode(col("top")).as("e"))
+      .select(col("q_id"), col("e.cand_id").as("cand_id"))
+    exactRerank(spark, dir, shortIds, nQueries, k)
   }
 
   /** PQ asymmetric-distance top-k (ADC, Jégou et al. 2011): each query
@@ -1010,20 +1024,10 @@ object Similarity {
   def pqTopKCosine(spark: SparkSession, dir: String, nQueries: Int = 10,
                    k: Int = 10, shortlist: Int = 0): DataFrame = {
     val fp = embFingerprint(spark, dir)
-    val sl = if (shortlist == 0)
-      adaptiveShortlist(embCount(spark, dir, fp)) else shortlist
     val codesTable = ensurePqCodes(spark, dir, fp)
     val queries = pqQueryDtab(spark, dir, nQueries, pqCodebooks(spark, dir, fp))
-    val short = spark.table(codesTable)
-      .crossJoin(broadcast(queries))
-      .where(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("cand_id"), adcExpr.as("adc"))
-    val shortIds = short.groupBy(col("q_id"))
-      .agg(GraftFunctions.topK(struct(col("adc"), col("cand_id")), sl)
-        .as("top"))
-      .select(col("q_id"), explode(col("top")).as("e"))
-      .select(col("q_id"), col("e.cand_id").as("cand_id"))
-    exactRerank(spark, dir, shortIds, nQueries, k)
+    adcTopK(spark, dir, fp, spark.table(codesTable).crossJoin(broadcast(queries)),
+      shortlist, nQueries, k)
   }
 
   /** Publish the IVF-PQ layout: (vec_id, code_0 … code_7) hive-partitioned
@@ -1037,64 +1041,34 @@ object Similarity {
     * variant (one table per query, any probe count). */
   private[ops] def ensureIvfPqCodes(spark: SparkSession, dir: String,
                                     fp: Long): String = {
-    val nlist = adaptiveNlist(embCount(spark, dir, fp))
-    val cents = quantizerCentroids(spark, dir, nlist, fp = fp)
     val cbs = pqCodebooks(spark, dir, fp)
     FeatureStore.ensurePartitionedTable(spark,
-      assignCells(embNormalized(spark, dir), cents)
-        .select(col("vec_id") +: pqCodeCols(cbs) :+ col("cell"): _*),
+      assignCells(embNormalized(spark, dir), layoutCentroids(spark, dir, fp))
+        .select(col("vec_id") +: codeCols(col("nv"), cbs) :+ col("cell"): _*),
       s"graft_ivfpq_codes_${Relational.dirSlug(dir)}", "cell", fp)
   }
 
   /** IVF-PQ top-k — the composed billion-scale retrieval plan: rank the
-    * broadcast IVF centroids per query ([[ivfTopKCosine]]'s probe
-    * arithmetic, replayable from the centroid dump), scan ONLY the probed
+    * broadcast IVF centroids per query ([[probedCells]], replayable
+    * from the centroid dump), scan ONLY the probed
     * cell partitions of the PQ code table (dynamic partition pruning ×
     * 8-byte rows: at the 4096-cell / 128-probe rung that is ~3% of the
     * corpus at 1/64 width ≈ 0.05% of the raw-lake bytes per query batch),
-    * ADC-shortlist with the bounded heap, exact-cosine re-rank the
-    * bounded set. Hash-checked end to end from the two dumps
+    * then [[adcTopK]]. Hash-checked end to end from the two dumps
     * ([[ivfCentroidsDump]] + [[pqCodebooksDump]]). */
   def ivfPqTopKCosine(spark: SparkSession, dir: String, nQueries: Int = 10,
                       k: Int = 10, nProbe: Int = 0,
                       shortlist: Int = 0): DataFrame = {
     val fp = embFingerprint(spark, dir)
-    val sl = if (shortlist == 0)
-      adaptiveShortlist(embCount(spark, dir, fp)) else shortlist
     val codesTable = ensureIvfPqCodes(spark, dir, fp)
-    val nlist = adaptiveNlist(embCount(spark, dir, fp))
-    val probes = if (nProbe == 0) adaptiveNProbe(nlist) else nProbe
-    val centroids = quantizerCentroids(spark, dir, nlist, fp = fp)
-    val centDf = spark.createDataFrame(
-      centroids.toIndexedSeq.zipWithIndex.map { case (c, i) => (i, c) })
-      .toDF("cell", "centroid")
-    val queries = embWithNorm(spark, dir).where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"))
-    val probed = queries.crossJoin(broadcast(centDf))
-      .withColumn("cdist",
-        GraftFunctions.dot(col("qv"), col("centroid").cast("array<double>")) /
-        nullif(col("qn") * sqrt(GraftFunctions.dot(
-          col("centroid").cast("array<double>"),
-          col("centroid").cast("array<double>"))), lit(0.0)))
-      .withColumn("crnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
-          .orderBy(col("cdist").desc, col("cell"))))
-      .where(col("crnk") <= probes)
+    val probedQ = probedCells(spark, dir, fp,
+        queryVecs(embWithNorm(spark, dir), nQueries), nProbe)
       .select(col("q_id"), col("cell"))
-    val probedQ = probed
       .join(pqQueryDtab(spark, dir, nQueries, pqCodebooks(spark, dir, fp)),
         "q_id")
-    val short = spark.table(codesTable)
-      .join(broadcast(probedQ), Seq("cell"))
-      .where(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("cand_id"), adcExpr.as("adc"))
-    val shortIds = short.groupBy(col("q_id"))
-      .agg(GraftFunctions.topK(struct(col("adc"), col("cand_id")), sl)
-        .as("top"))
-      .select(col("q_id"), explode(col("top")).as("e"))
-      .select(col("q_id"), col("e.cand_id").as("cand_id"))
-    exactRerank(spark, dir, shortIds, nQueries, k)
+    adcTopK(spark, dir, fp,
+      spark.table(codesTable).join(broadcast(probedQ), Seq("cell")),
+      shortlist, nQueries, k)
   }
 
   // ------------------------------------------------------------------
@@ -1160,25 +1134,8 @@ object Similarity {
     * per-(query,cell) ADC tables, shortlist, re-rank) is replayable, so
     * `q_sim_rpq_codes` and `q_sim_ivfrpq_topk` are hash-checked with
     * this dump + [[ivfCentroidsDump]] as inputs. */
-  def rpqCodebooksDump(spark: SparkSession, dir: String): DataFrame = {
-    val fp = embFingerprint(spark, dir)
-    val cbs = residualPqCodebooks(spark, dir, fp)
-    spark.createDataFrame(
-      for { (bank, m) <- cbs.toIndexedSeq.zipWithIndex
-            (c, j) <- bank.toIndexedSeq.zipWithIndex
-            (v, d) <- c.toIndexedSeq.zipWithIndex }
-        yield (m, j, d, v))
-      .toDF("subspace", "code", "dim", "value")
-      .orderBy(col("subspace"), col("code"), col("dim"))
-  }
-
-  /** Per-subspace residual code columns over the `rv` column. */
-  private def rpqCodeCols(cbs: Array[Array[Array[Double]]]): Seq[Column] =
-    (0 until pqM).map { m =>
-      GraftFunctions.cellArgMin(
-        slice(col("rv"), m * pqSubDim + 1, pqSubDim),
-        typedLit(cbs(m).map(_.toSeq).toSeq)).as(s"code_$m")
-    }
+  def rpqCodebooksDump(spark: SparkSession, dir: String): DataFrame =
+    codebooksDump(spark, residualPqCodebooks(spark, dir, embFingerprint(spark, dir)))
 
   /** Broadcastable (cell, cn) frame of normalized coarse centroids. */
   private def normCentDf(spark: SparkSession,
@@ -1194,8 +1151,7 @@ object Similarity {
     * [[ensureIvfPqCodes]] — only the quantization frame changes. */
   private[ops] def ensureIvfRpqCodes(spark: SparkSession, dir: String,
                                      fp: Long): String = {
-    val nlist = adaptiveNlist(embCount(spark, dir, fp))
-    val cents = quantizerCentroids(spark, dir, nlist, fp = fp)
+    val cents = layoutCentroids(spark, dir, fp)
     val cbs = residualPqCodebooks(spark, dir, fp)
     // residual in ONE fused expression against the literal normalized-
     // centroid matrix (round 15): the broadcast (cell -> cn) join and
@@ -1207,7 +1163,7 @@ object Similarity {
       .withColumn("rv",
         GraftFunctions.cellResidual(col("nv"), col("cell"), cnLit))
     FeatureStore.ensurePartitionedTable(spark,
-      assigned.select(col("vec_id") +: rpqCodeCols(cbs) :+ col("cell"): _*),
+      assigned.select(col("vec_id") +: codeCols(col("rv"), cbs) :+ col("cell"): _*),
       s"graft_ivfrpq_codes_${Relational.dirSlug(dir)}", "cell", fp)
   }
 
@@ -1216,19 +1172,11 @@ object Similarity {
     * coarse assignment (centroids dump), centroid normalization, the
     * residual subtraction, and the per-subspace argmin (residual
     * codebooks dump), so the published layout itself is hash-verified. */
-  def rpqCodesDump(spark: SparkSession, dir: String): DataFrame = {
-    val fp = embFingerprint(spark, dir)
-    val t = ensureIvfRpqCodes(spark, dir, fp)
-    spark.table(t)
-      .select(col("vec_id"),
-        posexplode(array((0 until pqM).map(m => col(s"code_$m")): _*)))
-      .select(col("vec_id"), col("pos").cast("long").as("subspace"),
-        col("col").cast("long").as("code"))
-      .orderBy(col("vec_id"), col("subspace"))
-  }
+  def rpqCodesDump(spark: SparkSession, dir: String): DataFrame =
+    codesDump(spark, ensureIvfRpqCodes(spark, dir, embFingerprint(spark, dir)))
 
   /** Residual IVF-PQ top-k (IVFADC proper): probe ranking as in
-    * [[ivfPqTopKCosine]], but each (query, probed cell) pair builds its
+    * [[ivfPqTopKCosine]] (over [[embNormalized]] queries), but each (query, probed cell) pair builds its
     * OWN distance table over the query residual qnv − cn(cell) — the
     * table the candidate's residual codes look distances up in. The
     * probe frame is nQueries·nProbe rows (broadcast), so the extra
@@ -1238,50 +1186,18 @@ object Similarity {
                        k: Int = 10, nProbe: Int = 0,
                        shortlist: Int = 0): DataFrame = {
     val fp = embFingerprint(spark, dir)
-    val sl = if (shortlist == 0)
-      adaptiveShortlist(embCount(spark, dir, fp)) else shortlist
     val codesTable = ensureIvfRpqCodes(spark, dir, fp)
-    val nlist = adaptiveNlist(embCount(spark, dir, fp))
-    val probes = if (nProbe == 0) adaptiveNProbe(nlist) else nProbe
-    val centroids = quantizerCentroids(spark, dir, nlist, fp = fp)
-    val cbs = residualPqCodebooks(spark, dir, fp)
-    val centDf = spark.createDataFrame(
-      centroids.toIndexedSeq.zipWithIndex.map { case (c, i) => (i, c) })
-      .toDF("cell", "centroid")
-    val queries = embNormalized(spark, dir).where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"), col("nv").as("qnv"))
-    val probed = queries.crossJoin(broadcast(centDf))
-      .withColumn("cdist",
-        GraftFunctions.dot(col("qv"), col("centroid").cast("array<double>")) /
-        nullif(col("qn") * sqrt(GraftFunctions.dot(
-          col("centroid").cast("array<double>"),
-          col("centroid").cast("array<double>"))), lit(0.0)))
-      .withColumn("crnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
-          .orderBy(col("cdist").desc, col("cell"))))
-      .where(col("crnk") <= probes)
+    val queries = queryVecs(embNormalized(spark, dir), nQueries,
+      col("nv").as("qnv"))
+    val probedQ = probedCells(spark, dir, fp, queries, nProbe)
       .select(col("q_id"), col("cell"), col("qnv"))
-    val cbLit = typedLit(cbs.map(_.map(_.toSeq).toSeq).toSeq)
-    val probedQ = probed
-      .join(broadcast(normCentDf(spark, centroids)), "cell")
+      .join(broadcast(normCentDf(spark, layoutCentroids(spark, dir, fp))), "cell")
       .withColumn("qrv", zip_with(col("qnv"), col("cn"), (x, y) => x - y))
-      .withColumn("dtab", transform(cbLit, (bank, m) =>
-        transform(bank, c =>
-          aggregate(zip_with(slice(col("qrv"), m * lit(pqSubDim) + 1,
-            lit(pqSubDim)), c, (x, y) => (x - y) * (x - y)),
-            lit(0.0), (acc, e) => acc + e))))
+      .withColumn("dtab", dtab(col("qrv"), residualPqCodebooks(spark, dir, fp)))
       .select(col("q_id"), col("cell"), col("dtab"))
-    val short = spark.table(codesTable)
-      .join(broadcast(probedQ), Seq("cell"))
-      .where(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("cand_id"), adcExpr.as("adc"))
-    val shortIds = short.groupBy(col("q_id"))
-      .agg(GraftFunctions.topK(struct(col("adc"), col("cand_id")), sl)
-        .as("top"))
-      .select(col("q_id"), explode(col("top")).as("e"))
-      .select(col("q_id"), col("e.cand_id").as("cand_id"))
-    exactRerank(spark, dir, shortIds, nQueries, k)
+    adcTopK(spark, dir, fp,
+      spark.table(codesTable).join(broadcast(probedQ), Seq("cell")),
+      shortlist, nQueries, k)
   }
 
   // ------------------------------------------------------------------
@@ -1381,18 +1297,12 @@ object Similarity {
   def hardNegatives(spark: SparkSession, dir: String, nQueries: Int = 10,
                     nNeg: Int = 5): DataFrame = {
     val emb = embWithNorm(spark, dir)   // carries the label column
-    val queries = emb.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"), col("label").as("q_label"))
-    val cands = emb.select(col("vec_id").as("cand_id"),
-      col("embedding").as("cv"), col("nrm").as("cn"),
-      col("label").as("cand_label"))
-    val scored = cands.crossJoin(broadcast(queries))
+    val queries = queryVecs(emb, nQueries, col("label").as("q_label"))
+    val scored = candVecs(emb, col("label").as("cand_label"))
+      .crossJoin(broadcast(queries))
       .where(col("q_id") =!= col("cand_id") &&
         col("q_label") =!= col("cand_label"))
-      .select(col("q_id"), col("q_label"), col("cand_id"), col("cand_label"),
-        round(GraftFunctions.dot(col("qv"), col("cv")) /
-          nullif(col("qn") * col("cn"), lit(0.0)), 6).as("cos_sim"))
+      .select(col("q_id"), col("q_label"), col("cand_id"), col("cand_label"), cosSim)
     val keyed = struct((-col("cos_sim")).as("negcos"), col("cand_id"),
       col("cand_label"), col("cos_sim"))
     scored.groupBy(col("q_id"), col("q_label"))

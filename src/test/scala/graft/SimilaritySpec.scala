@@ -599,6 +599,12 @@ class SimilaritySpec extends SparkSpec {
       nProbe = Similarity.ivfNlist).collect()
     val pq = Similarity.pqTopKCosine(spark, sf, nQueries = 5, k = 10).collect()
     assert(all.map(_.toString).sameElements(pq.map(_.toString)))
+    // the same pin for plain IVF: every cell probed, the exact-cosine
+    // top-k over the cells table is the brute-force top-k row for row
+    val ivfAll = Similarity.ivfTopKCosine(spark, sf, nQueries = 5, k = 10,
+      nProbe = Similarity.ivfNlist).collect()
+    val exact = Similarity.topKCosine(spark, sf, nQueries = 5, k = 10).collect()
+    assert(ivfAll.map(_.toString).sameElements(exact.map(_.toString)))
   }
 
   test("PQ 256-code rung: planted clusters, ADC and IVF-PQ recall@10 high") {
