@@ -5,6 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.explore.Stats
 import graft.model.Metrics
 import graft.ops.{Dedup, Events, Features, Graph, Layout, Materialize, Mining, Multimodal, Privacy, Relational, Similarity, Text, TimeSeries, Validate}
+import graft.ops.Dedup.{combine2Sql, combine3Sql, polyFoldSql, polyHashSql, tokenHashCtes, wideKeySql}
+import graft.ops.Layout.centsSql
+import graft.ops.Similarity.{cosSimSql, dimsSql, dotSql, embDoubleSql, embNormCtes, normSql, sumDimsSql, topKSql}
+import graft.ops.Text.tokensSql
+import graft.sources.Tables
 
 /** One declared query: its name, its declarative DataFrame plan builder
   * `(spark, sfDir) => DataFrame`, and, when its semantics are
@@ -30,6 +35,19 @@ final case class QuerySpec(
   * engines: every computed column is aliased identically, float
   * aggregates are rounded, and each query ends in a total ORDER BY with
   * unique tiebreakers.
+  *
+  * An oracle fragment with a Scala twin is built by the SQL builder
+  * beside that twin, so the two engines' definitions sit side by side:
+  * the token poly-hash ([[Dedup.polyHashSql]], [[Dedup.polyFoldSql]]),
+  * the whitespace tokenizer ([[Text.tokensSql]]), tokenize-then-hash
+  * ([[Dedup.tokenHashCtes]]), the embedding-width vector folds and
+  * cosine ranking ([[Similarity.dotSql]], [[Similarity.normSql]],
+  * [[Similarity.embNormCtes]], [[Similarity.cosSimSql]],
+  * [[Similarity.topKSql]]), exact cents ([[Layout.centsSql]]), the
+  * planted snapshot versions ([[Layout.ttVersionCtes]]), the trade fact
+  * join ([[Graph.tradePairsSql]]) and the media payload
+  * ([[Multimodal.mediaGeometrySql]] and its siblings). Fragments shared
+  * only between twins are the private builders below the registry.
   */
 object SparkEntry {
 
@@ -334,12 +352,9 @@ object SparkEntry {
          |ORDER BY doc_id""".stripMargin
     }),
     QuerySpec("q_sample_group_k", (s, d) => Relational.groupReservoirSample(s, d),
-      Some("""WITH h AS (
+      Some(s"""WITH h AS (
         | SELECT event_type, event_id, user_id, round(value, 2) AS value,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(string_split(CAST(event_id AS VARCHAR), ''),
-        |      c -> CAST(ascii(c) AS BIGINT))),
-        |    (acc, c) -> (acc * 31 + c) % 1000000007) AS rk
+        |  ${polyHashSql("CAST(event_id AS VARCHAR)")} AS rk
         | FROM events),
         |r AS (
         | SELECT event_type, event_id, user_id, value,
@@ -408,17 +423,7 @@ object SparkEntry {
         | count(*) AS n_events, round(sum(value),2) AS sum_value
         |FROM x GROUP BY 1 ORDER BY 1""".stripMargin)),
     QuerySpec("q_evt_session", (s, d) => Events.sessionize(s, d),
-      Some("""WITH o AS (
-        | SELECT user_id, ts, value,
-        |  CASE WHEN lag(ts) OVER w IS NULL
-        |        OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
-        |       THEN 1 ELSE 0 END AS new_s
-        | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        |), g AS (
-        | SELECT user_id, ts, value,
-        |  sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-        |                   ROWS UNBOUNDED PRECEDING) AS sid
-        | FROM o)
+      Some(s"""WITH ${Events.sessionCtes(", value")}
         |SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,
         | count(*) AS n_events, round(sum(value),2) AS sum_value
         |FROM g GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin)),
@@ -460,18 +465,7 @@ object SparkEntry {
         |   RANGE BETWEEN 3600000 PRECEDING AND CURRENT ROW) AS trail_1h_n
         |FROM events ORDER BY event_id""".stripMargin)),
     QuerySpec("q_evt_range_join", (s, d) => Events.sessionEventOverlap(s, d),
-      Some("""WITH o AS (
-        | SELECT user_id, ts,
-        |  CASE WHEN lag(ts) OVER w IS NULL
-        |        OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
-        |       THEN 1 ELSE 0 END AS new_s
-        | FROM events WHERE user_id < 100
-        | WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |g AS (
-        | SELECT user_id, ts,
-        |  sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-        |                   ROWS UNBOUNDED PRECEDING) AS sid
-        | FROM o),
+      Some(s"""WITH ${Events.sessionCtes("", " WHERE user_id < 100")},
         |s AS (SELECT user_id AS s_user, min(ts) AS s_start, max(ts) AS s_end
         |      FROM g GROUP BY user_id, sid)
         |SELECT s_user AS user_id,
@@ -609,14 +603,8 @@ object SparkEntry {
         |GROUP BY 1 ORDER BY n DESC, path LIMIT 20""".stripMargin)),
     QuerySpec("q_graph_pagerank", (s, d) => Graph.nationTradePageRank(s, d), Some(pagerankSql(5))),
     QuerySpec("q_valid_cdc_apply", (s, d) => Validate.cdcMergeApply(s, d), Some {
-      val (addM, chgM, remM) = Validate.snapshotDiffMods
-      s"""WITH o AS (
-         | SELECT o_orderkey AS k, o_orderpriority AS prio,
-         |  CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-         | FROM orders),
-         |upd AS (SELECT k, prio, cents * 110 // 100 AS cents FROM o
-         |        WHERE k % $chgM = 0 AND k % $remM <> 0),
-         |ins AS (SELECT -(k + 1) AS k, prio, cents FROM o WHERE k % $addM = 0),
+      val (_, chgM, remM) = Validate.snapshotDiffMods
+      s"""WITH $changeBatchCtes,
          |applied AS (
          | SELECT * FROM o WHERE k % $remM <> 0 AND k % $chgM <> 0
          | UNION ALL SELECT * FROM upd
@@ -662,27 +650,11 @@ object SparkEntry {
          |LIMIT ${Text.sparseSimTopK}""".stripMargin)),
     QuerySpec("q_er_clusters", (s, d) => Mining.entityClusters(s, d),
       Some(sparsePairCtes.replaceFirst("WITH ", "WITH RECURSIVE ") +
-        """
-        |, sym AS (
-        | SELECT doc_a AS src, doc_b AS dst FROM spairs
-        | UNION SELECT doc_b, doc_a FROM spairs),
-        |reach AS (
-        | SELECT src, dst FROM sym
-        | UNION
-        | SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-        |lab AS (SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
-        |        FROM reach GROUP BY src)
+        s""",
+        |${componentCtes("spairs", "doc")}
         |SELECT doc_id, cluster_rep FROM lab ORDER BY doc_id""".stripMargin)),
     QuerySpec("q_graph_triangles", (s, d) => Graph.tradeTriangles(s, d),
-      Some("""WITH und AS (
-        | SELECT least(c_nationkey, s_nationkey) AS a,
-        |  greatest(c_nationkey, s_nationkey) AS b, count(*) AS w
-        | FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        | WHERE c_nationkey <> s_nationkey
-        | GROUP BY 1, 2),
-        |tot AS (SELECT count(*) AS ne, CAST(sum(w) AS BIGINT) AS sw FROM und),
+      Some(s"""WITH $tradeUndCtes,
         |strong AS (SELECT a, b FROM und, tot WHERE w * ne > sw),
         |tri AS (
         | SELECT e1.a, e1.b, e2.b AS c
@@ -715,15 +687,7 @@ object SparkEntry {
            | FROM $prev LEFT JOIN b$i ON $prev.node = b$i.node)""".stripMargin
       }.mkString(",\n")
       val last = s"l${Graph.lpaIters}"
-      s"""WITH und AS (
-         | SELECT least(c_nationkey, s_nationkey) AS a,
-         |  greatest(c_nationkey, s_nationkey) AS b, count(*) AS w
-         | FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |  JOIN customer ON o_custkey = c_custkey
-         |  JOIN supplier ON l_suppkey = s_suppkey
-         | WHERE c_nationkey <> s_nationkey
-         | GROUP BY 1, 2),
-         |tot AS (SELECT count(*) AS ne, CAST(sum(w) AS BIGINT) AS sw FROM und),
+      s"""WITH $tradeUndCtes,
          |strong AS (SELECT CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b, w
          |           FROM und, tot WHERE w * ne > sw),
          |sym AS (SELECT a AS src, b AS dst, w FROM strong
@@ -741,13 +705,9 @@ object SparkEntry {
     // ≤4-leg walk from the source — the exact walk set the Spark side's
     // 4 Bellman-Ford relaxation rounds minimize over
     QuerySpec("q_graph_shortest", (s, d) => Graph.boundedShortestPaths(s, d),
-      Some("""WITH RECURSIVE e0 AS (
+      Some(s"""WITH RECURSIVE e0 AS (
         | SELECT c_nationkey AS src, s_nationkey AS dst, count(*) AS w
-        | FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        | WHERE c_nationkey <> s_nationkey
-        | GROUP BY 1, 2),
+        | ${Graph.tradePairsSql}),
         |mx AS (SELECT max(w) AS mw FROM e0),
         |ce AS (SELECT src, dst, CAST(mw + 1 - w AS BIGINT) AS ecost
         |  FROM e0, mx),
@@ -884,7 +844,7 @@ object SparkEntry {
     // surfacing under v3's order_cnt name (a by-name read would yield the
     // -1 sentinel and break the hash)
     QuerySpec("q_layout_schema_evo", (s, d) => Layout.schemaEvolutionDiff(s, d),
-      Some("""WITH v1 AS (
+      Some(s"""WITH v1 AS (
         | SELECT o_orderpriority,
         |  CAST(CAST(count(*) AS INT) AS BIGINT) AS n_orders,
         |  CAST(NULL AS BIGINT) AS cents
@@ -894,7 +854,7 @@ object SparkEntry {
         | GROUP BY 1),
         |v2 AS (
         | SELECT o_orderpriority, count(*) AS n_orders,
-        |  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
+        |  CAST(sum(${centsSql("o_totalprice")})
         |    AS BIGINT) AS cents
         | FROM orders GROUP BY 1),
         |v3 AS (
@@ -1004,21 +964,7 @@ object SparkEntry {
     // row rules — inserts carry new values, deletes old, updates one
     // preimage + one postimage
     QuerySpec("q_layout_cdf", (s, d) => Layout.changeFeedBetweenVersions(s, d),
-      Some("""WITH v1 AS (
-        | SELECT o_orderpriority, count(*) AS n_orders,
-        |  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-        |    AS BIGINT) AS cents
-        | FROM orders
-        | WHERE o_orderdate < TIMESTAMP '1997-01-01'
-        |   AND o_orderpriority <> '1-URGENT'
-        | GROUP BY 1
-        | UNION ALL
-        | SELECT '0-LEGACY', CAST(0 AS BIGINT), CAST(0 AS BIGINT)),
-        |v2 AS (
-        | SELECT o_orderpriority, count(*) AS n_orders,
-        |  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-        |    AS BIGINT) AS cents
-        | FROM orders GROUP BY 1),
+      Some(s"""WITH ${Layout.ttVersionCtes},
         |j AS (SELECT coalesce(v1.o_orderpriority, v2.o_orderpriority) AS p,
         |  v1.n_orders AS o_n, v1.cents AS o_c,
         |  v2.n_orders AS n_n, v2.cents AS n_c,
@@ -1075,11 +1021,11 @@ object SparkEntry {
     // spark.sql — bit-identical to q_snap_merge, same twin
     QuerySpec("q_sql_merge", (s, d) => Layout.sqlMergeSummary(s, d), Some(snapMergeSql)),
     QuerySpec("q_text_token_accounting", (s, d) => Text.tokenAccounting(s, d),
-      Some("""SELECT doc_id,
-        | CAST(len(list_filter(string_split(text, ' '), t -> len(t) > 0)) AS BIGINT) AS n_ws_tokens,
+      Some(s"""SELECT doc_id,
+        | CAST(len(${tokensSql("text")}) AS BIGINT) AS n_ws_tokens,
         | CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+')) AS BIGINT) AS n_re_tokens,
         | list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |   list_transform(list_filter(string_split(text, ' '), t -> len(t) > 0),
+        |   list_transform(${tokensSql("text")},
         |     t -> CAST(ceil(len(t) / 4.0) AS BIGINT))),
         |   (acc, x) -> acc + x) AS n_subwords
         |FROM documents ORDER BY doc_id""".stripMargin)),
@@ -1091,23 +1037,11 @@ object SparkEntry {
     // exact-cosine top-10 from RAW embeddings — the dump is input, not the
     // answer. Literals mirror ivfTopKCosine's defaults.
     QuerySpec("q_sim_ivf_topk", (s, d) => Similarity.ivfTopKCosine(s, d),
-      Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |n AS (SELECT vec_id, v,
-         |  sqrt(list_reduce(list_transform(generate_series(1,64), i -> v[i]*v[i]), (x,y) -> x+y)) AS nrm
-         | FROM e),
+      Some(s"""WITH ${embNormCtes("e", "n")},
          |${ivfCtes("n")},
          |q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n WHERE vec_id < 10),
-         |scored AS (SELECT q.q_id, n.vec_id AS cand_id,
-         |  round(list_reduce(list_transform(generate_series(1,64), i -> q.qv[i]*n.v[i]), (x,y) -> x+y)
-         |   / nullif(q.qn * n.nrm, 0.0), 6) AS cos_sim
-         | FROM ipr JOIN q ON ipr.q_id = q.q_id
-         |      JOIN iasg ON iasg.cell = ipr.cell
-         |      JOIN n ON n.vec_id = iasg.vec_id
-         | WHERE ipr.cr <= 8 AND n.vec_id <> q.q_id)
-         |SELECT q_id, cand_id, cos_sim, CAST(rnk AS BIGINT) AS rnk FROM (
-         | SELECT *, row_number() OVER (PARTITION BY q_id
-         |   ORDER BY cos_sim DESC, cand_id) AS rnk
-         | FROM scored) t WHERE rnk <= 10 ORDER BY q_id, rnk""".stripMargin)),
+         |scored AS (${ivfScored("q", 8)})
+         |${topKSql("scored", 10)} ORDER BY q_id, rnk""".stripMargin)),
     // IVF recall-vs-probe operating curve: recall@10 vs exact at probe
     // levels 1/2/4/8. The twin sweeps the probe cutoff over the same ladder
     // with brute ground truth (simTopkCtes) and the q_sim_ivf_topk twin's
@@ -1120,17 +1054,8 @@ object SparkEntry {
         "qq AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n WHERE vec_id < 10)"
       val perLevel = levels.map { p =>
         s""",
-           |sc$p AS (SELECT qq.q_id, n.vec_id AS cand_id,
-           |  round(list_reduce(list_transform(generate_series(1,64), i -> qq.qv[i]*n.v[i]), (x,y) -> x+y)
-           |   / nullif(qq.qn * n.nrm, 0.0), 6) AS cos_sim
-           | FROM ipr JOIN qq ON ipr.q_id = qq.q_id
-           |      JOIN iasg ON iasg.cell = ipr.cell
-           |      JOIN n ON n.vec_id = iasg.vec_id
-           | WHERE ipr.cr <= $p AND n.vec_id <> qq.q_id),
-           |tp$p AS (SELECT q_id, cand_id FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY q_id
-           |    ORDER BY cos_sim DESC, cand_id) AS rnk FROM sc$p) t
-           |  WHERE rnk <= 10),
+           |sc$p AS (${ivfScored("qq", p)}),
+           |tp$p AS (${topKSql(s"sc$p", 10, "q_id, cand_id")}),
            |ht$p AS (SELECT count(*) AS n FROM topk
            |         JOIN tp$p USING (q_id, cand_id))""".stripMargin
       }.mkString
@@ -1196,20 +1121,14 @@ object SparkEntry {
     // different-label candidates per labeled query, ranked by exact
     // cosine (score desc, cand_id)
     QuerySpec("q_sim_hard_negatives", (s, d) => Similarity.hardNegatives(s, d),
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings),
-        |n AS (SELECT vec_id, v, label,
-        |  sqrt(list_reduce(list_transform(generate_series(1,64), i -> v[i]*v[i]), (x,y) -> x+y)) AS nrm
-        | FROM e),
+      Some(s"""WITH ${embNormCtes("e", "n", extra = ", label")},
         |p AS (SELECT q.vec_id AS q_id, q.label AS q_label,
         |  c.vec_id AS cand_id, c.label AS cand_label,
-        |  round(list_reduce(list_transform(generate_series(1,64), i -> q.v[i]*c.v[i]), (x,y) -> x+y)
-        |   / (q.nrm * c.nrm), 6) AS cos_sim
+        |  ${cosSimSql("q", "c")} AS cos_sim
         | FROM n q, n c
         | WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id AND q.label <> c.label)
-        |SELECT q_id, q_label, cand_id, cand_label, cos_sim, CAST(rnk AS BIGINT) AS rnk
-        |FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-        |        ORDER BY cos_sim DESC, cand_id) AS rnk FROM p) t
-        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin)),
+        |${topKSql("p", 5, "q_id, q_label, cand_id, cand_label, cos_sim, CAST(rnk AS BIGINT) AS rnk")}
+        |ORDER BY q_id, rnk""".stripMargin)),
     // PCA: rows-only model dump + hash-checked centered projection
     QuerySpec("q_sim_pca_components", (s, d) => Similarity.pcaComponentsDump(s, d)),
     // PCA projection replay over the q_sim_pca_components dump:
@@ -1221,10 +1140,9 @@ object SparkEntry {
          |mu AS (SELECT list(value ORDER BY dim) AS m
          | FROM '${graft.explore.Stats.verifyOutToken}/q_sim_pca_components/*.parquet'
          | WHERE component = -1),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
+         |e AS (SELECT vec_id, $embDoubleSql FROM embeddings)
          |SELECT e.vec_id, CAST(pc.component AS BIGINT) AS component,
-         | round(list_reduce(list_transform(generate_series(1,64),
-         |   i -> (e.v[i] - mu.m[i]) * pc.c[i]), (x,y) -> x+y), 6) AS value
+         | round(${sumDimsSql("(e.v[i] - mu.m[i]) * pc.c[i]")}, 6) AS value
          |FROM e CROSS JOIN pc CROSS JOIN mu
          |ORDER BY vec_id, component""".stripMargin)),
     // residual IVF-PQ (IVFADC proper): codes quantize nv − cn(cell);
@@ -1248,11 +1166,10 @@ object SparkEntry {
          |pq AS (SELECT vec_id AS q_id, w AS qw FROM pw WHERE vec_id < 10),
          |iprobed AS (SELECT q_id, cell FROM ipr WHERE cr <= 8),
          |rqd AS (SELECT pq.q_id, iprobed.cell,
-         |  list_transform(generate_series(1,64), i -> pq.qw[i] - icn.cn[i]) AS qrv
+         |  ${dimsSql("pq.qw[i] - icn.cn[i]")} AS qrv
          | FROM pq JOIN iprobed USING (q_id) JOIN icn USING (cell)),
          |rdt AS (SELECT rqd.q_id, rqd.cell, rcb.subspace, rcb.code,
-         |  list_reduce(list_transform(generate_series(1,8), i ->
-         |    (rqd.qrv[rcb.subspace*8+i] - rcb.c[i]) * (rqd.qrv[rcb.subspace*8+i] - rcb.c[i])), (x,y) -> x+y) AS term
+         |  ${adcTermSql("rqd.qrv", "rcb")} AS term
          | FROM rqd CROSS JOIN rcb),
          |radc AS (SELECT rdt.q_id, rasg.vec_id AS cand_id,
          |  list_reduce(list(rdt.term ORDER BY rdt.subspace), (x,y) -> x+y) AS adc
@@ -1265,23 +1182,23 @@ object SparkEntry {
          |${pqRerankTail("radc")}""".stripMargin)),
     // text-analysis pack [EXT] (SURVEY §2.B text-analysis row)
     QuerySpec("q_text_tokens", (s, d) => Text.tokenCounts(s, d),
-      Some("""SELECT token, count(*) AS n FROM (
-        | SELECT unnest(list_filter(string_split(text, ' '), t -> len(t) > 0)) AS token
+      Some(s"""SELECT token, count(*) AS n FROM (
+        | SELECT unnest(${tokensSql("text")}) AS token
         | FROM documents) t
         |GROUP BY token ORDER BY n DESC, token LIMIT 50""".stripMargin)),
     QuerySpec("q_text_doc_stats", (s, d) => Text.docStats(s, d),
-      Some("""SELECT lang, source, count(*) AS n_docs,
+      Some(s"""SELECT lang, source, count(*) AS n_docs,
         | round(avg(n_chars), 4) AS avg_chars,
         | round(avg(n_tokens), 4) AS avg_tokens,
         | CAST(sum(n_tokens) AS BIGINT) AS total_tokens
         |FROM (SELECT lang, source, n_chars,
-        |       CAST(len(list_filter(string_split(text, ' '), t -> len(t) > 0)) AS BIGINT) AS n_tokens
+        |       CAST(len(${tokensSql("text")}) AS BIGINT) AS n_tokens
         |      FROM documents) t
         |GROUP BY lang, source ORDER BY lang, source""".stripMargin)),
     QuerySpec("q_text_quality", (s, d) => Text.qualityScore(s, d),
-      Some("""WITH q AS (
+      Some(s"""WITH q AS (
         | SELECT doc_id, lang, CAST(length(text) AS BIGINT) AS len_chars,
-        |  list_filter(string_split(text, ' '), t -> len(t) > 0) AS toks
+        |  ${tokensSql("text")} AS toks
         | FROM documents),
         |r AS (
         | SELECT doc_id, lang, len_chars,
@@ -1292,16 +1209,11 @@ object SparkEntry {
         |SELECT doc_id, lang, len_chars, n_tokens, n_distinct, n_stop,
         | round(n_distinct / n_tokens, 6) AS diversity,
         | round(n_stop / n_tokens, 6) AS stop_ratio,
-        | round(0.4 * (n_distinct / n_tokens) + 0.3 * (1.0 - n_stop / n_tokens)
-        |       + 0.3 * least(1.0, n_tokens / 60.0), 6) AS quality
+        | $qualitySql AS quality
         |FROM r ORDER BY doc_id""".stripMargin)),
     QuerySpec("q_text_langid", (s, d) => Text.langIdConfusion(s, d), Some(langIdOracle)),
     QuerySpec("q_text_fingerprint", (s, d) => Text.fingerprintPoly(s, d),
-      Some("""SELECT doc_id,
-        | list_reduce(
-        |   list_prepend(CAST(0 AS BIGINT),
-        |     list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT))),
-        |   (acc, c) -> (acc * 31 + c) % 1000000007) AS fp
+      Some(s"""SELECT doc_id, ${polyHashSql("text")} AS fp
         |FROM documents ORDER BY doc_id""".stripMargin)),
     QuerySpec("q_text_bigrams", (s, d) => Text.bigramCounts(s, d), Some(bigramOracle)),
     QuerySpec("q_text_length_filter", (s, d) => Text.lengthFilteredStats(s, d),
@@ -1333,18 +1245,16 @@ object SparkEntry {
         |WHERE s.n_shared >= 3 ORDER BY s.doc_id""".stripMargin)),
     QuerySpec("q_text_split", (s, d) => Text.corpusSplit(s, d),
       Some(s"""WITH h AS (
-         | SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |   list_transform(string_split(text,''), c -> CAST(ascii(c) AS BIGINT))),
-         |   (acc,c) -> (acc*31 + c) % ${Dedup.P}) AS fp
+         | SELECT doc_id, ${polyHashSql("text")} AS fp
          | FROM documents)
          |SELECT doc_id,
          | CASE WHEN fp % 10 <= 7 THEN 'train'
          |      WHEN fp % 10 = 8 THEN 'val' ELSE 'test' END AS split
          |FROM h ORDER BY doc_id""".stripMargin)),
     QuerySpec("q_text_packing", (s, d) => Text.packChunks(s, d),
-      Some("""WITH t AS (
+      Some(s"""WITH t AS (
         | SELECT doc_id, source,
-        |  CAST(len(list_filter(string_split(text,' '), s -> len(s)>0)) AS BIGINT) AS n_tok
+        |  CAST(len(${tokensSql("text")}) AS BIGINT) AS n_tok
         | FROM documents)
         |SELECT doc_id, source, n_tok,
         | CAST(floor(coalesce(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
@@ -1363,20 +1273,12 @@ object SparkEntry {
         | CAST(sum(norm_len) AS BIGINT) AS norm_chars
         |FROM n GROUP BY source ORDER BY source""".stripMargin)),
     QuerySpec("q_text_lm_score", (s, d) => Text.lmQualityScore(s, d),
-      Some(s"""WITH t AS (
-         | SELECT doc_id, list_filter(string_split(text,' '), s -> len(s)>0) AS toks
-         | FROM documents),
-         |th AS (
-         | SELECT doc_id, list_transform(toks, tok ->
-         |   list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |     list_transform(string_split(tok,''), c -> CAST(ascii(c) AS BIGINT))),
-         |     (acc,c) -> (acc*31 + c) % ${Dedup.P})) AS th
-         | FROM t WHERE len(toks) >= 2),
+      Some(s"""WITH ${tokenHashCtes(2)},
          |tru AS (
          | SELECT doc_id, th, unnest(generate_series(1, len(th)-1)) AS i FROM th),
          |tr AS (
          | SELECT doc_id, th[i] AS h1,
-         |  (th[i]*${Dedup.shingleMult} + th[i+1]) % ${Dedup.P} AS bh
+         |  ${combine2Sql("th[i]", "th[i+1]")} AS bh
          | FROM tru),
          |lm AS (SELECT h1, bh, count(*) AS c12 FROM tr GROUP BY 1, 2),
          |ctx AS (SELECT h1, CAST(sum(c12) AS BIGINT) AS c1 FROM lm GROUP BY 1),
@@ -1403,10 +1305,7 @@ object SparkEntry {
          |acc AS (
          | SELECT d.source, count(*) AS n_sampled
          | FROM documents d JOIN p ON d.source = p.source
-         | WHERE list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(string_split(CAST(d.doc_id AS VARCHAR),''),
-         |      c -> CAST(ascii(c) AS BIGINT))),
-         |    (acc,c) -> (acc*31 + c) % ${Dedup.P}) % 1000000 < floor(p.p * 1e6)
+         | WHERE ${polyHashSql("CAST(d.doc_id AS VARCHAR)")} % 1000000 < floor(p.p * 1e6)
          | GROUP BY d.source)
          |SELECT p.source, p.n_docs, round(p.p, 6) AS p_accept, acc.n_sampled
          |FROM p JOIN acc ON p.source = acc.source
@@ -1414,7 +1313,7 @@ object SparkEntry {
     QuerySpec("q_text_chunk_windows", (s, d) => Text.chunkWindows(s, d),
       Some(s"""WITH t AS (
          | SELECT doc_id,
-         |  CAST(len(list_filter(string_split(text,' '), s -> len(s)>0))
+         |  CAST(len(${tokensSql("text")})
          |    AS BIGINT) AS n_tok
          | FROM documents),
          |w AS (
@@ -1435,28 +1334,7 @@ object SparkEntry {
          |   n_tok - win_id * ${Text.chunkStride}) AS win_tokens
          |FROM u ORDER BY doc_id, win_id""".stripMargin)),
     QuerySpec("q_text_boilerplate", (s, d) => Text.boilerplateSpans(s, d),
-      Some(s"""WITH t AS (
-         | SELECT doc_id, list_filter(string_split(text,' '), s -> len(s)>0) AS toks
-         | FROM documents),
-         |th AS (
-         | SELECT doc_id, list_transform(toks, tok ->
-         |   list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |     list_transform(string_split(tok,''), c -> CAST(ascii(c) AS BIGINT))),
-         |     (acc,c) -> (acc*31 + c) % ${Dedup.P})) AS th
-         | FROM t WHERE len(toks) >= ${Text.boilWindowTokens}),
-         |u AS (
-         | SELECT doc_id, th,
-         |  unnest(generate_series(0,
-         |    CAST(floor((len(th) - ${Text.boilWindowTokens})
-         |      / ${Text.boilStride}.0) AS BIGINT))) AS j
-         | FROM th),
-         |sp AS (
-         | SELECT doc_id,
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_slice(th, j * ${Text.boilStride} + 1,
-         |      j * ${Text.boilStride} + ${Text.boilWindowTokens})),
-         |    (acc, h) -> (acc * ${Dedup.shingleMult} + h) % ${Dedup.P}) AS sh
-         | FROM u),
+      Some(s"""WITH $boilSpanCtes,
          |g AS (
          | SELECT sh, count(DISTINCT doc_id) AS n_docs, count(*) AS n_occ,
          |  min(doc_id) AS first_doc
@@ -1464,28 +1342,7 @@ object SparkEntry {
          |SELECT sh, n_docs, n_occ, first_doc FROM g
          |WHERE n_docs >= 2 ORDER BY n_docs DESC, sh LIMIT 50""".stripMargin)),
     QuerySpec("q_text_boiler_ratio", (s, d) => Text.boilerplateRatio(s, d),
-      Some(s"""WITH t AS (
-         | SELECT doc_id, list_filter(string_split(text,' '), s -> len(s)>0) AS toks
-         | FROM documents),
-         |th AS (
-         | SELECT doc_id, list_transform(toks, tok ->
-         |   list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |     list_transform(string_split(tok,''), c -> CAST(ascii(c) AS BIGINT))),
-         |     (acc,c) -> (acc*31 + c) % ${Dedup.P})) AS th
-         | FROM t WHERE len(toks) >= ${Text.boilWindowTokens}),
-         |u AS (
-         | SELECT doc_id, th,
-         |  unnest(generate_series(0,
-         |    CAST(floor((len(th) - ${Text.boilWindowTokens})
-         |      / ${Text.boilStride}.0) AS BIGINT))) AS j
-         | FROM th),
-         |sp AS (
-         | SELECT doc_id,
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_slice(th, j * ${Text.boilStride} + 1,
-         |      j * ${Text.boilStride} + ${Text.boilWindowTokens})),
-         |    (acc, h) -> (acc * ${Dedup.shingleMult} + h) % ${Dedup.P}) AS sh
-         | FROM u),
+      Some(s"""WITH $boilSpanCtes,
          |shared AS (
          | SELECT sh FROM sp GROUP BY sh HAVING count(DISTINCT doc_id) >= 2),
          |x AS (
@@ -1536,13 +1393,13 @@ object SparkEntry {
     // (no refit) + per-doc token-id fold against the sorted-piece vocab.
     // The twin runs the same recursive encode off the q_text_bpe_merges
     // dump (the same fitted table), then ids = 1-based ranks of the sorted
-    // distinct marked pieces and the per-doc (acc*31 + id) % P fold in
-    // token order
+    // distinct marked pieces and the per-doc poly fold of the ids in token
+    // order (Dedup.polyFoldSql)
     QuerySpec("q_text_bpe_apply", (s, d) => Text.bpeApplyTokenIds(s, d),
       Some(s"""WITH RECURSIVE
          |$bpeCtes,
          |pl AS (SELECT doc_id,
-         |  list_filter(string_split(bpe_text, ' '), x -> len(x) > 0) AS ps
+         |  ${tokensSql("bpe_text")} AS ps
          | FROM d),
          |vv AS (SELECT p, CAST(row_number() OVER (ORDER BY p) AS BIGINT)
          |    AS pid
@@ -1554,9 +1411,7 @@ object SparkEntry {
          | FROM pl),
          |px AS (SELECT doc_id, u.pos AS pos, u.p AS p FROM px0),
          |pf AS (SELECT doc_id,
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list(pid ORDER BY pos)),
-         |    (acc, x) -> (acc * 31 + x) % ${Dedup.P}) AS id_fold
+         |  ${polyFoldSql("list(pid ORDER BY pos)")} AS id_fold
          | FROM px JOIN vv USING (p) GROUP BY doc_id)
          |SELECT t.doc_id,
          | CAST(coalesce(d.n_bpe_tokens, 0) AS BIGINT) AS n_bpe_tokens,
@@ -1576,26 +1431,11 @@ object SparkEntry {
     // sorted window pass — positions and extents bit-for-bit.
     QuerySpec("q_text_substr_spans", (s, d) => Text.substringDupSpans(s, d), Some {
       val w = Text.substrWindowTokens
-      val chain1 = (1 until w).foldLeft("th[i]") {
-        (acc, j) => s"($acc * ${Dedup.shingleMult} + th[i+$j]) % ${Dedup.P}"
-      }
-      val chain2 = (1 until w).foldLeft("th[i]") {
-        (acc, j) => s"($acc * ${Dedup.shingleMult2} + th[i+$j]) % ${Dedup.P}"
-      }
-      val chain = s"($chain1) * ${Dedup.P} + ($chain2)"
-      s"""WITH t AS (
-         | SELECT doc_id, list_filter(string_split(text,' '), s -> len(s)>0) AS toks
-         | FROM documents),
-         |th AS (
-         | SELECT doc_id, list_transform(toks, tok ->
-         |   list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |     list_transform(string_split(tok,''), c -> CAST(ascii(c) AS BIGINT))),
-         |     (acc,c) -> (acc*31 + c) % ${Dedup.P})) AS th
-         | FROM t WHERE len(toks) >= $w),
+      s"""WITH ${tokenHashCtes(w)},
          |wn0 AS (
          | SELECT doc_id, CAST(len(th) AS BIGINT) AS n_tokens,
          |  unnest(list_transform(generate_series(1, len(th) - ${w - 1}),
-         |    i -> {'pos': CAST(i - 1 AS BIGINT), 'wh': ($chain)})) AS u
+         |    i -> {'pos': CAST(i - 1 AS BIGINT), 'wh': (${wideKeySql(w)})})) AS u
          | FROM th),
          |wn AS (SELECT doc_id, n_tokens, u.pos AS pos, u.wh AS wh FROM wn0),
          |dh AS (SELECT wh FROM wn GROUP BY wh
@@ -1627,26 +1467,11 @@ object SparkEntry {
     // rebuild — clean_text strings compared byte-for-byte.
     QuerySpec("q_text_substr_excise", (s, d) => Text.substringExcisedCorpus(s, d), Some {
       val w = Text.substrWindowTokens
-      val chain1 = (1 until w).foldLeft("th[i]") {
-        (acc, j) => s"($acc * ${Dedup.shingleMult} + th[i+$j]) % ${Dedup.P}"
-      }
-      val chain2 = (1 until w).foldLeft("th[i]") {
-        (acc, j) => s"($acc * ${Dedup.shingleMult2} + th[i+$j]) % ${Dedup.P}"
-      }
-      val chain = s"($chain1) * ${Dedup.P} + ($chain2)"
-      s"""WITH t AS (
-         | SELECT doc_id, list_filter(string_split(text,' '), s -> len(s)>0) AS toks
-         | FROM documents),
-         |th AS (
-         | SELECT doc_id, list_transform(toks, tok ->
-         |   list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |     list_transform(string_split(tok,''), c -> CAST(ascii(c) AS BIGINT))),
-         |     (acc,c) -> (acc*31 + c) % ${Dedup.P})) AS th
-         | FROM t WHERE len(toks) >= $w),
+      s"""WITH ${tokenHashCtes(w)},
          |wn0 AS (
          | SELECT doc_id,
          |  unnest(list_transform(generate_series(1, len(th) - ${w - 1}),
-         |    i -> {'pos': CAST(i - 1 AS BIGINT), 'wh': ($chain)})) AS u
+         |    i -> {'pos': CAST(i - 1 AS BIGINT), 'wh': (${wideKeySql(w)})})) AS u
          | FROM th),
          |wn AS (SELECT doc_id, u.pos AS pos, u.wh AS wh FROM wn0),
          |own AS (SELECT wh, min(doc_id) AS owner FROM wn GROUP BY wh
@@ -1689,22 +1514,12 @@ object SparkEntry {
     // per-doc sum (exact BIGINT — ln ulp noise absorbed, addition order
     // irrelevant).
     QuerySpec("q_text_dsir", (s, d) => Text.dsirWeights(s, d), Some {
-      val m = Dedup.shingleMult
       val b = Text.dsirBuckets
-      s"""WITH t AS (
-         | SELECT doc_id, source,
-         |  list_filter(string_split(text,' '), s -> len(s)>0) AS toks
-         | FROM documents),
-         |th AS (
-         | SELECT doc_id, source, list_transform(toks, tok ->
-         |   list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |     list_transform(string_split(tok,''), c -> CAST(ascii(c) AS BIGINT))),
-         |     (acc,c) -> (acc*31 + c) % ${Dedup.P})) AS th
-         | FROM t WHERE len(toks) >= 1),
+      s"""WITH ${tokenHashCtes(1, keep = "doc_id, source")},
          |f0 AS (
          | SELECT doc_id, source, unnest(list_concat(th,
          |   list_transform(generate_series(1, len(th)-1),
-         |     i -> (th[i]*$m + th[i+1]) % ${Dedup.P}))) AS h
+         |     i -> ${combine2Sql("th[i]", "th[i+1]")}))) AS h
          | FROM th),
          |db AS (SELECT doc_id, source, CAST(h % $b AS INT) AS bucket,
          |        count(*) AS c
@@ -1731,12 +1546,7 @@ object SparkEntry {
          |FROM rk ORDER BY doc_id""".stripMargin
     }),
     QuerySpec("q_text_vocab", (s, d) => Text.vocabStats(s, d),
-      Some("""WITH tk AS (
-        | SELECT source,
-        |  unnest(list_filter(string_split(text,' '), s -> len(s)>0)) AS token
-        | FROM documents),
-        |g AS (SELECT source, token, count(*) AS n FROM tk
-        |      GROUP BY source, token)
+      Some(s"""WITH $sourceTokenCtes
         |SELECT source, CAST(sum(n) AS BIGINT) AS n_tokens,
         | CAST(count(*) AS BIGINT) AS n_types,
         | CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
@@ -1744,12 +1554,7 @@ object SparkEntry {
         |   / 1e6 AS ttr
         |FROM g GROUP BY source ORDER BY source""".stripMargin)),
     QuerySpec("q_text_zipf", (s, d) => Text.zipfSlope(s, d),
-      Some(s"""WITH tk AS (
-         | SELECT source,
-         |  unnest(list_filter(string_split(text,' '), s -> len(s)>0)) AS token
-         | FROM documents),
-         |g AS (SELECT source, token, count(*) AS n FROM tk
-         |      GROUP BY source, token),
+      Some(s"""WITH $sourceTokenCtes,
          |r AS (SELECT source, n,
          |       row_number() OVER (PARTITION BY source
          |         ORDER BY n DESC, token) AS rnk
@@ -1778,12 +1583,7 @@ object SparkEntry {
          | END AS slope
          |FROM s ORDER BY source""".stripMargin)),
     QuerySpec("q_text_oov", (s, d) => Text.oovRate(s, d),
-      Some(s"""WITH tk AS (
-         | SELECT source,
-         |  unnest(list_filter(string_split(text,' '), s -> len(s)>0)) AS token
-         | FROM documents),
-         |g AS (SELECT source, token, count(*) AS n FROM tk
-         |      GROUP BY source, token),
+      Some(s"""WITH $sourceTokenCtes,
          |v AS (SELECT token FROM (
          |       SELECT token, count(*) AS n FROM tk GROUP BY token
          |       ORDER BY n DESC, token LIMIT ${Text.oovVocabSize}))
@@ -1797,7 +1597,7 @@ object SparkEntry {
          |GROUP BY g.source ORDER BY g.source""".stripMargin)),
     QuerySpec("q_text_pmi", (s, d) => Text.pmiCollocations(s, d),
       Some(s"""WITH t AS (
-         | SELECT list_filter(string_split(text,' '), s -> len(s)>0) AS t
+         | SELECT ${tokensSql("text")} AS t
          | FROM documents),
          |t2 AS (SELECT t FROM t WHERE len(t) >= 2),
          |b AS (SELECT unnest(list_transform(generate_series(1, len(t)-1),
@@ -1816,15 +1616,10 @@ object SparkEntry {
          |WHERE p.n_xy >= ${Text.pmiMinCount}
          |ORDER BY pmi DESC, w1, w2 LIMIT ${Text.pmiTopK}""".stripMargin)),
     QuerySpec("q_ml_logloss", (s, d) => Metrics.linearLogLoss(s, d), Some {
-      val scoreExprs = mlScoreExprs
-      val names = (0 until Metrics.numClasses).map(c => s"score_$c")
+      val names = mlScoreNames
       val yCase = (0 until Metrics.numClasses)
         .map(c => s"WHEN $c THEN score_$c").mkString(" ")
-      s"""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
-         |  CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |s AS (SELECT vec_id, label,
-         |  $scoreExprs
-         | FROM e),
+      s"""$mlScoreCtes,
          |sm AS (SELECT label, greatest(${names.mkString(", ")}) AS m,
          |  ${names.mkString(", ")}
          | FROM s),
@@ -1838,16 +1633,11 @@ object SparkEntry {
          |FROM ll""".stripMargin
     }),
     QuerySpec("q_ml_auc", (s, d) => Metrics.linearAucOvr(s, d), Some {
-      val scoreExprs = mlScoreExprs
       val melt = (0 until Metrics.numClasses).map { c =>
         s"SELECT $c AS cls, score_$c AS score, " +
           s"CASE WHEN label = $c THEN 1 ELSE 0 END AS pos FROM s"
       }.mkString("\n  UNION ALL ")
-      s"""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
-         |  CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |s AS (SELECT vec_id, label,
-         |  $scoreExprs
-         | FROM e),
+      s"""$mlScoreCtes,
          |m AS (
          |  $melt),
          |g AS (SELECT cls, score, CAST(sum(pos) AS BIGINT) AS np,
@@ -1867,16 +1657,10 @@ object SparkEntry {
          |FROM c GROUP BY cls ORDER BY cls""".stripMargin
     }),
     QuerySpec("q_ml_calibration", (s, d) => Metrics.linearCalibration(s, d), Some {
-      val names = (0 until Metrics.numClasses).map(c => s"score_$c")
-      val scoreExprs = mlScoreExprs
-      val caseChain = mlCaseChain
-      s"""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
-         |  CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |s AS (SELECT vec_id, label,
-         |  $scoreExprs
-         | FROM e),
+      val names = mlScoreNames
+      s"""$mlScoreCtes,
          |x AS (SELECT label,
-         |  CAST(CASE$caseChain END AS BIGINT) AS pred,
+         |  CAST(CASE$mlCaseChain END AS BIGINT) AS pred,
          |  greatest(${names.mkString(", ")}) AS mx,
          |  ${names.mkString(", ")}
          | FROM s),
@@ -1944,41 +1728,30 @@ object SparkEntry {
     QuerySpec("q_valid_constraints", (s, d) => Validate.constraintSuite(s, d),
       Some(Validate.constraintSuiteSql)),
     QuerySpec("q_valid_refint", (s, d) => Validate.refIntegrity(s, d),
-      Some("""WITH r AS (
-        | SELECT 'lineitem.l_orderkey->orders' AS relation,
-        |  (SELECT count(*) FROM lineitem) AS fact_rows,
-        |  (SELECT count(*) FROM lineitem l WHERE NOT EXISTS
-        |    (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey))
-        |   AS orphans
-        | UNION ALL
-        | SELECT 'lineitem.l_partkey->part',
-        |  (SELECT count(*) FROM lineitem),
-        |  (SELECT count(*) FROM lineitem l WHERE NOT EXISTS
-        |    (SELECT 1 FROM part p WHERE p.p_partkey = l.l_partkey))
-        | UNION ALL
-        | SELECT 'lineitem.l_suppkey->supplier',
-        |  (SELECT count(*) FROM lineitem),
-        |  (SELECT count(*) FROM lineitem l WHERE NOT EXISTS
-        |    (SELECT 1 FROM supplier s WHERE s.s_suppkey = l.l_suppkey))
-        | UNION ALL
-        | SELECT 'orders.o_custkey->customer',
-        |  (SELECT count(*) FROM orders),
-        |  (SELECT count(*) FROM orders o WHERE NOT EXISTS
-        |    (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey))
-        | UNION ALL
-        | SELECT 'customer.c_nationkey->nation',
-        |  (SELECT count(*) FROM customer),
-        |  (SELECT count(*) FROM customer c WHERE NOT EXISTS
-        |    (SELECT 1 FROM nation n WHERE n.n_nationkey = c.c_nationkey))
-        | UNION ALL
-        | SELECT 'supplier.s_nationkey->nation',
-        |  (SELECT count(*) FROM supplier),
-        |  (SELECT count(*) FROM supplier s WHERE NOT EXISTS
-        |    (SELECT 1 FROM nation n WHERE n.n_nationkey = s.s_nationkey)))
+      Some {
+      // one orphan count per (fact, fk, dim, pk), each table aliased by
+      // its initial; the first row names the columns
+      val rels = Seq(("lineitem", "l_orderkey", "orders", "o_orderkey"),
+        ("lineitem", "l_partkey", "part", "p_partkey"),
+        ("lineitem", "l_suppkey", "supplier", "s_suppkey"),
+        ("orders", "o_custkey", "customer", "c_custkey"),
+        ("customer", "c_nationkey", "nation", "n_nationkey"),
+        ("supplier", "s_nationkey", "nation", "n_nationkey"))
+      val rows = rels.zipWithIndex.map { case ((f, fk, dim, pk), i) =>
+        def as(name: String) = if (i == 0) s" AS $name" else ""
+        val (fa, da) = (f.take(1), dim.take(1))
+        s"""SELECT '$f.$fk->$dim'${as("relation")},
+           |  (SELECT count(*) FROM $f)${as("fact_rows")},
+           |  (SELECT count(*) FROM $f $fa WHERE NOT EXISTS
+           |    (SELECT 1 FROM $dim $da WHERE $da.$pk = $fa.$fk))${as("orphans")}""".stripMargin
+      }.mkString("\n UNION ALL\n ")
+      s"""WITH r AS (
+        | $rows)
         |SELECT relation, fact_rows, orphans,
         | floor(CAST(orphans AS DOUBLE) / CAST(fact_rows AS DOUBLE)
         |   * 1e6 + 0.5) / 1e6 AS orphan_rate
-        |FROM r ORDER BY relation""".stripMargin)),
+        |FROM r ORDER BY relation""".stripMargin
+    }),
     QuerySpec("q_valid_ks_drift", (s, d) => Validate.ksDrift(s, d),
       Some("""WITH c AS (SELECT source, n_chars AS v, count(*) AS c
         |      FROM documents GROUP BY 1, 2),
@@ -2116,14 +1889,8 @@ object SparkEntry {
     // < k suppressed; tie-break keys keep row order engine-neutral
     QuerySpec("q_priv_export", (s, d) => Privacy.anonymizedExport(s, d),
       Some(s"""WITH c AS (SELECT
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(string_split(c_name, ''),
-         |      ch -> CAST(ascii(ch) AS BIGINT))),
-         |    (acc, ch) -> (acc * 31 + ch) % ${Dedup.P}) * ${Dedup.P} +
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(string_split(reverse(c_name), ''),
-         |      ch -> CAST(ascii(ch) AS BIGINT))),
-         |    (acc, ch) -> (acc * 31 + ch) % ${Dedup.P}) AS pseudonym,
+         |  ${polyHashSql("c_name")} * ${Dedup.P} +
+         |  ${polyHashSql("reverse(c_name)")} AS pseudonym,
          |  c_mktsegment,
          |  CAST(floor(floor(c_acctbal * 100 + 0.5) / ${Privacy.balBinCents}.0)
          |    AS BIGINT) AS bal_bin
@@ -2139,15 +1906,12 @@ object SparkEntry {
     // dimension with semi/anti joins — exact-cents balances
     QuerySpec("q_priv_erasure", (s, d) => Privacy.erasureAudit(s, d),
       Some(s"""WITH c AS (SELECT c_custkey, c_mktsegment, c_acctbal,
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(string_split(c_name, ''),
-         |      ch -> CAST(ascii(ch) AS BIGINT))),
-         |    (acc, ch) -> (acc * 31 + ch) % ${Dedup.P}) % ${Privacy.erasureMod}
+         |  ${polyHashSql("c_name")} % ${Privacy.erasureMod}
          |    AS h
          | FROM customer),
          |r AS (SELECT c_custkey FROM c WHERE h = 0),
          |e AS (SELECT c_mktsegment, count(*) AS n_erased,
-         |  CAST(sum(CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)) AS BIGINT)
+         |  CAST(sum(${centsSql("c_acctbal")}) AS BIGINT)
          |    AS erased_bal_cents
          | FROM c SEMI JOIN r USING (c_custkey) GROUP BY 1),
          |kp AS (SELECT c_mktsegment, count(*) AS n_kept
@@ -2171,11 +1935,8 @@ object SparkEntry {
     // any publish-fidelity drift) hash-fails
     QuerySpec("q_priv_erasure_apply", (s, d) => Privacy.erasureApply(s, d),
       Some(s"""WITH c AS (SELECT c_custkey, c_mktsegment,
-         |  CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents,
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(string_split(c_name, ''),
-         |      ch -> CAST(ascii(ch) AS BIGINT))),
-         |    (acc, ch) -> (acc * 31 + ch) % ${Dedup.P}) % ${Privacy.erasureMod}
+         |  ${centsSql("c_acctbal")} AS bal_cents,
+         |  ${polyHashSql("c_name")} % ${Privacy.erasureMod}
          |    AS h
          | FROM customer),
          |r AS (SELECT c_custkey FROM c WHERE h = 0),
@@ -2202,8 +1963,8 @@ object SparkEntry {
          | LEFT JOIN oa USING (c_mktsegment)
          |ORDER BY 1""".stripMargin)),
     QuerySpec("q_sim_dim_stats", (s, d) => Similarity.dimensionStats(s, d),
-      Some("""WITH e AS (
-        | SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      Some(s"""WITH e AS (
+        | SELECT $embDoubleSql FROM embeddings),
         |u AS (
         | SELECT CAST(unnest(generate_series(1, len(v))) - 1 AS BIGINT) AS dim,
         |  v FROM e),
@@ -2230,7 +1991,7 @@ object SparkEntry {
         s"""
          |, tq AS (
          | SELECT doc_id, lang, source, n_chars, text,
-         |  list_filter(string_split(text,' '), t -> len(t) > 0) AS toks
+         |  ${tokensSql("text")} AS toks
          | FROM documents),
          |qr AS (
          | SELECT doc_id, lang, source, n_chars, text,
@@ -2240,11 +2001,8 @@ object SparkEntry {
          | FROM tq),
          |qs AS (
          | SELECT doc_id, lang, source, n_chars,
-         |  round(0.4 * (n_distinct / n_tokens) + 0.3 * (1.0 - n_stop / n_tokens)
-         |        + 0.3 * least(1.0, n_tokens / 60.0), 6) AS quality,
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(string_split(text,''), c -> CAST(ascii(c) AS BIGINT))),
-         |    (acc,c) -> (acc*31 + c) % ${Dedup.P}) % 10 AS bucket
+         |  $qualitySql AS quality,
+         |  ${polyHashSql("text")} % 10 AS bucket
          | FROM qr)
          |SELECT doc_id, lang, source, n_chars, quality
          |FROM qs
@@ -2302,20 +2060,17 @@ object SparkEntry {
         |FROM pick p JOIN embeddings ql ON p.q_id = ql.vec_id
         |WHERE p.rk = 1 ORDER BY p.q_id""".stripMargin)),
     QuerySpec("q_sim_pair_cosine", (s, d) => Similarity.pairCosine(s, d),
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |n AS (SELECT vec_id, v,
-        |  sqrt(list_reduce(list_transform(generate_series(1,64), i -> v[i]*v[i]), (x,y) -> x+y)) AS nrm
-        | FROM e),
+      Some(s"""WITH ${embNormCtes("e", "n")},
         |a AS (SELECT CAST(vec_id // 2 AS BIGINT) AS pair_id, v AS va, nrm AS na
         |      FROM n WHERE vec_id % 2 = 0),
         |b AS (SELECT CAST((vec_id - 1) // 2 AS BIGINT) AS pair_id, v AS vb, nrm AS nb
         |      FROM n WHERE vec_id % 2 = 1)
         |SELECT pair_id,
-        | round(list_reduce(list_transform(generate_series(1,64), i -> va[i]*vb[i]), (x,y) -> x+y)
+        | round(${dotSql("va", "vb")}
         |  / (na * nb), 6) AS cos_sim
         |FROM a JOIN b USING (pair_id) ORDER BY pair_id""".stripMargin)),
     QuerySpec("q_sim_quantize", (s, d) => Similarity.quantizeEmbeddings(s, d),
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      Some(s"""WITH e AS (SELECT vec_id, $embDoubleSql FROM embeddings),
         |s AS (SELECT vec_id, v,
         |  list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale
         | FROM e),
@@ -2332,7 +2087,7 @@ object SparkEntry {
         | round(mse, 12) AS mse
         |FROM m ORDER BY vec_id""".stripMargin)),
     QuerySpec("q_sim_centroids", (s, d) => Similarity.labelCentroidStats(s, d),
-      Some("""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
+      Some(s"""WITH e AS (SELECT vec_id, label, $embDoubleSql
         |           FROM embeddings),
         |u AS (SELECT label, unnest(v) AS x,
         |       unnest(generate_series(1, len(v))) AS i FROM e),
@@ -2420,22 +2175,15 @@ object SparkEntry {
       // is the ENGINE'S OWN shared hamCutFor (binomial mean + 2σ —
       // round-9 ADVICE #5 unified the range margin with the banding one)
       val hamCut = Dedup.hamCutFor(64, 0.3)
-      s"""WITH s AS (SELECT vec_id, sign_bits
-         | FROM '${graft.explore.Stats.verifyOutToken}/q_sim_sign_index/*.parquet'),
-         |q AS (SELECT vec_id AS q_id, sign_bits AS q_bits
-         |      FROM s WHERE vec_id < 10),
+      s"""WITH $signQueryCtes,
          |cand AS (
          | SELECT q.q_id, s.vec_id AS cand_id
          | FROM s JOIN q ON s.vec_id <> q.q_id
          |  AND bit_count(xor(s.sign_bits, q.q_bits)) <= $hamCut),
-         |se AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |sn AS (SELECT vec_id, v,
-         |  sqrt(list_reduce(list_transform(generate_series(1,64), i -> v[i]*v[i]), (x,y) -> x+y)) AS nrm
-         | FROM se),
+         |${embNormCtes("se", "sn")},
          |scored AS (
          | SELECT cand.q_id, cand.cand_id,
-         |  round(list_reduce(list_transform(generate_series(1,64), i -> a.v[i]*b.v[i]), (x,y) -> x+y)
-         |   / (a.nrm * b.nrm), 6) AS cos_sim
+         |  ${cosSimSql("a", "b")} AS cos_sim
          | FROM cand JOIN sn a ON cand.q_id = a.vec_id
          |           JOIN sn b ON cand.cand_id = b.vec_id)
          |SELECT q_id, cand_id, cos_sim FROM scored
@@ -2513,24 +2261,14 @@ object SparkEntry {
     QuerySpec("q_dedup_jaccard_brute", (s, d) => Dedup.jaccardPairsBrute(s, d),
       Some(dedupCtes +
         s"""
-         |, j AS (
-         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE) AS inter,
-         |  len(a.hs) AS na, len(b.hs) AS nb
-         | FROM hsh a JOIN hsh b ON a.doc_id < b.doc_id
-         | WHERE a.doc_id < 500 AND b.doc_id < 500)
-         |SELECT doc_a, doc_b, round(inter / (na + nb - inter), 6) AS jac
-         |FROM j WHERE round(inter / (na + nb - inter), 6) >= 0.8
+         |, $bruteOverlapCte
+         |SELECT doc_a, doc_b, $jacSql AS jac
+         |FROM j WHERE $jacSql >= 0.8
          |ORDER BY doc_a, doc_b""".stripMargin)),
     QuerySpec("q_dedup_containment", (s, d) => Dedup.containmentPairsBrute(s, d),
       Some(dedupCtes +
         s"""
-         |, j AS (
-         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE) AS inter,
-         |  len(a.hs) AS na, len(b.hs) AS nb
-         | FROM hsh a JOIN hsh b ON a.doc_id < b.doc_id
-         | WHERE a.doc_id < 500 AND b.doc_id < 500)
+         |, $bruteOverlapCte
          |SELECT doc_a, doc_b, round(inter / na, 6) AS cont_a_in_b,
          | round(inter / nb, 6) AS cont_b_in_a
          |FROM j
@@ -2552,10 +2290,7 @@ object SparkEntry {
       s"""WITH s AS ($simhashOracle),
          |bands0 AS (
          |  $bandSelects),
-         |bands AS (
-         | SELECT doc_id, simhash, blk, key FROM (
-         |  SELECT *, count(*) OVER (PARTITION BY blk, key) AS bmembers
-         |  FROM bands0) WHERE bmembers <= ${Dedup.maxBandBucket}),
+         |${cappedBandsCte("bands", "doc_id, simhash, blk, key", "blk, key")},
          |cand AS (
          | SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
          |  bit_count(xor(x.simhash, y.simhash)) AS hamming
@@ -2565,15 +2300,7 @@ object SparkEntry {
          |WHERE hamming <= 3 ORDER BY doc_a, doc_b""".stripMargin
     }),
     QuerySpec("q_dedup_embed", (s, d) => Dedup.embeddingDupPairs(s, d),
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |           FROM embeddings WHERE vec_id < 1000),
-        |n AS (SELECT vec_id, v,
-        |  sqrt(list_reduce(list_transform(generate_series(1,64), i -> v[i]*v[i]), (x,y) -> x+y)) AS nrm
-        | FROM e),
-        |p AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |  round(list_reduce(list_transform(generate_series(1,64), i -> a.v[i]*b.v[i]), (x,y) -> x+y)
-        |   / (a.nrm * b.nrm), 6) AS cos_sim
-        | FROM n a JOIN n b ON a.vec_id < b.vec_id)
+      Some(s"""WITH $embedPairCtes
         |SELECT vec_a, vec_b, cos_sim FROM p
         |WHERE cos_sim >= 0.4 ORDER BY vec_a, vec_b""".stripMargin)),
     QuerySpec("q_dedup_source_matrix", (s, d) => Dedup.sourceDupMatrix(s, d),
@@ -2588,31 +2315,10 @@ object SparkEntry {
         |FROM m GROUP BY source_lo, source_hi
         |ORDER BY source_lo, source_hi""".stripMargin)),
     QuerySpec("q_sim_semdedup", (s, d) => Similarity.semanticDedup(s, d),
-      Some("""WITH RECURSIVE e AS (
-        | SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        | FROM embeddings WHERE vec_id < 1000),
-        |n AS (SELECT vec_id, v,
-        |  sqrt(list_reduce(list_transform(generate_series(1,64), i -> v[i]*v[i]), (x,y) -> x+y)) AS nrm
-        | FROM e),
-        |p AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |  round(list_reduce(list_transform(generate_series(1,64), i -> a.v[i]*b.v[i]), (x,y) -> x+y)
-        |   / (a.nrm * b.nrm), 6) AS cos_sim
-        | FROM n a JOIN n b ON a.vec_id < b.vec_id),
+      Some(s"""WITH RECURSIVE $embedPairCtes,
         |pr AS (SELECT vec_a, vec_b FROM p WHERE cos_sim >= 0.4),
-        |sym AS (
-        | SELECT vec_a AS src, vec_b AS dst FROM pr
-        | UNION SELECT vec_b, vec_a FROM pr),
-        |reach AS (
-        | SELECT src, dst FROM sym
-        | UNION
-        | SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-        |lab AS (SELECT src AS vec_id, least(src, min(dst)) AS cluster_rep
-        |        FROM reach GROUP BY src)
-        |SELECT emb.vec_id, CAST(emb.label AS BIGINT) AS label,
-        | coalesce(lab.cluster_rep, emb.vec_id) AS cluster_rep,
-        | CAST(emb.vec_id = coalesce(lab.cluster_rep, emb.vec_id) AS INT)
-        |   AS keep
-        |FROM embeddings emb LEFT JOIN lab ON emb.vec_id = lab.vec_id
+        |${componentCtes("pr", "vec")}
+        |$semKeepSql
         |WHERE emb.vec_id < 1000 ORDER BY emb.vec_id""".stripMargin)),
     // the 100 TB SemDeDup scale path: banded sign-LSH edges read off the
     // PUBLISHED 16 B/row sign index (layout reuse — no corpus re-signing)
@@ -2630,21 +2336,9 @@ object SparkEntry {
       Similarity.semanticDedupLsh(s, d, minCos = 0.4, bands = 0),
       Some("WITH RECURSIVE " +
         signBandPairCtes("q_sim_sign_index", 0.4) +
-        """
-        |, sym AS (
-        | SELECT vec_a AS src, vec_b AS dst FROM pr
-        | UNION SELECT vec_b, vec_a FROM pr),
-        |reach AS (
-        | SELECT src, dst FROM sym
-        | UNION
-        | SELECT r.src, s2.dst FROM reach r JOIN sym s2 ON r.dst = s2.src),
-        |lab AS (SELECT src AS vec_id, least(src, min(dst)) AS cluster_rep
-        |        FROM reach GROUP BY src)
-        |SELECT emb.vec_id, CAST(emb.label AS BIGINT) AS label,
-        | coalesce(lab.cluster_rep, emb.vec_id) AS cluster_rep,
-        | CAST(emb.vec_id = coalesce(lab.cluster_rep, emb.vec_id) AS INT)
-        |   AS keep
-        |FROM embeddings emb LEFT JOIN lab ON emb.vec_id = lab.vec_id
+        s""",
+        |${componentCtes("pr", "vec")}
+        |$semKeepSql
         |ORDER BY emb.vec_id""".stripMargin)),
     // the dump behind the twin above: the published sign index itself
     // (rows-only — plane geometry is engine-specific by nature)
@@ -2756,15 +2450,12 @@ object SparkEntry {
         | FROM documents WHERE doc_id % 3 = 2) t
         |ORDER BY media_id, frame_idx""".stripMargin)),
     QuerySpec("q_mm_decode", (s, d) => Multimodal.decodeSummary(s, d),
-      Some("""WITH m AS (
+      Some(s"""WITH m AS (
         | SELECT doc_id AS media_id,
         |  CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
         |       ELSE 'video' END AS media_type,
-        |  CAST(16 + length(text) % 32 AS BIGINT) AS w,
-        |  CAST(16 + (length(text) // 7) % 32 AS BIGINT) AS h,
-        |  list_transform(string_split(text,''),
-        |    c -> CAST(ascii(c) & 255 AS BIGINT)) AS u,
-        |  CAST(length(text) AS BIGINT) AS n
+        |  ${Multimodal.mediaGeometrySql},
+        |  ${Multimodal.mediaUnitsSql}
         | FROM documents),
         |x AS (
         | SELECT media_id,
@@ -2778,11 +2469,9 @@ object SparkEntry {
         |SELECT media_id, n_units, round(CAST(s AS DOUBLE) / n_units, 6) AS mean_unit
         |FROM x ORDER BY media_id""".stripMargin)),
     QuerySpec("q_mm_audio_features", (s, d) => Multimodal.audioFeatures(s, d),
-      Some("""WITH m AS (
+      Some(s"""WITH m AS (
         | SELECT doc_id AS media_id,
-        |  list_transform(string_split(text,''),
-        |    c -> CAST(ascii(c) & 255 AS BIGINT)) AS u,
-        |  CAST(length(text) AS BIGINT) AS n
+        |  ${Multimodal.mediaUnitsSql}
         | FROM documents WHERE doc_id % 3 = 1),
         |s AS (SELECT media_id,
         |       CASE WHEN n = 0 THEN [CAST(0 AS BIGINT)] ELSE u END AS u
@@ -2813,19 +2502,10 @@ object SparkEntry {
         |SELECT media_id, win_id, n_samples, rms, zcr
         |FROM f ORDER BY media_id, win_id""".stripMargin)),
     QuerySpec("q_mm_image_features", (s, d) => Multimodal.imageFeatures(s, d),
-      Some("""WITH m AS (
-        | SELECT doc_id AS media_id,
-        |  CAST(16 + length(text) % 32 AS BIGINT) AS w,
-        |  CAST(16 + (length(text) // 7) % 32 AS BIGINT) AS h,
-        |  list_transform(string_split(text,''),
-        |    c -> CAST(ascii(c) & 255 AS BIGINT)) AS u,
-        |  CAST(length(text) AS BIGINT) AS n
-        | FROM documents WHERE doc_id % 3 <> 1),
+      Some(s"""WITH $posterMediaCte,
         |p AS (
         | SELECT media_id, w, h, w * h AS np,
-        |  CASE WHEN n = 0 THEN list_transform(generate_series(0, w*h - 1), i -> CAST(0 AS BIGINT))
-        |       ELSE list_transform(generate_series(0, w*h - 1), i -> u[(i % n) + 1])
-        |  END AS px
+        |  ${Multimodal.mediaPixelsSql}
         | FROM m),
         |a AS (
         | SELECT media_id, w, np, px,
@@ -2856,19 +2536,10 @@ object SparkEntry {
       val cols = graft.ops.Multimodal.dhashCols
       val perRow = cols - 1
       val sigBits = rows * perRow
-      s"""WITH m AS (
-         | SELECT doc_id AS media_id,
-         |  CAST(16 + length(text) % 32 AS BIGINT) AS w,
-         |  CAST(16 + (length(text) // 7) % 32 AS BIGINT) AS h,
-         |  list_transform(string_split(text,''),
-         |    c -> CAST(ascii(c) & 255 AS BIGINT)) AS u,
-         |  CAST(length(text) AS BIGINT) AS n
-         | FROM documents WHERE doc_id % 3 <> 1),
+      s"""WITH $posterMediaCte,
          |p AS (
          | SELECT media_id, w, h,
-         |  CASE WHEN n = 0 THEN list_transform(generate_series(0, w*h - 1), i -> CAST(0 AS BIGINT))
-         |       ELSE list_transform(generate_series(0, w*h - 1), i -> u[(i % n) + 1])
-         |  END AS px
+         |  ${Multimodal.mediaPixelsSql}
          | FROM m)
          |SELECT media_id,
          | list_reduce(list_prepend(CAST(0 AS BIGINT),
@@ -2968,19 +2639,16 @@ object SparkEntry {
         | CAST(l_linestatus = 'F' AS INT) AS status_f
         |FROM lineitem ORDER BY l_orderkey, l_linenumber LIMIT 1000""".stripMargin)),
     QuerySpec("q_feat_hash", (s, d) => Features.hashedBagOfWords(s, d),
-      Some("""SELECT doc_id,
-        | CAST(list_reduce(
-        |   list_prepend(CAST(0 AS BIGINT),
-        |     list_transform(string_split(token, ''), c -> CAST(ascii(c) AS BIGINT))),
-        |   (acc, c) -> (acc * 31 + c) % 1000000007) % 16 AS INT) AS bucket,
+      Some(s"""SELECT doc_id,
+        | CAST(${polyHashSql("token")} % 16 AS INT) AS bucket,
         | count(*) AS n
         |FROM (SELECT doc_id,
-        |        unnest(list_filter(string_split(text, ' '), t -> len(t) > 0)) AS token
+        |        unnest(${tokensSql("text")}) AS token
         |      FROM documents) t
         |GROUP BY doc_id, bucket ORDER BY doc_id, bucket""".stripMargin)),
     QuerySpec("q_text_tfidf", (s, d) => Features.tfidfTopTerms(s, d),
-      Some("""WITH tok AS (SELECT doc_id,
-        |        unnest(list_filter(string_split(text, ' '), t -> len(t) > 0)) AS token
+      Some(s"""WITH tok AS (SELECT doc_id,
+        |        unnest(${tokensSql("text")}) AS token
         |      FROM documents),
         |     tf AS (SELECT doc_id, token, count(*) AS tf FROM tok
         |            GROUP BY doc_id, token),
@@ -3025,11 +2693,7 @@ object SparkEntry {
         |WHERE event_type = 'purchase'
         |ORDER BY user_id, event_id""".stripMargin)),
     QuerySpec("q_feat_cross", (s, d) => Features.crossFeatures(s, d),
-      Some("""SELECT CAST(list_reduce(
-        |   list_prepend(CAST(0 AS BIGINT),
-        |     list_transform(string_split(c_mktsegment || '|' || o_orderpriority, ''),
-        |       c -> CAST(ascii(c) AS BIGINT))),
-        |   (acc, c) -> (acc * 31 + c) % 1000000007) % 32 AS INT) AS bucket,
+      Some(s"""SELECT CAST(${polyHashSql("c_mktsegment || '|' || o_orderpriority")} % 32 AS INT) AS bucket,
         | count(*) AS n,
         | count(DISTINCT c_mktsegment || '|' || o_orderpriority) AS n_crosses,
         | round(avg(o_totalprice), 2) AS avg_price
@@ -3142,10 +2806,12 @@ object SparkEntry {
     * or the tie-break rule can never desynchronize a subset of the SQL
     * twins from the Spark scorer. */
   private def mlScoreExprs: String = (0 until Metrics.numClasses).map { c =>
-    val terms = (1 to Metrics.numDims)
+    val terms = (1 to Tables.embeddingDim)
       .map(i => s"v[$i]*(${Metrics.weight(c, i - 1)}.0)").mkString(" + ")
     s"($terms) AS score_$c"
   }.mkString(",\n  ")
+
+  private def mlScoreNames: Seq[String] = (0 until Metrics.numClasses).map(c => s"score_$c")
 
   private def mlCaseChain: String = (0 until Metrics.numClasses - 1).map { c =>
     val conds = ((c + 1) until Metrics.numClasses)
@@ -3156,45 +2822,120 @@ object SparkEntry {
   /** DuckDB twin of [[Metrics.linearPredictions]] — scores and argmax
     * generated from the same weight formula, explicit left-assoc sums so
     * the fold order matches Spark's `aggregate` exactly. */
-  private def mlPredCte: String = {
-    val scoreExprs = mlScoreExprs
-    val caseChain = mlCaseChain
-    s"""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
-       |  CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |s AS (SELECT vec_id, label,
-       |  $scoreExprs
-       | FROM e),
+  private def mlPredCte: String =
+    s"""$mlScoreCtes,
        |p AS (SELECT vec_id, label,
-       |  CAST(CASE$caseChain END AS BIGINT) AS pred
+       |  CAST(CASE$mlCaseChain END AS BIGINT) AS pred
        | FROM s)""".stripMargin
+
+  /** The `e` (vec_id, label, v) and `s` (vec_id, label, score_0..) CTEs
+    * every ML twin starts from. */
+  private def mlScoreCtes: String =
+    s"""WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
+       |  $embDoubleSql FROM embeddings),
+       |s AS (SELECT vec_id, label,
+       |  $mlScoreExprs
+       | FROM e)""".stripMargin
+
+  /** [[tokenHashCtes]] and CTEs `u`/`sp`: every stride-spaced window of
+    * [[Text.boilWindowTokens]] token hashes folded by the [[Dedup.combine2]]
+    * multiplier to one span key `sh`, as in [[Text.boilerplateSpans]]. */
+  private def boilSpanCtes: String = {
+    val (w, st) = (Text.boilWindowTokens, Text.boilStride)
+    s"""${tokenHashCtes(w)},
+       |u AS (
+       | SELECT doc_id, th,
+       |  unnest(generate_series(0,
+       |    CAST(floor((len(th) - $w)
+       |      / $st.0) AS BIGINT))) AS j
+       | FROM th),
+       |sp AS (
+       | SELECT doc_id,
+       |  list_reduce(list_prepend(CAST(0 AS BIGINT),
+       |    list_slice(th, j * $st + 1,
+       |      j * $st + $w)),
+       |    (acc, h) -> (acc * ${Dedup.shingleMult} + h) % ${Dedup.P}) AS sh
+       | FROM u)""".stripMargin
   }
+
+  /** CTEs `und` (the undirected cross-nation trade edges a < b with
+    * weight w) and `tot` (their count and weight sum): the input of the
+    * strong-edge cut of [[Graph.tradeTriangles]] and
+    * [[Graph.tradeCommunities]]. */
+  private def tradeUndCtes: String =
+    s"""und AS (
+       | SELECT least(c_nationkey, s_nationkey) AS a,
+       |  greatest(c_nationkey, s_nationkey) AS b, count(*) AS w
+       | ${Graph.tradePairsSql}),
+       |tot AS (SELECT count(*) AS ne, CAST(sum(w) AS BIGINT) AS sw FROM und)""".stripMargin
+
+  /** CTEs `tk` (one row per whitespace token and its source) and `g`
+    * (each source's token counts). */
+  private def sourceTokenCtes: String =
+    s"""tk AS (
+       | SELECT source,
+       |  unnest(${tokensSql("text")}) AS token
+       | FROM documents),
+       |g AS (SELECT source, token, count(*) AS n FROM tk
+       |      GROUP BY source, token)""".stripMargin
+
+  /** [[Text.qualityScore]]'s blend of token diversity, stopword share
+    * and length, over n_distinct, n_stop and n_tokens. */
+  private def qualitySql: String =
+    """round(0.4 * (n_distinct / n_tokens) + 0.3 * (1.0 - n_stop / n_tokens)
+      |        + 0.3 * least(1.0, n_tokens / 60.0), 6)""".stripMargin
+
+  /** CTE `m`: geometry and units of every image and video poster
+    * ([[Multimodal.mediaTable]] rows with doc_id % 3 <> 1). */
+  private def posterMediaCte: String =
+    s"""m AS (
+       | SELECT doc_id AS media_id,
+       |  ${Multimodal.mediaGeometrySql},
+       |  ${Multimodal.mediaUnitsSql}
+       | FROM documents WHERE doc_id % 3 <> 1)""".stripMargin
 
   /** Shared DuckDB CTE chain replaying [[Dedup]]'s tokenize → shingle →
     * poly-hash → MinHash-signature pipeline from the same constants, so
     * engine and oracle cannot drift. */
-  private def dedupCtes: String = {
-    val sigExprs = Dedup.A.indices.map { j =>
-      s"list_aggregate(list_transform(hs, h -> (h*${Dedup.A(j)}+${Dedup.B(j)}) % ${Dedup.P}), 'min') AS sig_$j"
-    }.mkString(",\n  ")
-    val m = Dedup.shingleMult
-    s"""WITH t AS (
-       | SELECT doc_id, list_filter(string_split(text,' '), s -> len(s)>0) AS toks
-       | FROM documents),
-       |th AS (
-       | SELECT doc_id, list_transform(toks, tok ->
-       |   list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |     list_transform(string_split(tok,''), c -> CAST(ascii(c) AS BIGINT))),
-       |     (acc,c) -> (acc*31 + c) % ${Dedup.P})) AS th
-       | FROM t WHERE len(toks) >= 3),
+  private def dedupCtes: String =
+    s"""WITH ${tokenHashCtes(3)},
        |hsh AS (
-       | SELECT doc_id, list_distinct(list_transform(generate_series(1, len(th)-2),
-       |   i -> ((th[i]*$m + th[i+1]) % ${Dedup.P} * $m + th[i+2]) % ${Dedup.P})) AS hs
+       | SELECT doc_id, list_distinct(${combine3Sql("th")}) AS hs
        | FROM th),
        |sig AS (
        | SELECT doc_id, hs,
-       |  $sigExprs
+       |  ${minhashSigSql("hs")}
        | FROM hsh)""".stripMargin
-  }
+
+  /** The MinHash signature columns sig_0.. of the shingle-set list `set`:
+    * the minimum of each [[Dedup.A]]/[[Dedup.B]] affine image. */
+  private def minhashSigSql(set: String): String = Dedup.A.indices.map { j =>
+    s"list_aggregate(list_transform($set, h -> (h*${Dedup.A(j)}+${Dedup.B(j)}) % ${Dedup.P}), 'min') AS sig_$j"
+  }.mkString(",\n  ")
+
+  /** One (doc_id, band, s1, s2) row per doc and band of the signature
+    * CTE `sig`: band b keys on sig_2b and sig_2b+1. */
+  private def bandSelectsSql(sig: String): String = (0 until Dedup.numBands).map(b =>
+    s"SELECT doc_id, $b AS band, sig_${2 * b} AS s1, sig_${2 * b + 1} AS s2 FROM $sig")
+    .mkString("\n  UNION ALL ")
+
+  /** CTE `name`: the rows (`cols`) of CTE `name`0 whose band bucket
+    * (`key`) holds at most [[Dedup.maxBandBucket]] members — the
+    * degenerate-bucket guard of LSH candidate mining. */
+  private def cappedBandsCte(name: String, cols: String, key: String): String =
+    s"""$name AS (
+       | SELECT $cols FROM (
+       |  SELECT *, count(*) OVER (PARTITION BY $key) AS bmembers
+       |  FROM ${name}0) WHERE bmembers <= ${Dedup.maxBandBucket})""".stripMargin
+
+  /** CTE `name`: every ordered doc pair that shares a band key in the
+    * band CTE `bands`. */
+  private def bandCandCte(name: String, bands: String): String =
+    s"""$name AS (
+       | SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+       | FROM $bands x JOIN $bands y
+       |   ON x.band = y.band AND x.s1 = y.s1 AND x.s2 = y.s2
+       |  AND x.doc_id < y.doc_id)""".stripMargin
 
   /** DuckDB twin of [[Dedup.simhash]], generated from the same constants:
     * 60-bit signature fed by two 30-bit token hashes. */
@@ -3207,13 +2948,11 @@ object SparkEntry {
     val bits = (0 until Dedup.simhashBits).map(b =>
       s"(CASE WHEN s_$b * 2 > t THEN ${1L << b} ELSE 0 END)").mkString(" + ")
     s"""WITH t AS (
-       | SELECT doc_id, unnest(list_filter(string_split(text,' '), s -> len(s)>0)) AS tok
+       | SELECT doc_id, unnest(${tokensSql("text")}) AS tok
        | FROM documents),
        |c AS (SELECT doc_id, tok, count(*) AS cnt FROM t GROUP BY doc_id, tok),
        |h AS (
-       | SELECT doc_id, cnt, list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |   list_transform(string_split(tok,''), ch -> CAST(ascii(ch) AS BIGINT))),
-       |   (acc,ch) -> (acc*31 + ch) % ${Dedup.P}) AS h1
+       | SELECT doc_id, cnt, ${polyHashSql("tok")} AS h1
        | FROM c),
        |h2 AS (SELECT doc_id, cnt, h1, (h1*${Dedup.A2} + ${Dedup.B2}) % ${Dedup.P} AS h2 FROM h),
        |v AS (SELECT doc_id,
@@ -3307,34 +3046,45 @@ object SparkEntry {
        |SELECT round(pt, 6) AS pt, density FROM d ORDER BY pt""".stripMargin
   }
 
+  /** Exact Jaccard of an [[overlapCte]] row, 6dp like the engine's. */
+  private def jacSql: String = "round(inter / (na + nb - inter), 6)"
+
+  /** A doc pair's hashed-shingle overlap over `hsh` aliases `a`/`b`: the
+    * intersection size and both set sizes. */
+  private def overlapSql: String =
+    """CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE) AS inter,
+      |  len(a.hs) AS na, len(b.hs) AS nb""".stripMargin
+
+  /** CTE `name`: every (doc_a, doc_b) candidate of CTE `cand` with its
+    * [[overlapSql]]. */
+  private def overlapCte(name: String, cand: String): String =
+    s"""$name AS (
+       | SELECT doc_a, doc_b,
+       |  $overlapSql
+       | FROM $cand JOIN hsh a ON $cand.doc_a = a.doc_id
+       |            JOIN hsh b ON $cand.doc_b = b.doc_id)""".stripMargin
+
+  /** CTE `j`: the [[overlapSql]] of every doc pair below id 500 — the
+    * brute-force Jaccard and containment baselines. */
+  private def bruteOverlapCte: String =
+    s"""j AS (
+       | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       |  $overlapSql
+       | FROM hsh a JOIN hsh b ON a.doc_id < b.doc_id
+       | WHERE a.doc_id < 500 AND b.doc_id < 500)""".stripMargin
+
   /** [[dedupCtes]] extended through LSH banding and exact-Jaccard verify
     * to a `pairs` CTE — shared by the pair query and the cluster query. */
-  private def minhashPairsCtes: String = dedupCtes + {
-    val bandSelects = (0 until Dedup.numBands).map(b =>
-      s"SELECT doc_id, $b AS band, sig_${2 * b} AS s1, sig_${2 * b + 1} AS s2 FROM sig")
-      .mkString("\n  UNION ALL ")
+  private def minhashPairsCtes: String = dedupCtes +
     s"""
        |, bands0 AS (
-       |  $bandSelects),
-       |bands AS (
-       | SELECT doc_id, band, s1, s2 FROM (
-       |  SELECT *, count(*) OVER (PARTITION BY band, s1, s2) AS bmembers
-       |  FROM bands0) WHERE bmembers <= ${Dedup.maxBandBucket}),
-       |cand AS (
-       | SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-       | FROM bands x JOIN bands y
-       |   ON x.band = y.band AND x.s1 = y.s1 AND x.s2 = y.s2
-       |  AND x.doc_id < y.doc_id),
-       |j AS (
-       | SELECT doc_a, doc_b,
-       |  CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE) AS inter,
-       |  len(a.hs) AS na, len(b.hs) AS nb
-       | FROM cand JOIN hsh a ON cand.doc_a = a.doc_id
-       |           JOIN hsh b ON cand.doc_b = b.doc_id),
+       |  ${bandSelectsSql("sig")}),
+       |${cappedBandsCte("bands", "doc_id, band, s1, s2", "band, s1, s2")},
+       |${bandCandCte("cand", "bands")},
+       |${overlapCte("j", "cand")},
        |pairs AS (
-       | SELECT doc_a, doc_b, round(inter / (na + nb - inter), 6) AS jac
-       | FROM j WHERE round(inter / (na + nb - inter), 6) >= 0.8)""".stripMargin
-  }
+       | SELECT doc_a, doc_b, $jacSql AS jac
+       | FROM j WHERE $jacSql >= 0.8)""".stripMargin
 
   /** Shared CTE block for the sign-LSH dump twins (round-7 verdict #5):
     * read a (vec_id, signature) verify dump, slice the 64-bit signature
@@ -3362,27 +3112,28 @@ object SparkEntry {
        |sbands0 AS (
        | SELECT vec_id, sign_bits, band, (sign_bits >> (band * 8)) & 255 AS key
        | FROM s, (SELECT unnest(generate_series(0, 7)) AS band) bb),
-       |sbands AS (
-       | SELECT vec_id, sign_bits, band, key FROM (
-       |  SELECT *, count(*) OVER (PARTITION BY band, key) AS bmembers
-       |  FROM sbands0) WHERE bmembers <= ${Dedup.maxBandBucket}),
+       |${cappedBandsCte("sbands", "vec_id, sign_bits, band, key", "band, key")},
        |cand AS (
        | SELECT DISTINCT x.vec_id AS vec_a, y.vec_id AS vec_b
        | FROM sbands x JOIN sbands y
        |   ON x.band = y.band AND x.key = y.key AND x.vec_id < y.vec_id
        |  AND bit_count(xor(x.sign_bits, y.sign_bits)) <= $hamCut),
-       |se AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |sn AS (SELECT vec_id, v,
-       |  sqrt(list_reduce(list_transform(generate_series(1,64), i -> v[i]*v[i]), (x,y) -> x+y)) AS nrm
-       | FROM se),
+       |${embNormCtes("se", "sn")},
        |vp AS (
        | SELECT vec_a, vec_b,
-       |  round(list_reduce(list_transform(generate_series(1,64), i -> a.v[i]*b.v[i]), (x,y) -> x+y)
-       |   / (a.nrm * b.nrm), 6) AS cos_sim
+       |  ${cosSimSql("a", "b")} AS cos_sim
        | FROM cand JOIN sn a ON cand.vec_a = a.vec_id
        |           JOIN sn b ON cand.vec_b = b.vec_id),
        |pr AS (SELECT vec_a, vec_b, cos_sim FROM vp WHERE cos_sim >= $minCos)""".stripMargin
   }
+
+  /** CTEs `s` (the q_sim_sign_index dump) and `q` (its first 10 rows as
+    * queries): the input of the ANN twins. */
+  private def signQueryCtes: String =
+    s"""s AS (SELECT vec_id, sign_bits
+       | FROM '${Stats.verifyOutToken}/q_sim_sign_index/*.parquet'),
+       |q AS (SELECT vec_id AS q_id, sign_bits AS q_bits
+       |      FROM s WHERE vec_id < 10)""".stripMargin
 
   /** Shared ANN-shortlist CTE block (no leading WITH): hamming top-c
     * per query over the q_sim_sign_index dump + exact-cosine re-rank
@@ -3391,31 +3142,20 @@ object SparkEntry {
     * default args (nQueries = 10, k = 10, shortlist c = 128). */
   private def annTopkCtes: String = {
     val c = 128
-    s"""s AS (SELECT vec_id, sign_bits
-       | FROM '${graft.explore.Stats.verifyOutToken}/q_sim_sign_index/*.parquet'),
-       |q AS (SELECT vec_id AS q_id, sign_bits AS q_bits
-       |      FROM s WHERE vec_id < 10),
+    s"""$signQueryCtes,
        |short AS (
        | SELECT q_id, cand_id FROM (
        |  SELECT q.q_id, s.vec_id AS cand_id,
        |   row_number() OVER (PARTITION BY q.q_id
        |     ORDER BY bit_count(xor(s.sign_bits, q.q_bits)), s.vec_id) AS hr
        |  FROM s JOIN q ON s.vec_id <> q.q_id) WHERE hr <= $c),
-       |se AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |sn AS (SELECT vec_id, v,
-       |  sqrt(list_reduce(list_transform(generate_series(1,64), i -> v[i]*v[i]), (x,y) -> x+y)) AS nrm
-       | FROM se),
+       |${embNormCtes("se", "sn")},
        |scored AS (
        | SELECT short.q_id, short.cand_id,
-       |  round(list_reduce(list_transform(generate_series(1,64), i -> a.v[i]*b.v[i]), (x,y) -> x+y)
-       |   / (a.nrm * b.nrm), 6) AS cos_sim
+       |  ${cosSimSql("a", "b")} AS cos_sim
        | FROM short JOIN sn a ON short.q_id = a.vec_id
        |            JOIN sn b ON short.cand_id = b.vec_id),
-       |atopk AS (
-       | SELECT q_id, cand_id, cos_sim, CAST(rnk AS BIGINT) AS rnk FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY q_id
-       |    ORDER BY cos_sim DESC, cand_id) AS rnk
-       |  FROM scored) t WHERE rnk <= 10)""".stripMargin
+       |atopk AS (${topKSql("scored", 10)})""".stripMargin
   }
 
   /** Shared DuckDB CTEs for the BPE family: merge table from the
@@ -3431,8 +3171,7 @@ object SparkEntry {
          |mm AS (SELECT r, chr(31) || a || chr(31) || b || chr(31) AS pat,
          |               chr(31) || a || b || chr(31) AS rep FROM m),
          |mx AS (SELECT COALESCE(max(r), 0) AS mx FROM mm),
-         |t AS (SELECT doc_id,
-         |        list_filter(string_split(text, ' '), s -> len(s) > 0) AS toks
+         |t AS (SELECT doc_id, ${tokensSql("text")} AS toks
          |      FROM documents),
          |w0 AS (SELECT DISTINCT unnest(toks) AS w FROM t),
          |enc(w, s, r) AS (
@@ -3447,7 +3186,7 @@ object SparkEntry {
          |  FROM enc e JOIN mm ON mm.r = e.r),
          |wenc AS (SELECT w, s FROM enc, mx WHERE enc.r = mx.mx + 1),
          |wd AS (SELECT w,
-         |        list_filter(string_split(s, chr(31)), x -> len(x) > 0) AS pieces
+         |        ${tokensSql("s", "chr(31)")} AS pieces
          |       FROM wenc),
          |wdd AS (SELECT w, array_to_string(pieces, '@@ ') AS disp,
          |         CAST(len(pieces) AS BIGINT) AS np FROM wd),
@@ -3471,30 +3210,52 @@ object SparkEntry {
     * the dump, so the twin tracks [[graft.ops.Similarity.adaptivePqKsub]]
     * without a literal. */
   private def pqCtes: String =
-    s"""cb AS (SELECT subspace, code, list(value ORDER BY dim) AS c
-       | FROM '${graft.explore.Stats.verifyOutToken}/q_sim_pq_codebooks/*.parquet'
-       | GROUP BY subspace, code),
-       |pe AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |pn AS (SELECT vec_id, v,
-       |  sqrt(list_reduce(list_transform(generate_series(1,64), i -> v[i]*v[i]), (x,y) -> x+y)) AS nrm
-       | FROM pe),
-       |pw AS (SELECT vec_id, v, nrm,
-       |  list_transform(generate_series(1,64), i -> v[i]/nrm) AS w
-       | FROM pn WHERE nrm > 0),
-       |psub AS (SELECT pw.vec_id, cb.subspace, cb.code,
-       |  list_reduce(list_transform(generate_series(1,8), i -> cb.c[i]*cb.c[i]), (x,y) -> x+y)
-       |  - 2.0 * list_reduce(list_transform(generate_series(1,8), i -> pw.w[cb.subspace*8+i]*cb.c[i]), (x,y) -> x+y) AS dist
-       | FROM pw CROSS JOIN cb),
-       |pasg AS (SELECT vec_id, subspace, code FROM (
-       |  SELECT vec_id, subspace, code,
-       |   row_number() OVER (PARTITION BY vec_id, subspace ORDER BY dist, code) AS r
-       |  FROM psub) WHERE r = 1),
+    s"""${codebookCte("cb", "q_sim_pq_codebooks")},
+       |$pqNormCtes,
+       |${codeAssignCtes("pw", "w", "cb", "psub", "pasg")},
        |pq AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, w AS qw
        |       FROM pw WHERE vec_id < 10),
        |pdt AS (SELECT pq.q_id, cb.subspace, cb.code,
-       |  list_reduce(list_transform(generate_series(1,8), i ->
-       |    (pq.qw[cb.subspace*8+i] - cb.c[i]) * (pq.qw[cb.subspace*8+i] - cb.c[i])), (x,y) -> x+y) AS term
+       |  ${adcTermSql("pq.qw", "cb")} AS term
        | FROM pq CROSS JOIN cb)""".stripMargin
+
+  /** CTE `name`: a codebook dump's centroids as (subspace, code, c). */
+  private def codebookCte(name: String, dump: String): String =
+    s"""$name AS (SELECT subspace, code, list(value ORDER BY dim) AS c
+       | FROM '${Stats.verifyOutToken}/$dump/*.parquet'
+       | GROUP BY subspace, code)""".stripMargin
+
+  /** CTEs `sub` and `asg`: every row of CTE `rows` gets, per subspace, the
+    * code of codebook CTE `cb` nearest its list column `vec` — argmin of
+    * |c|²−2·x·c, lowest code on ties, as [[Similarity.ensurePqCodes]]. */
+  private def codeAssignCtes(rows: String, vec: String, cb: String, sub: String,
+                             asg: String): String = {
+    val d = Similarity.pqSubDim
+    s"""$sub AS (SELECT $rows.vec_id, $cb.subspace, $cb.code,
+       |  ${sumDimsSql(s"$cb.c[i]*$cb.c[i]", d)}
+       |  - 2.0 * ${sumDimsSql(s"$rows.$vec[$cb.subspace*$d+i]*$cb.c[i]", d)} AS dist
+       | FROM $rows CROSS JOIN $cb),
+       |$asg AS (SELECT vec_id, subspace, code FROM (
+       |  SELECT vec_id, subspace, code,
+       |   row_number() OVER (PARTITION BY vec_id, subspace ORDER BY dist, code) AS r
+       |  FROM $sub) WHERE r = 1)""".stripMargin
+  }
+
+  /** ADC table term of the query list `qv` for each code of codebook CTE
+    * `cb`: the squared distance of its subvector to the code. */
+  private def adcTermSql(qv: String, cb: String): String = {
+    val d = Similarity.pqSubDim
+    sumDimsSql(s"($qv[$cb.subspace*$d+i] - $cb.c[i]) * ($qv[$cb.subspace*$d+i] - $cb.c[i])", d)
+  }
+
+  /** The `pe`/`pn` [[Similarity.embNormCtes]] pair plus `pw`, its
+    * nonzero-norm rows L2-normalized as `w` — the frame the PQ codes are
+    * fitted and assigned on. */
+  private def pqNormCtes: String =
+    s"""${embNormCtes("pe", "pn")},
+       |pw AS (SELECT vec_id, v, nrm,
+       |  ${dimsSql("v[i]/nrm")} AS w
+       | FROM pn WHERE nrm > 0)""".stripMargin
 
   /** Shared CTE block for the residual IVF-PQ twins: residual codebooks
     * from the `q_sim_rpq_codebooks` dump, coarse centroids (+ their
@@ -3504,31 +3265,16 @@ object SparkEntry {
     * residual code argmin — everything [[graft.ops.Similarity
     * .rpqCodesDump]] publishes, replayed from the two dumps. */
   private def rpqCtes: String =
-    s"""rcb AS (SELECT subspace, code, list(value ORDER BY dim) AS c
-       | FROM '${graft.explore.Stats.verifyOutToken}/q_sim_rpq_codebooks/*.parquet'
-       | GROUP BY subspace, code),
-       |pe AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |pn AS (SELECT vec_id, v,
-       |  sqrt(list_reduce(list_transform(generate_series(1,64), i -> v[i]*v[i]), (x,y) -> x+y)) AS nrm
-       | FROM pe),
-       |pw AS (SELECT vec_id, v, nrm,
-       |  list_transform(generate_series(1,64), i -> v[i]/nrm) AS w
-       | FROM pn WHERE nrm > 0),
+    s"""${codebookCte("rcb", "q_sim_rpq_codebooks")},
+       |$pqNormCtes,
        |${ivfCtes("pw")},
        |icn AS (SELECT cell, c, list_transform(c, x ->
-       |  x / sqrt(list_reduce(list_transform(generate_series(1,64), i -> c[i]*c[i]), (x,y) -> x+y))) AS cn
+       |  x / ${normSql("c")}) AS cn
        | FROM icent),
        |rres AS (SELECT pw.vec_id, iasg.cell,
-       |  list_transform(generate_series(1,64), i -> pw.w[i] - icn.cn[i]) AS rv
+       |  ${dimsSql("pw.w[i] - icn.cn[i]")} AS rv
        | FROM pw JOIN iasg USING (vec_id) JOIN icn USING (cell)),
-       |rsub AS (SELECT rres.vec_id, rcb.subspace, rcb.code,
-       |  list_reduce(list_transform(generate_series(1,8), i -> rcb.c[i]*rcb.c[i]), (x,y) -> x+y)
-       |  - 2.0 * list_reduce(list_transform(generate_series(1,8), i -> rres.rv[rcb.subspace*8+i]*rcb.c[i]), (x,y) -> x+y) AS dist
-       | FROM rres CROSS JOIN rcb),
-       |rasg AS (SELECT vec_id, subspace, code FROM (
-       |  SELECT vec_id, subspace, code,
-       |   row_number() OVER (PARTITION BY vec_id, subspace ORDER BY dist, code) AS r
-       |  FROM rsub) WHERE r = 1)""".stripMargin
+       |${codeAssignCtes("rres", "rv", "rcb", "rsub", "rasg")}""".stripMargin
 
   /** Shared IVF CTE block for the IVF-family twins, replayed from the
     * `q_sim_ivf_centroids` dump: `icent` (centroid vectors), `iasg`
@@ -3543,8 +3289,8 @@ object SparkEntry {
        | FROM '${graft.explore.Stats.verifyOutToken}/q_sim_ivf_centroids/*.parquet'
        | GROUP BY cell),
        |iad AS (SELECT $src.vec_id, icent.cell,
-       |  list_reduce(list_transform(generate_series(1,64), i -> icent.c[i]*icent.c[i]), (x,y) -> x+y)
-       |  - 2.0 * list_reduce(list_transform(generate_series(1,64), i -> $src.v[i]*icent.c[i]), (x,y) -> x+y) AS dist
+       |  ${dotSql("icent.c", "icent.c")}
+       |  - 2.0 * ${dotSql(s"$src.v", "icent.c")} AS dist
        | FROM $src CROSS JOIN icent),
        |iasg AS (SELECT vec_id, cell FROM (
        |  SELECT vec_id, cell,
@@ -3553,9 +3299,21 @@ object SparkEntry {
        |ipr AS (SELECT q_id, cell,
        |  row_number() OVER (PARTITION BY q_id ORDER BY cdist DESC, cell) AS cr
        | FROM (SELECT $src.vec_id AS q_id, icent.cell,
-       |  list_reduce(list_transform(generate_series(1,64), i -> $src.v[i]*icent.c[i]), (x,y) -> x+y)
-       |   / nullif($src.nrm * sqrt(list_reduce(list_transform(generate_series(1,64), i -> icent.c[i]*icent.c[i]), (x,y) -> x+y)), 0.0) AS cdist
+       |  ${dotSql(s"$src.v", "icent.c")}
+       |   / nullif($src.nrm * ${normSql("icent.c")}, 0.0) AS cdist
        |  FROM $src CROSS JOIN icent WHERE $src.vec_id < 10))""".stripMargin
+
+  /** Rounded exact cosine (q_id, cand_id, cos_sim) of each query in CTE
+    * `q` (q_id, qv, qn) against the `n` rows in its `probes` best-ranked
+    * [[ivfCtes]] cells, self excluded. */
+  private def ivfScored(q: String, probes: Int): String =
+    s"""SELECT $q.q_id, n.vec_id AS cand_id,
+       |  round(${dotSql(s"$q.qv", "n.v")}
+       |   / nullif($q.qn * n.nrm, 0.0), 6) AS cos_sim
+       | FROM ipr JOIN $q ON ipr.q_id = $q.q_id
+       |      JOIN iasg ON iasg.cell = ipr.cell
+       |      JOIN n ON n.vec_id = iasg.vec_id
+       | WHERE ipr.cr <= $probes AND n.vec_id <> $q.q_id""".stripMargin
 
   /** ADC-shortlist (by adc asc, cand_id tie-break) + exact-cosine
     * re-rank tail shared by the `q_sim_pq_topk` / `q_sim_ivfpq_topk`
@@ -3570,14 +3328,11 @@ object SparkEntry {
        |   row_number() OVER (PARTITION BY q_id ORDER BY adc, cand_id) AS r
        |  FROM $adcCte) WHERE r <= ${Similarity.pqTwinShortlist}),
        |pscored AS (SELECT psl.q_id, psl.cand_id,
-       |  round(list_reduce(list_transform(generate_series(1,64), i -> a.v[i]*b.v[i]), (x,y) -> x+y)
+       |  round(${dotSql("a.v", "b.v")}
        |   / nullif(a.nrm * b.nrm, 0.0), 6) AS cos_sim
        | FROM psl JOIN pn a ON psl.q_id = a.vec_id
        |          JOIN pn b ON psl.cand_id = b.vec_id)
-       |SELECT q_id, cand_id, cos_sim, CAST(rnk AS BIGINT) AS rnk FROM (
-       | SELECT *, row_number() OVER (PARTITION BY q_id
-       |   ORDER BY cos_sim DESC, cand_id) AS rnk
-       | FROM pscored) t WHERE rnk <= 10 ORDER BY q_id, rnk""".stripMargin
+       |${topKSql("pscored", 10)} ORDER BY q_id, rnk""".stripMargin
 
   /** DuckDB twin of [[Text.sparseCandidatePairs]]: WIDE-keyed
     * rare-shingle postings (per-token poly-hash fold + TWO independent
@@ -3589,28 +3344,14 @@ object SparkEntry {
     * hand-written 4-term chain would silently diverge if the constant
     * changed). */
   private def sparsePairCtes: String = {
-    val p = Dedup.P
     val n = Text.sparseSimShingleWords
-    // rolling fold over window terms th[i] .. th[i+n-1], 1-indexed SQL
-    def chain(m: Long): String = (1 until n).foldLeft("th[i]") {
-      (acc, j) => s"($acc * $m + th[i+$j]) % $p"
-    }
-    s"""WITH t AS (
-       | SELECT doc_id,
-       |  list_filter(string_split(text, ' '), s -> len(s) > 0) AS toks
-       | FROM documents),
-       |sth AS (
-       | SELECT doc_id, list_transform(toks, tok ->
-       |   list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |     list_transform(string_split(tok,''), c -> CAST(ascii(c) AS BIGINT))),
-       |     (acc,c) -> (acc*31 + c) % $p)) AS th
-       | FROM t WHERE len(toks) >= $n),
+    s"""WITH ${tokenHashCtes(n)},
        |tk AS (
        | SELECT doc_id, unnest(list_distinct(list_transform(
        |   generate_series(1, len(th) - ${n - 1}),
-       |   i -> (${chain(Dedup.shingleMult)}) * $p + (${chain(Dedup.shingleMult2)}))))
+       |   i -> ${wideKeySql(n)})))
        |  AS token
-       | FROM sth),
+       | FROM th),
        |rare AS (SELECT token FROM tk GROUP BY token
        |         HAVING count(*) BETWEEN 2 AND ${Text.sparseSimDfCap}),
        |rp AS (SELECT tk.doc_id, tk.token FROM tk JOIN rare USING (token)),
@@ -3620,22 +3361,30 @@ object SparkEntry {
        | GROUP BY 1, 2 HAVING count(*) >= ${Text.sparseSimMinShared})""".stripMargin
   }
 
+  /** Connected components of the pair CTE `pairs` (`key`_a, `key`_b) —
+    * the contraction behind [[Dedup.dupClusters]] — as three CTEs named
+    * with `prefix`: `sym` (both directions), the recursive `reach`, and
+    * `lab`, which gives every paired `key`_id its component's minimum id
+    * as `rep`. Must run under `WITH RECURSIVE`. */
+  private def componentCtes(pairs: String, key: String, prefix: String = "",
+                            rep: String = "cluster_rep"): String =
+    s"""${prefix}sym AS (
+       | SELECT ${key}_a AS src, ${key}_b AS dst FROM $pairs
+       | UNION SELECT ${key}_b, ${key}_a FROM $pairs),
+       |${prefix}reach AS (
+       | SELECT src, dst FROM ${prefix}sym
+       | UNION
+       | SELECT r.src, s.dst FROM ${prefix}reach r JOIN ${prefix}sym s ON r.dst = s.src),
+       |${prefix}lab AS (SELECT src AS ${key}_id, least(src, min(dst)) AS $rep
+       |        FROM ${prefix}reach GROUP BY src)""".stripMargin
+
   /** [[minhashPairsCtes]] extended to cluster labels (recursive CTE) — the
     * `lab` CTE gives every clustered doc its component's min doc_id;
     * shared by the cluster query, the deduped-corpus query and the
     * end-to-end corpus composition. */
   private def clusterLabCtes: String =
-    minhashPairsCtes.replaceFirst("WITH ", "WITH RECURSIVE ") +
-      """
-        |, sym AS (
-        | SELECT doc_a AS src, doc_b AS dst FROM pairs
-        | UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        | SELECT src, dst FROM sym
-        | UNION
-        | SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src),
-        |lab AS (SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
-        |        FROM reach GROUP BY src)""".stripMargin
+    minhashPairsCtes.replaceFirst("WITH ", "WITH RECURSIVE ") + ",\n" +
+      componentCtes("pairs", "doc")
 
   /** DuckDB twin of [[Dedup.incrementalAssign]], generated from the same
     * constants: the corpus cut, old-corpus labels (recursive CTE), verified
@@ -3658,75 +3407,32 @@ object SparkEntry {
     |FROM wc JOIN ca ON wc.comp = ca.comp
     |ORDER BY doc_id""".stripMargin
 
-  private def incrementalCtes: String = {
-    val bandSelects = (0 until Dedup.numBands).map(b =>
-      s"SELECT doc_id, $b AS band, sig_${2 * b} AS s1, sig_${2 * b + 1} AS s2 FROM sig")
-      .mkString("\n  UNION ALL ")
+  private def incrementalCtes: String =
     dedupCtes.replaceFirst("WITH ", "WITH RECURSIVE ") + s"""
        |, cutv AS (SELECT CAST(floor(max(doc_id) * ${1.0 - Dedup.incNewFrac})
        |                  AS BIGINT) AS cut FROM documents),
        |bands AS (
-       |  $bandSelects),
+       |  ${bandSelectsSql("sig")}),
        |oldb AS (SELECT b.* FROM bands b, cutv WHERE b.doc_id < cut),
        |newb AS (SELECT b.* FROM bands b, cutv WHERE b.doc_id >= cut),
-       |ocand AS (
-       | SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-       | FROM oldb x JOIN oldb y
-       |   ON x.band = y.band AND x.s1 = y.s1 AND x.s2 = y.s2
-       |  AND x.doc_id < y.doc_id),
-       |oj AS (
-       | SELECT doc_a, doc_b,
-       |  CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE) AS inter,
-       |  len(a.hs) AS na, len(b.hs) AS nb
-       | FROM ocand JOIN hsh a ON ocand.doc_a = a.doc_id
-       |            JOIN hsh b ON ocand.doc_b = b.doc_id),
-       |opairs AS (SELECT doc_a, doc_b FROM oj
-       |           WHERE round(inter / (na + nb - inter), 6) >= 0.8),
-       |osym AS (SELECT doc_a AS src, doc_b AS dst FROM opairs
-       |         UNION SELECT doc_b, doc_a FROM opairs),
-       |oreach AS (
-       | SELECT src, dst FROM osym
-       | UNION
-       | SELECT r.src, s.dst FROM oreach r JOIN osym s ON r.dst = s.src),
-       |olab AS (SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
-       |         FROM oreach GROUP BY src),
+       |${bandCandCte("ocand", "oldb")},
+       |${overlapCte("oj", "ocand")},
+       |opairs AS (SELECT doc_a, doc_b FROM oj WHERE $jacSql >= 0.8),
+       |${componentCtes("opairs", "doc", prefix = "o")},
        |xcand AS (
        | SELECT DISTINCT n.doc_id AS doc_a, o.doc_id AS doc_b
        | FROM newb n JOIN oldb o
        |   ON n.band = o.band AND n.s1 = o.s1 AND n.s2 = o.s2),
-       |xj AS (
-       | SELECT doc_a, doc_b,
-       |  CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE) AS inter,
-       |  len(a.hs) AS na, len(b.hs) AS nb
-       | FROM xcand JOIN hsh a ON xcand.doc_a = a.doc_id
-       |            JOIN hsh b ON xcand.doc_b = b.doc_id),
-       |xver AS (SELECT doc_a, doc_b FROM xj
-       |         WHERE round(inter / (na + nb - inter), 6) >= 0.8),
+       |${overlapCte("xj", "xcand")},
+       |xver AS (SELECT doc_a, doc_b FROM xj WHERE $jacSql >= 0.8),
        |anch AS (
        | SELECT x.doc_a AS doc_id, min(coalesce(l.cluster_rep, x.doc_b)) AS anchor
        | FROM xver x LEFT JOIN olab l ON x.doc_b = l.doc_id
        | GROUP BY x.doc_a),
-       |ncand AS (
-       | SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-       | FROM newb x JOIN newb y
-       |   ON x.band = y.band AND x.s1 = y.s1 AND x.s2 = y.s2
-       |  AND x.doc_id < y.doc_id),
-       |nj AS (
-       | SELECT doc_a, doc_b,
-       |  CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE) AS inter,
-       |  len(a.hs) AS na, len(b.hs) AS nb
-       | FROM ncand JOIN hsh a ON ncand.doc_a = a.doc_id
-       |            JOIN hsh b ON ncand.doc_b = b.doc_id),
-       |npairs AS (SELECT doc_a, doc_b FROM nj
-       |           WHERE round(inter / (na + nb - inter), 6) >= 0.8),
-       |nsym AS (SELECT doc_a AS src, doc_b AS dst FROM npairs
-       |         UNION SELECT doc_b, doc_a FROM npairs),
-       |nreach AS (
-       | SELECT src, dst FROM nsym
-       | UNION
-       | SELECT r.src, s.dst FROM nreach r JOIN nsym s ON r.dst = s.src),
-       |nlab AS (SELECT src AS doc_id, least(src, min(dst)) AS comp0
-       |         FROM nreach GROUP BY src),
+       |${bandCandCte("ncand", "newb")},
+       |${overlapCte("nj", "ncand")},
+       |npairs AS (SELECT doc_a, doc_b FROM nj WHERE $jacSql >= 0.8),
+       |${componentCtes("npairs", "doc", prefix = "n", rep = "comp0")},
        |wc AS (
        | SELECT d.doc_id, coalesce(nl.comp0, d.doc_id) AS comp
        | FROM (SELECT doc_id FROM documents, cutv WHERE doc_id >= cut) d
@@ -3735,7 +3441,6 @@ object SparkEntry {
        | SELECT wc.comp, min(a.anchor) AS comp_anchor
        | FROM wc LEFT JOIN anch a ON wc.doc_id = a.doc_id
        | GROUP BY wc.comp)""".stripMargin
-  }
 
   /** DuckDB twin of [[Dedup.containmentPairsLsh]], generated from the same
     * constants: windowed MinHash re-signing (stride = W/2), 4×2 banding on
@@ -3745,13 +3450,6 @@ object SparkEntry {
   private def containmentLshOracle: String = {
     val w = Dedup.contWindowTokens
     val step = w / 2
-    val m = Dedup.shingleMult
-    val sigExprs = Dedup.A.indices.map { j =>
-      s"list_aggregate(list_transform(whs, h -> (h*${Dedup.A(j)}+${Dedup.B(j)}) % ${Dedup.P}), 'min') AS sig_$j"
-    }.mkString(",\n  ")
-    val bandSelects = (0 until Dedup.numBands).map(b =>
-      s"SELECT doc_id, $b AS band, sig_${2 * b} AS s1, sig_${2 * b + 1} AS s2 FROM wsig")
-      .mkString("\n  UNION ALL ")
     dedupCtes + s"""
        |, w AS (
        | SELECT doc_id, unnest(list_transform(
@@ -3761,26 +3459,16 @@ object SparkEntry {
        |   st -> list_slice(th, st, st + ${w - 1}))) AS wth
        | FROM th),
        |wh AS (
-       | SELECT doc_id, list_distinct(list_transform(generate_series(1, len(wth)-2),
-       |   i -> ((wth[i]*$m + wth[i+1]) % ${Dedup.P} * $m + wth[i+2]) % ${Dedup.P})) AS whs
+       | SELECT doc_id, list_distinct(${combine3Sql("wth")}) AS whs
        | FROM w WHERE len(wth) >= 3),
        |wsig AS (
        | SELECT doc_id,
-       |  $sigExprs
+       |  ${minhashSigSql("whs")}
        | FROM wh),
        |wbands AS (
-       |  $bandSelects),
-       |wcand AS (
-       | SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-       | FROM wbands x JOIN wbands y
-       |   ON x.band = y.band AND x.s1 = y.s1 AND x.s2 = y.s2
-       |  AND x.doc_id < y.doc_id),
-       |cj AS (
-       | SELECT doc_a, doc_b,
-       |  CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE) AS inter,
-       |  len(a.hs) AS na, len(b.hs) AS nb
-       | FROM wcand JOIN hsh a ON wcand.doc_a = a.doc_id
-       |            JOIN hsh b ON wcand.doc_b = b.doc_id)
+       |  ${bandSelectsSql("wsig")}),
+       |${bandCandCte("wcand", "wbands")},
+       |${overlapCte("cj", "wcand")}
        |SELECT doc_a, doc_b, round(inter / na, 6) AS cont_a_in_b,
        | round(inter / nb, 6) AS cont_b_in_a
        |FROM cj
@@ -3793,51 +3481,36 @@ object SparkEntry {
     * engine's shuffle key) and the tiebreak is that key, so the selected
     * top-k set matches the engine exactly even on count ties; the string
     * per key is min(bigram) on both engines. */
-  private def bigramOracle: String = {
-    val m = Dedup.shingleMult
+  private def bigramOracle: String =
     s"""WITH t AS (
-       | SELECT list_filter(string_split(text,' '), s -> len(s)>0) AS toks
+       | SELECT ${tokensSql("text")} AS toks
        | FROM documents),
        |th AS (
-       | SELECT toks, list_transform(toks, tok ->
-       |   list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |     list_transform(string_split(tok,''), c -> CAST(ascii(c) AS BIGINT))),
-       |     (acc,c) -> (acc*31 + c) % ${Dedup.P})) AS th
+       | SELECT toks, list_transform(toks, tok -> ${polyHashSql("tok")}) AS th
        | FROM t WHERE len(toks) >= 2),
        |o AS (
        | SELECT unnest(list_transform(generate_series(1, len(th)-1), i ->
-       |   struct_pack(bh := (th[i]*$m + th[i+1]) % ${Dedup.P},
+       |   struct_pack(bh := ${combine2Sql("th[i]", "th[i+1]")},
        |               bg := toks[i] || ' ' || toks[i+1]))) AS u
        | FROM th),
        |g AS (SELECT u.bh AS bh, count(*) AS n, min(u.bg) AS bigram
        |      FROM o GROUP BY u.bh)
        |SELECT bigram, n FROM g ORDER BY n DESC, bh LIMIT 50""".stripMargin
-  }
 
   /** DuckDB twin of [[Text.repetitionSignals]], generated from the same
     * hash constants: per-doc duplicate-3-gram fraction and top-bigram
     * share over the hashed-token representation. */
-  private def repetitionOracle: String = {
-    val m = Dedup.shingleMult
-    s"""WITH t AS (
-       | SELECT doc_id, list_filter(string_split(text,' '), s -> len(s)>0) AS toks
-       | FROM documents),
-       |th AS (
-       | SELECT doc_id, list_transform(toks, tok ->
-       |   list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |     list_transform(string_split(tok,''), c -> CAST(ascii(c) AS BIGINT))),
-       |     (acc,c) -> (acc*31 + c) % ${Dedup.P})) AS th
-       | FROM t WHERE len(toks) >= 3),
+  private def repetitionOracle: String =
+    s"""WITH ${tokenHashCtes(3)},
        |tri AS (
        | SELECT doc_id, CAST(len(th)-2 AS BIGINT) AS n_tri,
-       |  CAST(len(list_distinct(list_transform(generate_series(1, len(th)-2),
-       |    i -> ((th[i]*$m + th[i+1]) % ${Dedup.P} * $m + th[i+2]) % ${Dedup.P})))
+       |  CAST(len(list_distinct(${combine3Sql("th")}))
        |   AS BIGINT) AS n_tri_distinct
        | FROM th),
        |bo AS (
        | SELECT doc_id, CAST(len(th)-1 AS BIGINT) AS n_bi,
        |  unnest(list_transform(generate_series(1, len(th)-1),
-       |    i -> (th[i]*$m + th[i+1]) % ${Dedup.P})) AS bh
+       |    i -> ${combine2Sql("th[i]", "th[i+1]")})) AS bh
        | FROM th),
        |bc AS (SELECT doc_id, n_bi, bh, count(*) AS c FROM bo GROUP BY 1, 2, 3),
        |bt AS (SELECT doc_id, round(CAST(max(c) AS DOUBLE) / any_value(n_bi), 6)
@@ -3848,25 +3521,33 @@ object SparkEntry {
        | top_bigram_frac
        |FROM tri JOIN bt ON tri.doc_id = bt.doc_id
        |ORDER BY tri.doc_id""".stripMargin
-  }
 
   /** Exact cosine top-k as a `topk` CTE — shared by `q_sim_topk` and the
     * kNN label-vote oracle. */
   private def simTopkCtes: String =
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |n AS (SELECT vec_id, v,
-      |  sqrt(list_reduce(list_transform(generate_series(1,64), i -> v[i]*v[i]), (x,y) -> x+y)) AS nrm
-      | FROM e),
+    s"""WITH ${embNormCtes("e", "n")},
       |p AS (SELECT q.vec_id AS q_id, c.vec_id AS cand_id,
-      |  round(list_reduce(list_transform(generate_series(1,64), i -> q.v[i]*c.v[i]), (x,y) -> x+y)
-      |   / (q.nrm * c.nrm), 6) AS cos_sim
+      |  ${cosSimSql("q", "c")} AS cos_sim
       | FROM n q, n c WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id),
-      |topk AS (
-      | SELECT q_id, cand_id, cos_sim, CAST(rnk AS BIGINT) AS rnk FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY q_id
-      |                               ORDER BY cos_sim DESC, cand_id) AS rnk
-      |  FROM p) t
-      | WHERE rnk <= 10)""".stripMargin
+      |topk AS (${topKSql("p", 10)})""".stripMargin
+
+  /** SemDeDup's keep-list over the [[componentCtes]] `lab` of vector
+    * pairs: every embedding with its cluster representative, kept iff it
+    * is its own representative. */
+  private def semKeepSql: String =
+    """SELECT emb.vec_id, CAST(emb.label AS BIGINT) AS label,
+      | coalesce(lab.cluster_rep, emb.vec_id) AS cluster_rep,
+      | CAST(emb.vec_id = coalesce(lab.cluster_rep, emb.vec_id) AS INT)
+      |   AS keep
+      |FROM embeddings emb LEFT JOIN lab ON emb.vec_id = lab.vec_id""".stripMargin
+
+  /** CTEs `e`/`n` over the first 1000 embeddings and `p`, the rounded
+    * exact cosine of every pair — the brute-force embedding dedup. */
+  private def embedPairCtes: String =
+    s"""${embNormCtes("e", "n", where = " WHERE vec_id < 1000")},
+       |p AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+       |  ${cosSimSql("a", "b")} AS cos_sim
+       | FROM n a JOIN n b ON a.vec_id < b.vec_id)""".stripMargin
 
   /** MERGE replay shared by `q_snap_merge` (copy-on-write) and
     * `q_snap_merge_mor` (merge-on-read): the twin recomputes pre/post
@@ -3876,15 +3557,8 @@ object SparkEntry {
     * twins share — the deterministic pmod change batch replayed over
     * raw orders in exact integer cents. */
   private def snapMergeStateCtes: String = {
-    val (addM, chgM, remM) = graft.ops.Validate.snapshotDiffMods
-    s"""WITH o AS (
-       | SELECT o_orderkey AS k, o_orderpriority AS prio,
-       |  CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-       | FROM orders),
-       |upd AS (SELECT k, prio, cents * 110 // 100 AS cents FROM o
-       |        WHERE k % $chgM = 0 AND k % $remM <> 0),
-       |ins AS (SELECT -(k + 1) AS k, prio, cents FROM o
-       |        WHERE k % $addM = 0),
+    val (_, _, remM) = Validate.snapshotDiffMods
+    s"""WITH $changeBatchCtes,
        |del AS (SELECT k FROM o WHERE k % $remM = 0),
        |touched AS (SELECT k FROM upd UNION SELECT k FROM ins
        |            UNION SELECT k FROM del),
@@ -3892,6 +3566,20 @@ object SparkEntry {
        |        WHERE k NOT IN (SELECT k FROM touched)
        |       UNION ALL SELECT * FROM upd
        |       UNION ALL SELECT * FROM ins)""".stripMargin
+  }
+
+  /** CTEs `o` (orders as (k, prio, exact cents)), `upd` and `ins`: the
+    * deterministic change batch of [[Validate.snapshotDiffMods]] that the
+    * CDC and MERGE twins apply. */
+  private def changeBatchCtes: String = {
+    val (addM, chgM, remM) = Validate.snapshotDiffMods
+    s"""o AS (
+       | SELECT o_orderkey AS k, o_orderpriority AS prio,
+       |  ${centsSql("o_totalprice")} AS cents
+       | FROM orders),
+       |upd AS (SELECT k, prio, cents * 110 // 100 AS cents FROM o
+       |        WHERE k % $chgM = 0 AND k % $remM <> 0),
+       |ins AS (SELECT -(k + 1) AS k, prio, cents FROM o WHERE k % $addM = 0)""".stripMargin
   }
 
   private def snapMergeSql: String = {
@@ -3939,21 +3627,7 @@ object SparkEntry {
         |ORDER BY l_returnflag, l_linestatus""".stripMargin
 
   private val timeTravelSql: String =
-      """WITH v1 AS (
-        | SELECT o_orderpriority, count(*) AS n_orders,
-        |  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-        |    AS BIGINT) AS cents
-        | FROM orders
-        | WHERE o_orderdate < TIMESTAMP '1997-01-01'
-        |   AND o_orderpriority <> '1-URGENT'
-        | GROUP BY 1
-        | UNION ALL
-        | SELECT '0-LEGACY', CAST(0 AS BIGINT), CAST(0 AS BIGINT)),
-        |v2 AS (
-        | SELECT o_orderpriority, count(*) AS n_orders,
-        |  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-        |    AS BIGINT) AS cents
-        | FROM orders GROUP BY 1)
+      s"""WITH ${Layout.ttVersionCtes}
         |SELECT coalesce(v1.o_orderpriority, v2.o_orderpriority)
         |    AS o_orderpriority,
         |  CASE WHEN v1.o_orderpriority IS NULL THEN 'added'

@@ -104,7 +104,6 @@ case class PolyHash(child: Expression) extends UnaryExpression {
       s"$prettyName requires a string operand, got ${t.sql}")
   }
 
-  private val P = 1000000007L
 
   override def nullSafeEval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString

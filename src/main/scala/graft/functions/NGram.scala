@@ -36,7 +36,6 @@ case class NGramHashes(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_ngram_hashes"
 
-  private val P = 1000000007L
   private val M = 1009L
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -122,7 +121,6 @@ case class NGramHashesWide(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_ngram_hashes_wide"
 
-  private val P = 1000000007L
   private val M1 = 1009L
   private val M2 = 10007L
 
@@ -215,7 +213,6 @@ case class TokenPolyHashes(child: Expression)
 
   override def prettyName: String = "graft_token_hashes"
 
-  private val P = 1000000007L
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     // `_: StringType` (not the object): accept collated string columns too —
@@ -313,7 +310,6 @@ case class MinHashSigs(first: Expression, second: Expression,
   // branch assigns ev.isNull, which must not be the constant `false`)
   override def nullable: Boolean = true
 
-  private val P = 1000000007L
 
   override def checkInputDataTypes(): TypeCheckResult =
     (first.dataType, second.dataType, third.dataType) match {
@@ -422,7 +418,6 @@ case class SimhashSig(child: Expression)
 
   override def prettyName: String = "graft_simhash"
 
-  private val P = 1000000007L
   private val A2 = 48271L
   private val B2 = 11L
   private val bits = 60

@@ -22,7 +22,6 @@ object Metrics {
   def weight(cls: Int, dim: Int): Long = ((cls * 64 + dim) * 37) % 19 - 9
 
   val numClasses = 10
-  val numDims = 64
 
   /** (vec_id, label, score_0..score_C) — the deterministic linear scorer's
     * per-class scores, shared by argmax prediction and log-loss. */
@@ -30,7 +29,7 @@ object Metrics {
     Similarity.embDouble(spark, dir).select(
       col("vec_id") +: col("label").cast("long").as("label") +:
         (0 until numClasses).map { c =>
-          val w = array((0 until numDims).map(d => lit(weight(c, d).toDouble)): _*)
+          val w = array((0 until Tables.embeddingDim).map(d => lit(weight(c, d).toDouble)): _*)
           graft.functions.GraftFunctions.dot(col("embedding"), w).as(s"score_$c")
         }: _*)
   }

@@ -23,7 +23,8 @@ import graft.sources.Tables
   */
 object Dedup {
 
-  val P: Long = 1000000007L
+  /** The poly-hash modulus, [[graft.functions.P]]. */
+  val P: Long = graft.functions.P
   /** Affine MinHash permutation constants h_j(x) = (A(j)·x + B(j)) mod P. */
   val A: Seq[Long] = Seq(601L, 709L, 809L, 907L, 1009L, 1109L, 1201L, 1301L)
   val B: Seq[Long] = Seq(17L, 131L, 257L, 389L, 521L, 653L, 769L, 881L)
@@ -71,6 +72,15 @@ object Dedup {
   def polyHash(c: Column): Column =
     aggregate(split(c, ""), lit(0L), (acc, ch) => (acc * 31 + ascii(ch)) % P)
 
+  /** DuckDB twin of [[polyHash]] over the VARCHAR expression `s`. */
+  private[graft] def polyHashSql(s: String): String =
+    polyFoldSql(s"list_transform(string_split($s,''), c -> CAST(ascii(c) AS BIGINT))")
+
+  /** [[polyHash]]'s `(acc·31 + x) mod P` left fold from 0, in DuckDB,
+    * over the BIGINT list expression `list`. */
+  private[graft] def polyFoldSql(list: String): String =
+    s"list_reduce(list_prepend(CAST(0 AS BIGINT), $list), (acc,c) -> (acc*31 + c) % $P)"
+
   /** Token-hash combiner for a 3-gram shingle:
     * ((h1·1009 + h2) mod P · 1009 + h3) mod P. */
   val shingleMult = 1009L
@@ -80,12 +90,24 @@ object Dedup {
     * spec-pinned); the wide key is fold1(h)·P + fold2(h). */
   val shingleMult2 = 10007L
 
+  /** DuckDB twin of the WIDE n-token window key at the 1-based window
+    * start `i` of the token-hash list `th`: two rolling folds, by
+    * [[shingleMult]] and [[shingleMult2]], combined fold1·P + fold2. */
+  private[graft] def wideKeySql(n: Int): String = {
+    def fold(m: Long): String =
+      (1 until n).foldLeft("th[i]")((acc, j) => s"($acc * $m + th[i+$j]) % $P")
+    s"(${fold(shingleMult)}) * $P + (${fold(shingleMult2)})"
+  }
+
   /** Affine 2-gram token-hash combine — THE bigram key arithmetic. One
     * source of truth: [[Text.bigramCounts]], [[Text.repetitionSignals]],
     * and the generated DuckDB oracles all replay exactly this; a drift in
     * any copy would silently desynchronize engine and oracle (round-3
     * review finding). */
   def combine2(h1: Column, h2: Column): Column = (h1 * shingleMult + h2) % P
+
+  /** DuckDB twin of [[combine2]]. */
+  private[graft] def combine2Sql(h1: String, h2: String): String = s"($h1*$shingleMult + $h2) % $P"
 
   /** Affine 3-gram combine, built on [[combine2]]. */
   def combine3of(h1: Column, h2: Column, h3: Column): Column =
@@ -112,6 +134,12 @@ object Dedup {
   private[graft] def combine3(th: Column): Column =
     array_distinct(graft.functions.GraftFunctions.ngramHashes(th, 3))
 
+  /** DuckDB twin of [[combine3]] before the distinct: the 3-gram
+    * [[combine3of]] keys of the token-hash list `th`. */
+  private[graft] def combine3Sql(th: String): String =
+    s"list_transform(generate_series(1, len($th)-2), i -> " +
+      s"(${combine2Sql(s"$th[i]", s"$th[i+1]")} * $shingleMult + $th[i+2]) % $P)"
+
   /** docs with ≥3 tokens: (doc_id, th = per-token poly-hash array).
     *
     * The token-hash array is materialized as its own projection before any
@@ -124,6 +152,17 @@ object Dedup {
         graft.functions.GraftFunctions.tokenHashes(col("text")).as("th"))
       .where(size(col("th")) >= 3)
   }
+
+  /** DuckDB twin of [[tokenHashedOf]] at any token floor, as two CTEs
+    * over `documents`: `t` (`keep`, toks) and `th` (`keep`, th = per-token
+    * [[polyHash]] array) for docs with at least `minTokens` tokens. */
+  private[graft] def tokenHashCtes(minTokens: Int, keep: String = "doc_id"): String =
+    s"""t AS (
+       | SELECT $keep, ${Text.tokensSql("text")} AS toks
+       | FROM documents),
+       |th AS (
+       | SELECT $keep, list_transform(toks, tok -> ${polyHashSql("tok")}) AS th
+       | FROM t WHERE len(toks) >= $minTokens)""".stripMargin
 
   /** docs with ≥3 tokens: (doc_id, hs = hashed shingle set). */
   private def shingledOf(docs: DataFrame): DataFrame =
@@ -1337,24 +1376,20 @@ object Dedup {
     bandedVerifiedPairs(signWordsOf(emb, nPlanes), emb, minCos, nPlanes, nBands)
   }
 
-  /** This operator's seeded hyperplanes (fixed per library version, like
-    * [[Similarity.indexPlanes]] with an independent seed). ONE seeded
-    * stream: lshPlanes(512) is prefix-nested over lshPlanes(64), so a
-    * rung upgrade extends signatures instead of replacing them. */
-  private def lshPlanes(nPlanes: Int): Array[Array[Double]] = {
-    val rnd = new scala.util.Random(7)
-    val dim = 64
-    Array.fill(nPlanes)(Array.fill(dim)(rnd.nextGaussian()))
-  }
+  /** Seed of this operator's hyperplanes: fixed per library version, like
+    * [[Similarity.indexPlanes]] with an independent seed. */
+  private final val lshSeed = 7
 
-  /** (vec_id, sign_words: array<long>) of an embedding frame against
-    * [[lshPlanes]] — word k carries planes [64k, 64k+64). Each word is
+  /** (vec_id, sign_words: array<long>) of an embedding frame against the
+    * prefix-nested [[Similarity.seededPlanes]] bank of [[lshSeed]] (a rung
+    * upgrade extends signatures instead of replacing them) — word k
+    * carries planes [64k, 64k+64). Each word is
     * ONE fused native expression (graft.functions.SignBits — bit j =
     * sign of dot with plane j): Janino compiles one loop per 64-plane
     * bank instead of nPlanes codegen blocks — the 64-expression form's
     * first-plan compile was most of this query's fresh-JVM cost. */
   private def signWordsOf(emb: DataFrame, nPlanes: Int): DataFrame = {
-    val words = lshPlanes(nPlanes).grouped(64).map { bank =>
+    val words = Similarity.seededPlanes(lshSeed, nPlanes).grouped(64).map { bank =>
       graft.functions.GraftFunctions.signBits(col("embedding"),
         typedLit(bank.map(_.toSeq).toSeq))
     }.toSeq

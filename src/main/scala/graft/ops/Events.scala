@@ -72,6 +72,23 @@ object Events {
         col("n_events"), col("sum_value"))
       .orderBy(col("user_id"), col("session_start"))
 
+  /** DuckDB twin of [[sessionize]]'s sessions as CTEs over `events` +
+    * `where`: `o` flags each event (user_id, ts`cols`) that opens a
+    * session, and `g` numbers its user's sessions `sid`. */
+  private[graft] def sessionCtes(cols: String, where: String = ""): String =
+    s"""o AS (
+       | SELECT user_id, ts$cols,
+       |  CASE WHEN lag(ts) OVER w IS NULL
+       |        OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
+       |       THEN 1 ELSE 0 END AS new_s
+       | FROM events$where
+       | WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+       |g AS (
+       | SELECT user_id, ts$cols,
+       |  sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
+       |                   ROWS UNBOUNDED PRECEDING) AS sid
+       | FROM o)""".stripMargin
+
   /** Per-user ordered feature-engineering window: previous value, gap to
     * previous event in ms, rolling sum of the prior 3 values, and event
     * index — the classic feature-store "user history" shape (SURVEY.md

@@ -329,6 +329,28 @@ object Layout {
     base
   }
 
+  /** DuckDB twin of the exact-cents idiom `floor(x * 100 + 0.5)` as a
+    * long. */
+  private[graft] def centsSql(x: String): String = s"CAST(floor($x * 100 + 0.5) AS BIGINT)"
+
+  /** DuckDB twin of [[ensureTtHistory]]'s two planted versions, as the
+    * CTEs `v1` and `v2`. */
+  private[graft] val ttVersionCtes: String = {
+    val agg = s"""SELECT o_orderpriority, count(*) AS n_orders,
+                 |  CAST(sum(${centsSql("o_totalprice")})
+                 |    AS BIGINT) AS cents
+                 | FROM orders""".stripMargin
+    s"""v1 AS (
+       | $agg
+       | WHERE o_orderdate < TIMESTAMP '1997-01-01'
+       |   AND o_orderpriority <> '1-URGENT'
+       | GROUP BY 1
+       | UNION ALL
+       | SELECT '0-LEGACY', CAST(0 AS BIGINT), CAST(0 AS BIGINT)),
+       |v2 AS (
+       | $agg GROUP BY 1)""".stripMargin
+  }
+
   /** Change data feed between the two planted versions (Delta CDF
     * shape): `insert` for the withheld `1-URGENT`, `delete` for the
     * legacy row, `update_preimage`/`update_postimage` PAIRS for every

@@ -66,6 +66,26 @@ object Multimodal {
         when(col("media_type") === "video", lit(1) + pmod(col("n_bytes"), lit(24)))
           .otherwise(lit(1)).cast("int"))
 
+  /** DuckDB twin of [[mediaTable]]'s geometry over `documents`: `w`, `h`
+    * as BIGINT. */
+  private[graft] val mediaGeometrySql: String =
+    """CAST(16 + length(text) % 32 AS BIGINT) AS w,
+      |  CAST(16 + (length(text) // 7) % 32 AS BIGINT) AS h""".stripMargin
+
+  /** DuckDB twin of the encoded payload over `documents`: the units `u`
+    * (each code point & 255, one pixel or sample) and their count `n`. */
+  private[graft] val mediaUnitsSql: String =
+    """list_transform(string_split(text,''),
+      |    c -> CAST(ascii(c) & 255 AS BIGINT)) AS u,
+      |  CAST(length(text) AS BIGINT) AS n""".stripMargin
+
+  /** DuckDB twin of the image encode over [[mediaGeometrySql]] and
+    * [[mediaUnitsSql]]: the w×h pixel list `px`, pixel i = u[i mod n]. */
+  private[graft] val mediaPixelsSql: String =
+    """CASE WHEN n = 0 THEN list_transform(generate_series(0, w*h - 1), i -> CAST(0 AS BIGINT))
+      |       ELSE list_transform(generate_series(0, w*h - 1), i -> u[(i % n) + 1])
+      |  END AS px""".stripMargin
+
   /** Metadata projection — oracle-checkable (pure arithmetic, no blob). */
   def mediaMeta(spark: SparkSession, dir: String): DataFrame =
     mediaTable(spark, dir)

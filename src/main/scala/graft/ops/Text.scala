@@ -21,6 +21,11 @@ object Text {
   /** Tokenizer: whitespace split, dropping empty segments. */
   def tokens(c: Column): Column = filter(split(c, " "), t => length(t) > 0)
 
+  /** DuckDB twin of [[tokens]] over the VARCHAR expression `s`, split on
+    * the SQL literal `sep`. */
+  private[graft] def tokensSql(s: String, sep: String = "' '"): String =
+    s"list_filter(string_split($s, $sep), s -> len(s)>0)"
+
   /** Global token frequencies, top 50 — tokenize → explode → count.
     * Scale: the explode inflates rows ~60× but partial aggregation
     * collapses them map-side; the shuffle carries only |vocab| rows per

@@ -96,6 +96,9 @@ object Tables {
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
+  /** Width of every `embedding` vector. */
+  val embeddingDim = 64
+
   private def read(spark: SparkSession, dir: String, name: String,
                    schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(s"$dir/$name.parquet")

@@ -85,6 +85,17 @@ class ContractSpec extends SparkSpec {
       s"rows-only (or no longer declared): ${stale.toSeq.sorted.mkString(", ")}")
   }
 
+  test("every oracle SQL is fully rendered: no ${ left in it") {
+    // an oracle string written """ where s""" was meant keeps its
+    // interpolations as literal text, which only fails once DuckDB runs
+    // it; a JSONPath like '$.k' (q_evt_json_props) stays legal
+    val unrendered = SparkEntry.oracleSql.collect {
+      case (name, sql) if sql.contains("${") => name
+    }
+    assert(unrendered.isEmpty, "oracle SQL with an unrendered interpolation: " +
+      unrendered.toSeq.sorted.mkString(", "))
+  }
+
   test("no declared query emits a top-level array/map column") {
     // The verify driver records results through pandas sort_values, which
     // cannot factorize array/map cells — a nested top-level column crashes

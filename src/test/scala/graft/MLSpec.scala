@@ -208,7 +208,7 @@ class MetricsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val expect = vecs.map { case (label, v) =>
       val scores = (0 until Metrics.numClasses).map { c =>
-        (0 until Metrics.numDims).map(d =>
+        (0 until Tables.embeddingDim).map(d =>
           v(d) * Metrics.weight(c, d).toDouble).sum
       }
       val m = scores.max
@@ -238,7 +238,7 @@ class MetricsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     for (c <- Seq(0, 3, 9)) {
       val scores = vecs.map { case (label, v) =>
-        (label == c, (0 until Metrics.numDims).map(d =>
+        (label == c, (0 until Tables.embeddingDim).map(d =>
           v(d) * Metrics.weight(c, d).toDouble).sum)
       }
       val pos = scores.filter(_._1).map(_._2)

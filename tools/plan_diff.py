@@ -11,6 +11,12 @@ every plan is normalized so two checkouts of the same code compare equal:
   - `plan_id=` values;
   - lambda variable counters (`lambda x_20` -> `lambda x_N`), a JVM-global
     fresh-name sequence that shifts with construction order;
+  - RDD ids (`MapPartitionsRDD[341]` -> `MapPartitionsRDD[N]`), a
+    per-session counter that shifts with the queries run before;
+  - the source line of an RDD's call site (`at Dedup.scala:659` ->
+    `at Dedup.scala:N`), which moves with any edit above it;
+  - JVM lambda class names and identity hashes of typed-Dataset closures
+    (`Multimodal$$$Lambda$6963/0x00007f14…@5d1416ce` -> `Multimodal$$$Lambda`);
   - the checkout's absolute root (the prefix of its `spark-warehouse/`).
 Prints `SAME`/`DIFF` per query and `N/M plans identical`; `-v` also
 prints a unified diff of each differing pair. Queries present on one side
@@ -26,12 +32,18 @@ WAREHOUSE_ROOT = re.compile(r"file:(/[^\s,\]\[]*?)/spark-warehouse/")
 LAMBDA_VAR = re.compile(r"(lambda [A-Za-z_]\w*?)_\d+(?=#)")
 EXPR_ID = re.compile(r"#\d+")
 PLAN_ID = re.compile(r"plan_id=\d+")
+RDD_ID = re.compile(r"(RDD)\[\d+\]")
+CALL_SITE_LINE = re.compile(r"(at \w+\.scala):\d+")
+JVM_LAMBDA = re.compile(r"(\$\$Lambda)\$\d+/0x[0-9a-f]+@[0-9a-f]+")
 
 
 def normalize(text):
     for root in sorted(set(WAREHOUSE_ROOT.findall(text)), key=len, reverse=True):
         text = text.replace(root, "<root>")
     text = LAMBDA_VAR.sub(r"\1_N", text)
+    text = RDD_ID.sub(r"\1[N]", text)
+    text = CALL_SITE_LINE.sub(r"\1:N", text)
+    text = JVM_LAMBDA.sub(r"\1", text)
     text = EXPR_ID.sub("#N", text)
     return PLAN_ID.sub("plan_id=N", text)
 
