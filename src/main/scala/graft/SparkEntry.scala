@@ -45,7 +45,7 @@ final case class QuerySpec(
   * [[Similarity.embNormCtes]], [[Similarity.cosSimSql]],
   * [[Similarity.topKSql]]), exact cents ([[Layout.centsSql]]), the
   * planted snapshot versions ([[Layout.ttVersionCtes]]), the trade fact
-  * join ([[Graph.tradePairsSql]]) and the media payload
+  * join ([[Graph.tradeJoinSql]], [[Graph.tradePairsSql]]) and the media payload
   * ([[Multimodal.mediaGeometrySql]] and its siblings). Fragments shared
   * only between twins are the private builders below the registry.
   */
@@ -3002,10 +3002,8 @@ object SparkEntry {
         .stripMargin
     }.mkString(",\n")
     s"""WITH e0 AS (
-       | SELECT c.c_nationkey AS src, s.s_nationkey AS dst, count(*) AS w
-       | FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-       | JOIN customer c ON o.o_custkey = c.c_custkey
-       | JOIN supplier s ON l.l_suppkey = s.s_suppkey GROUP BY 1, 2),
+       | SELECT c_nationkey AS src, s_nationkey AS dst, count(*) AS w
+       | ${Graph.tradeJoinSql} GROUP BY 1, 2),
        |ow AS (SELECT src, CAST(sum(w) AS BIGINT) AS out_w FROM e0 GROUP BY 1),
        |e AS (SELECT e0.src, e0.dst, e0.w, ow.out_w FROM e0 JOIN ow USING (src)),
        |nd AS (SELECT n_nationkey AS node, n_name,

@@ -2,17 +2,18 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native rolling n-gram hash combine over a token-hash array: for each
   * window start i, `out[i] = fold(th[i..i+n-1], (acc, h) =>
   * (acc·1009 + h) mod 1e9+7)` — THE shingle-key arithmetic of
   * `graft.ops.Dedup.combine2/combine3of` (reference:
   * tembolo1284/feature_store_ML has no text surface; this serves the
-  * extended dedup/text mandate), emitted as one fused whole-stage-codegen
-  * loop.
+  * extended dedup/text mandate), as one fused loop
+  * ([[Kernels.ngramHashes]]) called from whole-stage codegen.
   *
   * Bit-identical to the declarative
   * `transform(sequence(1, size(th) − (n−1)), i => combineN(element_at…))`
@@ -20,8 +21,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * `list_transform(generate_series(…), i -> ((th[i]*1009 + th[i+1]) % P
   * …))` replay — only execution differs: the higher-order form is
   * interpreted (a `sequence` array, one lambda dispatch plus n
-  * `element_at` probes per window); this walks the array once with a
-  * rolling window, allocating only the output. Hot in every
+  * `element_at` probes per window); this copies the array once into a
+  * primitive `long[]` and folds each window from it, allocating only
+  * that copy and the output. Hot in every
   * shingle/MinHash/repetition/sparse-posting pipeline — the per-document
   * inner loop of the whole docs family.
   *
@@ -36,60 +38,14 @@ case class NGramHashes(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_ngram_hashes"
 
-  private val M = 1009L
-
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), IntegerType) =>
-        if (!right.foldable)
-          TypeCheckResult.TypeCheckFailure(
-            s"$prettyName requires a literal n")
-        else right.eval() match {
-          case n: Int if n >= 1 => TypeCheckResult.TypeCheckSuccess
-          case n => TypeCheckResult.TypeCheckFailure(
-            s"$prettyName requires n >= 1, got $n")
-        }
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<bigint>, int) operands, " +
-          s"got (${l.sql}, ${r.sql})")
-    }
+    Operands.ngram(prettyName, left, right)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val th = a.asInstanceOf[ArrayData]
-    val n = b.asInstanceOf[Int]
-    val len = th.numElements()
-    val out = new Array[Long](math.max(0, len - n + 1))
-    var i = 0
-    while (i < out.length) {
-      var acc = th.getLong(i)
-      var j = 1
-      while (j < n) { acc = (acc * M + th.getLong(i + j)) % P; j += 1 }
-      out(i) = acc
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Kernels.ngramHashes(a.asInstanceOf[ArrayData], b.asInstanceOf[Int])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (th, n) => {
-      val len = ctx.freshName("len")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $len = java.lang.Math.max(0, $th.numElements() - $n + 1);
-         |long[] $out = new long[$len];
-         |for (int $i = 0; $i < $len; $i++) {
-         |  long $acc = $th.getLong($i);
-         |  for (int $j = 1; $j < $n; $j++) {
-         |    $acc = ($acc * ${M}L + $th.getLong($i + $j)) % ${P}L;
-         |  }
-         |  $out[$i] = $acc;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (th, n) => s"$K.ngramHashes($th, $n)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): NGramHashes =
@@ -121,72 +77,14 @@ case class NGramHashesWide(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_ngram_hashes_wide"
 
-  private val M1 = 1009L
-  private val M2 = 10007L
-
   override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), IntegerType) =>
-        if (!right.foldable)
-          TypeCheckResult.TypeCheckFailure(
-            s"$prettyName requires a literal n")
-        else right.eval() match {
-          case n: Int if n >= 1 => TypeCheckResult.TypeCheckSuccess
-          case n => TypeCheckResult.TypeCheckFailure(
-            s"$prettyName requires n >= 1, got $n")
-        }
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<bigint>, int) operands, " +
-          s"got (${l.sql}, ${r.sql})")
-    }
+    Operands.ngram(prettyName, left, right)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val th = a.asInstanceOf[ArrayData]
-    val n = b.asInstanceOf[Int]
-    val len = th.numElements()
-    val out = new Array[Long](math.max(0, len - n + 1))
-    var i = 0
-    while (i < out.length) {
-      var h1 = th.getLong(i)
-      var h2 = th.getLong(i)
-      var j = 1
-      while (j < n) {
-        val t = th.getLong(i + j)
-        h1 = (h1 * M1 + t) % P
-        h2 = (h2 * M2 + t) % P
-        j += 1
-      }
-      out(i) = h1 * P + h2
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Kernels.ngramHashesWide(a.asInstanceOf[ArrayData], b.asInstanceOf[Int])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (th, n) => {
-      val len = ctx.freshName("len")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h1 = ctx.freshName("h1")
-      val h2 = ctx.freshName("h2")
-      val t = ctx.freshName("t")
-      s"""
-         |int $len = java.lang.Math.max(0, $th.numElements() - $n + 1);
-         |long[] $out = new long[$len];
-         |for (int $i = 0; $i < $len; $i++) {
-         |  long $h1 = $th.getLong($i);
-         |  long $h2 = $th.getLong($i);
-         |  for (int $j = 1; $j < $n; $j++) {
-         |    long $t = $th.getLong($i + $j);
-         |    $h1 = ($h1 * ${M1}L + $t) % ${P}L;
-         |    $h2 = ($h2 * ${M2}L + $t) % ${P}L;
-         |  }
-         |  $out[$i] = $h1 * ${P}L + $h2;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (th, n) => s"$K.ngramHashesWide($th, $n)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): NGramHashesWide =
@@ -207,75 +105,20 @@ case class NGramHashesWide(left: Expression, right: Expression)
   * trailing spaces) contribute nothing.
   */
 case class TokenPolyHashes(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def prettyName: String = "graft_token_hashes"
 
+  override def checkInputDataTypes(): TypeCheckResult =
+    Operands.string(prettyName, child.dataType)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    // `_: StringType` (not the object): accept collated string columns too —
-    // the hash is codepoint-based, collation-independent (round-16 ADVICE)
-    case _: org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string operand, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString
-    val out = new scala.collection.mutable.ArrayBuffer[Long]()
-    var acc = 0L
-    var inTok = false
-    var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      if (cp == ' ') {
-        if (inTok) { out += acc; acc = 0L; inTok = false }
-      } else {
-        acc = (acc * 31 + cp) % P
-        inTok = true
-      }
-      i += Character.charCount(cp)
-    }
-    if (inTok) out += acc
-    new GenericArrayData(out.toArray)
-  }
+  override def nullSafeEval(input: Any): Any =
+    Kernels.tokenHashes(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("s")
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val cnt = ctx.freshName("cnt")
-      val acc = ctx.freshName("acc")
-      val inTok = ctx.freshName("inTok")
-      val i = ctx.freshName("i")
-      val cp = ctx.freshName("cp")
-      // worst case one token per two chars ("a a a…") plus one
-      s"""
-         |java.lang.String $s = $c.toString();
-         |int $n = $s.length();
-         |long[] $out = new long[$n / 2 + 1];
-         |int $cnt = 0;
-         |long $acc = 0L;
-         |boolean $inTok = false;
-         |int $i = 0;
-         |while ($i < $n) {
-         |  int $cp = $s.codePointAt($i);
-         |  if ($cp == ' ') {
-         |    if ($inTok) { $out[$cnt++] = $acc; $acc = 0L; $inTok = false; }
-         |  } else {
-         |    $acc = ($acc * 31L + $cp) % ${P}L;
-         |    $inTok = true;
-         |  }
-         |  $i += java.lang.Character.charCount($cp);
-         |}
-         |if ($inTok) { $out[$cnt++] = $acc; }
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  java.util.Arrays.copyOf($out, $cnt));
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, c => s"$K.tokenHashes($c)")
 
   override protected def withNewChildInternal(
       newChild: Expression): TokenPolyHashes = copy(child = newChild)
@@ -310,7 +153,6 @@ case class MinHashSigs(first: Expression, second: Expression,
   // branch assigns ev.isNull, which must not be the constant `false`)
   override def nullable: Boolean = true
 
-
   override def checkInputDataTypes(): TypeCheckResult =
     (first.dataType, second.dataType, third.dataType) match {
       case (ArrayType(LongType, _), ArrayType(LongType, _), ArrayType(LongType, _)) =>
@@ -322,64 +164,29 @@ case class MinHashSigs(first: Expression, second: Expression,
             TypeCheckResult.TypeCheckFailure(
               s"$prettyName banks differ in length: " +
                 s"${a.numElements()} vs ${b.numElements()}")
-          case _ => TypeCheckResult.TypeCheckSuccess
+          case (_: ArrayData, _: ArrayData) => TypeCheckResult.TypeCheckSuccess
+          case _ => TypeCheckResult.TypeCheckFailure(
+            s"$prettyName requires non-null multiplier/offset banks")
         }
       case (h, a, b) => TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires (array<bigint>, array<bigint>, array<bigint>)" +
           s" operands, got (${h.sql}, ${a.sql}, ${b.sql})")
     }
 
-  override def nullSafeEval(h: Any, a: Any, b: Any): Any = {
-    val hs = h.asInstanceOf[ArrayData]
-    val as = a.asInstanceOf[ArrayData]
-    val bs = b.asInstanceOf[ArrayData]
-    val n = hs.numElements()
-    if (n == 0) return null
-    val k = as.numElements()
-    val mins = new Array[Long](k)
-    java.util.Arrays.fill(mins, Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      val h0 = hs.getLong(i)
-      var j = 0
-      while (j < k) {
-        val v = (h0 * as.getLong(j) + bs.getLong(j)) % P
-        if (v < mins(j)) mins(j) = v
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
+  // the literal banks as primitive arrays, decoded once per task: read
+  // through the boxed literal, every (shingle, j) pair unboxed two longs
+  @transient private lazy val muls = second.eval().asInstanceOf[ArrayData].toLongArray()
+  @transient private lazy val adds = third.eval().asInstanceOf[ArrayData].toLongArray()
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (hs, as_, bs) => {
-      val n = ctx.freshName("n")
-      val k = ctx.freshName("k")
-      val mins = ctx.freshName("mins")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val h0 = ctx.freshName("h0")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = $hs.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $k = $as_.numElements();
-         |  long[] $mins = new long[$k];
-         |  java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $h0 = $hs.getLong($i);
-         |    for (int $j = 0; $j < $k; $j++) {
-         |      long $v = ($h0 * $as_.getLong($j) + $bs.getLong($j)) % ${P}L;
-         |      if ($v < $mins[$j]) $mins[$j] = $v;
-         |    }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-         |}
-       """.stripMargin
-    })
+  override def nullSafeEval(h: Any, a: Any, b: Any): Any =
+    Kernels.minhashSigs(h.asInstanceOf[ArrayData], muls, adds)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val a = ctx.addReferenceObj("minhashMuls", muls, "long[]")
+    val b = ctx.addReferenceObj("minhashAdds", adds, "long[]")
+    nullSafeCodeGen(ctx, ev, (hs, _, _) =>
+      s"${ev.value} = $K.minhashSigs($hs, $a, $b); ${ev.isNull} = ${ev.value} == null;")
+  }
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,
@@ -387,11 +194,11 @@ case class MinHashSigs(first: Expression, second: Expression,
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
-/** Native SimHash signature over raw text: one pass over the string
-  * tokenizes on single spaces (exactly `Text.tokens` = non-empty
-  * `split(text, " ")` segments), char-folds each token's polynomial
-  * hash `(acc·31 + codepoint) mod 1e9+7` (exactly [[PolyHash]] /
-  * [[TokenPolyHashes]]), derives the second hash
+/** Native SimHash signature over raw text: the [[TokenPolyHashes]]
+  * pass over the string tokenizes on single spaces (exactly
+  * `Text.tokens` = non-empty `split(text, " ")` segments) and char-folds
+  * each token's polynomial hash h1 = `(acc·31 + codepoint) mod 1e9+7`
+  * (exactly [[PolyHash]]); [[Kernels.simhash]] then derives the second hash
   * `h2 = (h1·48271 + 11) mod P`, and accumulates the per-bit votes
   * `s_b = Σ occurrences bit_b` over 60 bits (b < 30 from h1, else h2),
   * returning `Σ_{2·s_b > t} 2^b` where t is the token count.
@@ -411,117 +218,26 @@ case class MinHashSigs(first: Expression, second: Expression,
   * simply has no rows for them — callers filter `isNotNull` to keep
   * the frame identical). Null text → null. */
 case class SimhashSig(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  extends UnaryExpression {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
 
   override def prettyName: String = "graft_simhash"
 
-  private val A2 = 48271L
-  private val B2 = 11L
-  private val bits = 60
-  private val half = 30
+  override def checkInputDataTypes(): TypeCheckResult =
+    Operands.string(prettyName, child.dataType)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    // `_: StringType` (not the object): accept collated string columns too —
-    // the hash is codepoint-based, collation-independent (round-16 ADVICE)
-    case _: org.apache.spark.sql.types.StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string operand, got ${t.sql}")
-  }
-
+  // the kernel's -1 (no token) is the null result; a signature has
+  // only 60 bits, so it is never negative
   override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString
-    val votes = new Array[Long](bits)
-    var t = 0L
-    var acc = 0L
-    var inTok = false
-    def fin(): Unit = {
-      val h2 = (acc * A2 + B2) % P
-      var b = 0
-      while (b < half) {
-        votes(b) += (acc >> b) & 1L
-        votes(half + b) += (h2 >> b) & 1L
-        b += 1
-      }
-      t += 1L; acc = 0L; inTok = false
-    }
-    var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      if (cp == ' ') { if (inTok) fin() }
-      else { acc = (acc * 31 + cp) % P; inTok = true }
-      i += Character.charCount(cp)
-    }
-    if (inTok) fin()
-    if (t == 0L) null
-    else {
-      var sig = 0L
-      var b = 0
-      while (b < bits) {
-        if (votes(b) * 2 > t) sig |= 1L << b
-        b += 1
-      }
-      java.lang.Long.valueOf(sig)
-    }
+    val sig = Kernels.simhash(input.asInstanceOf[UTF8String])
+    if (sig < 0) null else sig
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("s")
-      val votes = ctx.freshName("votes")
-      val t = ctx.freshName("t")
-      val acc = ctx.freshName("acc")
-      val h2 = ctx.freshName("h2")
-      val inTok = ctx.freshName("inTok")
-      val i = ctx.freshName("i")
-      val cp = ctx.freshName("cp")
-      val b = ctx.freshName("b")
-      val sig = ctx.freshName("sig")
-      s"""
-         |java.lang.String $s = $c.toString();
-         |long[] $votes = new long[$bits];
-         |long $t = 0L;
-         |long $acc = 0L;
-         |boolean $inTok = false;
-         |int $i = 0;
-         |while ($i < $s.length()) {
-         |  int $cp = $s.codePointAt($i);
-         |  if ($cp == ' ') {
-         |    if ($inTok) {
-         |      long $h2 = ($acc * ${A2}L + ${B2}L) % ${P}L;
-         |      for (int $b = 0; $b < $half; $b++) {
-         |        $votes[$b] += ($acc >> $b) & 1L;
-         |        $votes[$half + $b] += ($h2 >> $b) & 1L;
-         |      }
-         |      $t++; $acc = 0L; $inTok = false;
-         |    }
-         |  } else {
-         |    $acc = ($acc * 31L + $cp) % ${P}L;
-         |    $inTok = true;
-         |  }
-         |  $i += java.lang.Character.charCount($cp);
-         |}
-         |if ($inTok) {
-         |  long $h2 = ($acc * ${A2}L + ${B2}L) % ${P}L;
-         |  for (int $b = 0; $b < $half; $b++) {
-         |    $votes[$b] += ($acc >> $b) & 1L;
-         |    $votes[$half + $b] += ($h2 >> $b) & 1L;
-         |  }
-         |  $t++;
-         |}
-         |if ($t == 0L) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $sig = 0L;
-         |  for (int $b = 0; $b < $bits; $b++) {
-         |    if ($votes[$b] * 2 > $t) $sig |= 1L << $b;
-         |  }
-         |  ${ev.value} = $sig;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = $K.simhash($c); ${ev.isNull} = ${ev.value} < 0L;")
 
   override protected def withNewChildInternal(newChild: Expression): SimhashSig =
     copy(child = newChild)

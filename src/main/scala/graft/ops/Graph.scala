@@ -53,15 +53,19 @@ object Graph {
         col("s_nationkey").cast("long").as("s_nationkey"))
   }
 
-  /** DuckDB twin of [[tradePairs]] cut to cross-nation rows, as the tail
-    * of a SELECT: the four-way fact join, `c_nationkey <> s_nationkey`,
-    * grouped by the caller's first two select items. */
-  private[graft] val tradePairsSql: String =
+  /** DuckDB twin of [[tradePairs]] as the tail of a SELECT: the
+    * four-way fact join. */
+  private[graft] val tradeJoinSql: String =
     """FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |  JOIN customer ON o_custkey = c_custkey
-      |  JOIN supplier ON l_suppkey = s_suppkey
-      | WHERE c_nationkey <> s_nationkey
-      | GROUP BY 1, 2""".stripMargin
+      |  JOIN supplier ON l_suppkey = s_suppkey""".stripMargin
+
+  /** [[tradeJoinSql]] cut to cross-nation rows, `c_nationkey <>
+    * s_nationkey`, grouped by the caller's first two select items. */
+  private[graft] val tradePairsSql: String =
+    s"""$tradeJoinSql
+       | WHERE c_nationkey <> s_nationkey
+       | GROUP BY 1, 2""".stripMargin
 
   /** Collect a `(node, node, weight)` edge frame of longs in one action,
     * failing fast if it breaks the [[graphMaxDriverEdges]] bound. */

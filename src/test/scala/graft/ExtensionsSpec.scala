@@ -28,6 +28,105 @@ class ExtensionsSpec extends SparkSpec {
     assert(topk === Seq(1.0, 2.0))
   }
 
+  test("every native scalar function: interpreted eval equals the generated code") {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types._
+    val vec = ArrayType(DoubleType)
+    val mat = ArrayType(vec)
+    val longs = ArrayType(LongType)
+    val strs = ArrayType(StringType)
+    def l(v: Any, t: DataType): Literal = Literal.create(v, t)
+    // empty, all-space, repeated/leading/trailing spaces, a non-BMP code
+    // point (a surrogate pair in UTF-16), null
+    val texts = Seq("", " ", "   ", "a", "ab", "  a  b ", "a b a",
+      "αβ γ", "𝄞 x𝄞", null)
+    val vecs = Seq(Seq(), Seq(0.5), Seq(0.25, -2.0), Seq(1.0, 1.0, 3.0), null)
+    val ths = Seq(Seq(), Seq(7L), Seq(7L, 8L), Seq(1L, 2L, 3L, 4L),
+      Seq(999999999L, 1000000006L, 5L), null)
+    val ns = Seq(1, 2, 3).map(n => Seq(l(n, IntegerType)))
+    // three cells, the third a copy of the first (an argmin tie), the
+    // second wider than every vector above but one
+    val cells = l(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0, 0.5), Seq(1.0, 0.0)), mat)
+    // name → (type and values of the row-bound first operand, each list
+    // of literal remaining operands)
+    val parity: Map[String, (DataType, Seq[Any], Seq[Seq[Literal]])] = Map(
+      "graft_dot" -> ((vec, vecs, Seq(Seq(l(Seq(2.0, -1.0, 0.5), vec))))),
+      "graft_polyhash" -> ((StringType, texts, Seq(Nil))),
+      "graft_sign_bits" -> ((vec, vecs, Seq(Seq(l(Seq(Seq(1.0, 1.0),
+        Seq(-1.0, 2.0), Seq(0.0, -1.0, 5.0)), mat))))),
+      "graft_ngram_hashes" -> ((longs, ths, ns)),
+      "graft_ngram_hashes_wide" -> ((longs, ths, ns)),
+      "graft_minhash_sigs" -> ((longs, ths, Seq(Seq(l(Seq(3L, 7L, 1L), longs),
+        l(Seq(11L, 0L, 5L), longs))))),
+      "graft_token_hashes" -> ((StringType, texts, Seq(Nil))),
+      "graft_cell_argmin" -> ((vec, vecs, Seq(Seq(cells)))),
+      "graft_bpe_encode" -> ((strs, Seq(Seq(), Seq("ab", "abc", "b"),
+        Seq("aab"), null), Seq(Seq(l(Seq("a", "ab"), strs), l(Seq("b", "c"), strs))))),
+      "graft_vec_div" -> ((vec, vecs,
+        Seq(Seq(l(2.0, DoubleType)), Seq(l(-0.5, DoubleType))))),
+      "graft_cell_residual" -> ((vec, vecs,
+        (0 to 2).map(c => Seq(l(c, IntegerType), cells)))),
+      "graft_simhash" -> ((StringType, texts, Seq(Nil))))
+    val aggregates = Set("graft_top_k") // BoundedTopK: TopKSpec
+    val registered = graft.functions.GraftFunctions.registrations
+    assert(registered.map(_._1.funcName).toSet === parity.keySet ++ aggregates)
+    registered.foreach { case (id, _, build) =>
+      val name = id.funcName
+      if (aggregates(name)) {
+        assert(build(Seq(BoundReference(0, DoubleType, nullable = true),
+          l(2, IntegerType))).isInstanceOf[AggregateFunction], name)
+      } else {
+        val (t, values, rests) = parity(name)
+        val toUnsafe = UnsafeProjection.create(Array(t))
+        for (rest <- rests; v <- values) {
+          val e = build(BoundReference(0, t, nullable = true) +: rest)
+          assert(e.checkInputDataTypes().isSuccess, s"$name($v, $rest)")
+          assert(e.prettyName === name)
+          val generated = GenerateUnsafeProjection.generate(Seq(e))
+          val generic = InternalRow(CatalystTypeConverters.convertToCatalyst(v))
+          // the same row as a generic row (literal-like arrays) and as an
+          // unsafe row (scanned arrays)
+          for (row <- Seq(generic, toUnsafe(generic).copy())) {
+            val out = generated(row)
+            val gen = if (out.isNullAt(0)) null
+              else CatalystTypeConverters.convertToScala(out.get(0, e.dataType), e.dataType)
+            val interp = CatalystTypeConverters.convertToScala(e.eval(row), e.dataType)
+            assert(gen === interp, s"$name($v, $rest) on ${row.getClass.getSimpleName}")
+          }
+        }
+      }
+    }
+  }
+
+  test("graft_cell_residual: a cell outside the matrix is an error naming both") {
+    Seq(-1, 2).foreach { cell =>
+      val e = intercept[Exception] {
+        fresh.sql("SELECT graft_cell_residual(array(1.0d, 2.0d), " +
+          s"CAST(id AS INT) + ($cell), array(array(0.0d, 0.0d), array(1.0d, 1.0d))) " +
+          "FROM range(1)").collect()
+      }
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(msg.contains("graft_cell_residual") && msg.contains(s"cell $cell") &&
+        msg.contains("2 rows"), msg)
+    }
+  }
+
+  test("the matrix functions reject an empty matrix at analysis time") {
+    val empty = "CAST(array() AS ARRAY<ARRAY<DOUBLE>>)"
+    Seq(s"graft_cell_argmin(array(1.0d), $empty)",
+        s"graft_sign_bits(array(1.0d), $empty)",
+        s"graft_cell_residual(array(1.0d), 0, $empty)").foreach { call =>
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        fresh.sql(s"SELECT $call").collect()
+      }
+      assert(e.getMessage.contains("non-empty"), e.getMessage)
+    }
+  }
+
   test("SQL-text flagships equal their DataFrame siblings row for row") {
     import graft.ops.{Layout, Relational}
     assert(Relational.sqlPricingSummary(spark, sf).collect().toSeq
