@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.graft.ListenerBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -251,19 +252,21 @@ object Bench {
                             shufWriteMb: Double, inMb: Double)
 
   /** Query mode's record of one query: three timed runs, each with the
-    * builder's construction seconds (eager jobs included), and the stages
-    * of the last run. */
+    * builder's construction seconds (eager jobs included) and the number
+    * of classes Janino compiled, and the stages of the last run. */
   final case class Profile(name: String, runs: Seq[Timing.Sample],
-                           buildSec: Seq[Double], stages: Seq[StageRow]) {
+                           buildSec: Seq[Double], compiles: Seq[Long],
+                           stages: Seq[StageRow]) {
     /** `BENCHONE` line (run seconds, GC seconds, distinct checksums), a
-      * `PROFILE` line with the construction seconds, then one line per
-      * stage of the last run. */
+      * `PROFILE` line with the construction seconds and compiles, then one
+      * line per stage of the last run. */
     def report: String = {
       def secs(xs: Seq[Double]) = xs.map(x => f"$x%.2f").mkString(" ")
       (Seq(
         s"BENCHONE $name ${secs(runs.map(_.sec))} gc=${secs(runs.map(_.gcSec))}" +
           s" chk=${runs.map(_.checksum).distinct.mkString(",")}",
-        s"PROFILE $name build=${secs(buildSec)} stages=${stages.length}") ++
+        s"PROFILE $name build=${secs(buildSec)} compiles=${compiles.mkString(" ")}" +
+          s" stages=${stages.length}") ++
         stages.map(r =>
           f"  stage ${r.id}%4d tasks=${r.tasks}%3d run=${r.runMs}%6dms " +
             f"cpu=${r.cpuMs}%6dms in=${r.inMb}%7.1fMB sr=${r.shufReadMb}%6.1fMB " +
@@ -279,13 +282,15 @@ object Bench {
     * it, and again before it is removed, so the run's own late events do. */
   def profile(spark: SparkSession, sfDir: String, name: String): Profile = {
     val fn = SparkEntry.queries(name)
-    def run(): (Timing.Sample, Double) = {
+    val janino = CodegenMetrics.METRIC_COMPILATION_TIME
+    def run(): (Timing.Sample, Double, Long) = {
       var buildSec = 0.0
+      val c0 = janino.getCount
       val s = Timing.timeOnce {
         val t0 = System.nanoTime()
         try fn(spark, sfDir) finally buildSec = (System.nanoTime() - t0) / 1e9
       }
-      (s, buildSec)
+      (s, buildSec, janino.getCount - c0)
     }
     val first = Seq(run(), run())
     val sc = spark.sparkContext
@@ -306,7 +311,7 @@ object Bench {
     val last = try { val r = run(); ListenerBus.drain(sc); r }
       finally sc.removeSparkListener(listener)
     val runs = first :+ last
-    Profile(name, runs.map(_._1), runs.map(_._2),
+    Profile(name, runs.map(_._1), runs.map(_._2), runs.map(_._3),
       stages.asScala.toSeq.sortBy(_.id))
   }
 

@@ -6,7 +6,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, Literal, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
@@ -312,6 +313,11 @@ object GraftFunctions {
   private val cellResidualFn =
     native("graft_cell_residual", 3)(e => CellResidual(e(0), e(1), e(2)))
   private val simhashFn = native("graft_simhash", 1)(e => SimhashSig(e(0)))
+  // Spark's own bloom-filter pair, which 4.1.2 resolves only internally,
+  // under its Spark names: a builder states a join's bloom filter in its
+  // plan with `call_function("bloom_filter_agg" | "might_contain", …)`.
+  native("bloom_filter_agg", 1)(e => new BloomFilterAggregate(e(0)))
+  native("might_contain", 2)(e => BloomFilterMightContain(e(0), e(1)))
 
   /** Every native scalar/aggregate function as (identifier, info,
     * builder): the list [[GraftExtensions]] installs. */

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The one implementation of every native scalar function's arithmetic.
@@ -76,7 +77,8 @@ object Kernels {
   def tokenHashes(str: UTF8String): ArrayData = {
     val s = str.toString
     val out = new Array[Long](s.length / 2 + 1)
-    new GenericArrayData(java.util.Arrays.copyOf(out, tokenHashesInto(s, out)))
+    UnsafeArrayData.fromPrimitiveArray(
+      out, Platform.LONG_ARRAY_OFFSET, tokenHashesInto(s, out), 8)
   }
 
   /** The 60-bit SimHash of the text's token hashes, or `-1` (no valid
@@ -125,7 +127,7 @@ object Kernels {
     val out = new Array[Long](math.max(0, x.length - n + 1))
     var i = 0
     while (i < out.length) { out(i) = fold(x, i, n, 1009L); i += 1 }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** [[ngramHashes]] with the wide key h1·P + h2 of two folds
@@ -138,7 +140,7 @@ object Kernels {
       out(i) = fold(x, i, n, 1009L) * P + fold(x, i, n, 10007L)
       i += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** sig_j = min over h of (h·a(j) + b(j)) mod P for every j; null for an
@@ -157,7 +159,7 @@ object Kernels {
       }
       i += 1
     }
-    new GenericArrayData(mins)
+    UnsafeArrayData.fromPrimitiveArray(mins)
   }
 
   /** A foldable `array<array<double>>` literal as primitive rows. */

@@ -100,17 +100,41 @@ object Layout {
         min(col("day")).as("min_day"), max(col("day")).as("max_day"))
       .orderBy(col("bucket"))
 
-  /** Cluster a frame for writing: range-partition into `nFiles` splits
-    * by the given key and sort within each — one file per partition with
-    * contiguous key ranges, the shape every stats-indexed write wants
-    * (same discipline as the hive-partitioned publishes: no tasks ×
-    * partitions file scatter). The caller writes the result; the helper
-    * column is dropped after partitioning. */
-  def clusteredBy(df: DataFrame, key: Column, nFiles: Int): DataFrame =
-    df.withColumn("__ck", key)
-      .repartitionByRange(nFiles, col("__ck"))
+  /** Cluster a frame for writing: split it into `nFiles` contiguous key
+    * ranges and sort within each — one file per partition, the shape
+    * every stats-indexed write wants (same discipline as the
+    * hive-partitioned publishes: no tasks × partitions file scatter). The
+    * caller writes the result; the helper columns are dropped after
+    * partitioning.
+    *
+    * The range bounds are the (numeric) key's `nFiles`-quantiles over a
+    * sample chosen by key value: the keys with `xxhash64(key) mod m = 0`,
+    * with `m` set (from an HLL count of distinct keys) so that about
+    * [[clusterSampleKeys]] keys per file survive. Each row goes to
+    * partition "number of bounds below its key", so the files depend on
+    * the key's values alone. A range exchange samples its bounds with
+    * seeds taken from the input split's index and the RDD id, so its
+    * boundaries move with the input's file order and with whatever ran
+    * before. Scale: three scans (the distinct-count sketch, the sample's
+    * `percentile`, the shuffle); the percentile buffer holds one count
+    * per sampled key, about `nFiles` × [[clusterSampleKeys]] at any
+    * input size. */
+  def clusteredBy(df: DataFrame, key: Column, nFiles: Int): DataFrame = {
+    val keyed = df.withColumn("__ck", key)
+    val m = keyed.agg(greatest(lit(1L), (approx_count_distinct(col("__ck")) /
+      lit(clusterSampleKeys.toLong * nFiles)).cast("long"))).scalar()
+    val bounds = keyed.where(pmod(xxhash64(col("__ck")), m) === 0)
+      .agg(percentile(col("__ck"),
+        typedLit((1 until nFiles).map(_.toDouble / nFiles))).as("__bounds"))
+    keyed.crossJoin(broadcast(bounds))
+      .repartitionById(nFiles, size(filter(col("__bounds"), _ < col("__ck"))))
       .sortWithinPartitions(col("__ck"))
-      .drop("__ck")
+      .drop("__ck", "__bounds")
+  }
+
+  /** Sampled distinct keys per output file behind [[clusteredBy]]'s
+    * bounds — the range exchange's default sample size per partition. */
+  private val clusterSampleKeys = 100
 
   /** OPTIMIZE bin-packing compaction (round-12 verdict #4): rewrite the
     * LATEST snapshot version of `base` into ceil(n / targetRows)
@@ -129,8 +153,9 @@ object Layout {
     * [[graft.store.Snapshots.readVersionMerged]], so a stack of
     * lightweight delta versions folds into ONE clustered base version —
     * after which reads are a plain pruned scan again and `retain` can
-    * sweep the whole pre-compaction chain. Scale: one count + the same
-    * range-shuffle any clustering write pays; no driver-side data.
+    * sweep the whole pre-compaction chain. Scale: one count plus
+    * [[clusteredBy]]'s sketch, sampled-percentile and range-shuffle
+    * scans; the only driver-side data is the `nFiles − 1` bounds.
     *
     * Compaction is a READ-MODIFY-WRITE, so it commits through the
     * strict [[graft.store.Snapshots.publishIfLatest]] path: a delta (or

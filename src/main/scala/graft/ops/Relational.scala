@@ -144,35 +144,32 @@ object Relational {
       .orderBy(col("p_brand"), col("rnk"))
   }
 
-  /** Runtime Bloom-filter join pruning — the remaining 100 TB
-    * data-skipping lever after partition pruning and bucketing (round-2
-    * verdict item): Catalyst's InjectRuntimeFilter turns the selective
-    * dim-side predicate into a bloom filter built at runtime and pushed
-    * into the fact-side scan as `might_contain(l_orderkey)`, so non-
-    * qualifying fact rows die at the scan instead of crossing the join
-    * shuffle. The spec asserts the injected filter is in the plan and the
+  /** Bloom-filter join pruning — the remaining 100 TB data-skipping lever
+    * after partition pruning and bucketing (round-2 verdict item): the
+    * selective dim-side predicate becomes a bloom filter over the
+    * qualifying `xxhash64(o_orderkey)`, built by a scalar subquery and
+    * applied to the fact side as `might_contain(bloom, xxhash64(l_orderkey))`
+    * ahead of the join, so non-qualifying fact rows die at the scan instead
+    * of crossing the join shuffle. It is the filter shape Catalyst's
+    * InjectRuntimeFilter injects, stated in the plan so that it holds on
+    * the caller's session whatever the scan sizes. The merge hint pins
+    * the sort-merge join of the 100 TB regime, where neither side
+    * broadcasts. The spec asserts the filter is in the plan and the
     * oracle checks the (semantics-preserving) result.
     *
-    * Conf hygiene: the bloom configs live on a CLONED session
-    * (`newSession` shares the SparkContext but isolates SQLConf), never
-    * the caller's — the round-1 shared-conf rule. The application-side
-    * threshold is lowered because its 10 GiB default targets real lakes,
-    * not sf0.1; at scale the defaults fire on their own. */
+    * Sizing: the one-argument `bloom_filter_agg` takes the conf defaults
+    * (`runtime.bloomFilter.expectedNumItems` 1M, `numBits` 8M) — what
+    * InjectRuntimeFilter also falls back to when the creation side has no
+    * row-count statistic, as for these file scans. Past ~1M urgent orders
+    * (a fifth of 1.5M orders per sf, so sf ≈ 3) the fixed filter fills up
+    * and prunes less and less; the result stays exact either way. */
   def bloomFilteredJoinRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    s.conf.set(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    // InjectRuntimeFilter only fires on probably-shuffle joins, and at sf
-    // scale the filtered dim side is broadcastable-by-size; disabling
-    // auto-broadcast (with the merge hint pinning SMJ) reproduces the
-    // 100 TB regime where neither side broadcasts and the bloom filter is
-    // the scan-side prune
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val ord = Tables.orders(s, dir)
+    val ord = Tables.orders(spark, dir)
       .where(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
-    Tables.lineitem(s, dir)
+    val bloom = ord.select(call_function("bloom_filter_agg", xxhash64(col("o_orderkey")))).scalar()
+    Tables.lineitem(spark, dir)
+      .where(call_function("might_contain", bloom, xxhash64(col("l_orderkey"))))
       .join(ord.hint("merge"), col("l_orderkey") === col("o_orderkey"))
       .groupBy(year(col("l_shipdate")).cast("int").as("yr"),
         month(col("l_shipdate")).cast("int").as("mo"))

@@ -197,9 +197,7 @@ object GraftSession {
       // Spark 4.1 keys the cache by the thread's context class loader plus
       // the source text, and each session has its own artifact class
       // loader, so a session forked with `spark.newSession()` does not
-      // reuse its parent's classes. One builder forks one on every call
-      // and so recompiles ~24 classes per call whatever the cache size:
-      // `Relational.bloomFilteredJoinRevenue`.
+      // reuse its parent's classes.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       // Keeps that cache key stable across runs of one query. By default
       // the whole-stage class name carries the codegen stage id, and AQE

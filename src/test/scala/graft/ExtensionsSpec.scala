@@ -50,8 +50,17 @@ class ExtensionsSpec extends SparkSpec {
     // three cells, the third a copy of the first (an argmin tie), the
     // second wider than every vector above but one
     val cells = l(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0, 0.5), Seq(1.0, 0.0)), mat)
-    // name → (type and values of the row-bound first operand, each list
-    // of literal remaining operands)
+    // a serialized bloom filter holding 7 and 42
+    val bloom = {
+      val f = org.apache.spark.util.sketch.BloomFilter.create(100L)
+      Seq(7L, 42L).foreach(f.putLong)
+      val out = new java.io.ByteArrayOutputStream()
+      f.writeTo(out)
+      out.toByteArray
+    }
+    // name → (type and values of the row-bound operand, each list of
+    // literal remaining operands); the row-bound operand is the first,
+    // or the second for the names in `rowSecond`
     val parity: Map[String, (DataType, Seq[Any], Seq[Seq[Literal]])] = Map(
       "graft_dot" -> ((vec, vecs, Seq(Seq(l(Seq(2.0, -1.0, 0.5), vec))))),
       "graft_polyhash" -> ((StringType, texts, Seq(Nil))),
@@ -69,20 +78,28 @@ class ExtensionsSpec extends SparkSpec {
         Seq(Seq(l(2.0, DoubleType)), Seq(l(-0.5, DoubleType))))),
       "graft_cell_residual" -> ((vec, vecs,
         (0 to 2).map(c => Seq(l(c, IntegerType), cells)))),
-      "graft_simhash" -> ((StringType, texts, Seq(Nil))))
-    val aggregates = Set("graft_top_k") // BoundedTopK: TopKSpec
+      "graft_simhash" -> ((StringType, texts, Seq(Nil))),
+      // the filter must be a constant, so the row-bound operand is the hash
+      "might_contain" -> ((LongType, Seq(7L, 42L, 8L, -1L, null),
+        Seq(Seq(l(bloom, BinaryType)), Seq(l(null, BinaryType))))))
+    val rowSecond = Set("might_contain")
+    // name → the arguments an aggregate is built from (BoundedTopK:
+    // TopKSpec; bloom_filter_agg: PlanSpec and RelationalSpec)
+    val aggregates = Map(
+      "graft_top_k" -> Seq(BoundReference(0, DoubleType, nullable = true), l(2, IntegerType)),
+      "bloom_filter_agg" -> Seq(BoundReference(0, LongType, nullable = true)))
     val registered = graft.functions.GraftFunctions.registrations
-    assert(registered.map(_._1.funcName).toSet === parity.keySet ++ aggregates)
+    assert(registered.map(_._1.funcName).toSet === parity.keySet ++ aggregates.keySet)
     registered.foreach { case (id, _, build) =>
       val name = id.funcName
-      if (aggregates(name)) {
-        assert(build(Seq(BoundReference(0, DoubleType, nullable = true),
-          l(2, IntegerType))).isInstanceOf[AggregateFunction], name)
+      if (aggregates.contains(name)) {
+        assert(build(aggregates(name)).isInstanceOf[AggregateFunction], name)
       } else {
         val (t, values, rests) = parity(name)
         val toUnsafe = UnsafeProjection.create(Array(t))
         for (rest <- rests; v <- values) {
-          val e = build(BoundReference(0, t, nullable = true) +: rest)
+          val row = BoundReference(0, t, nullable = true)
+          val e = build(if (rowSecond(name)) rest.head +: row +: rest.tail else row +: rest)
           assert(e.checkInputDataTypes().isSuccess, s"$name($v, $rest)")
           assert(e.prettyName === name)
           val generated = GenerateUnsafeProjection.generate(Seq(e))
@@ -165,13 +182,14 @@ class ExtensionsSpec extends SparkSpec {
     // over Spark's default cache of 100 entries. Runs on the shared session,
     // not `fresh`: the cache is keyed per session class loader, and the
     // steady passes of every entry point run on the session it built.
-    // q_text_decon_ngram builds on the caller's session too, where a
-    // forked session would recompile its classes on every call.
+    // q_text_decon_ngram and q_bloom_join_revenue build on the caller's
+    // session too, where a forked session would recompile its classes on
+    // every call.
     val queries = Seq("q_bucket_join_revenue", "q_part_pruned_revenue",
       "q_mv_refresh", "q_evt_session", "q_graph_triangles",
       "q_sql_time_travel", "q_feat_onehot", "q_valid_doc_checks",
       "q_priv_kanon", "q_corr_stats", "q_er_clusters", "q_ts_forecast",
-      "q_text_decon_ngram")
+      "q_text_decon_ngram", "q_bloom_join_revenue")
     def pass(): Seq[(Long, Long)] =
       queries.map(q => Timing.evaluate(SparkEntry.queries(q)(spark, sf)))
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME

@@ -46,6 +46,37 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
+  test("clusteredBy: file boundaries do not depend on the input's file order") {
+    // the same rows as eight order-key files, read in listing order and
+    // reversed, then clustered by day into four files: the per-file rows
+    // and day envelopes must be identical
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cluster_order").toString
+    Layout.ordersZ(spark, sf).select(col("o_orderkey"), col("day"))
+      .repartitionByRange(8, col("o_orderkey"))
+      .write.mode("overwrite").parquet(s"$tmp/src")
+    val files = new java.io.File(s"$tmp/src").listFiles()
+      .map(_.getPath).filter(_.endsWith(".parquet")).sorted.toSeq
+    assert(files.length === 8)
+    def fileStats(input: Seq[String], out: String) = {
+      Layout.clusteredBy(spark.read.parquet(input: _*), col("day"), 4)
+        .write.mode("overwrite").parquet(out)
+      spark.read.parquet(out)
+        .groupBy(regexp_replace(element_at(split(input_file_name(), "/"), -1),
+          Layout.writeUuidRegex, "").as("file"))
+        .agg(count(lit(1)).as("n"), min(col("day")).as("mn"),
+          max(col("day")).as("mx"))
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .sorted.toSeq
+    }
+    val listed = fileStats(files, s"$tmp/a")
+    val reversed = fileStats(files.reverse, s"$tmp/b")
+    assert(listed.length === 4, listed)
+    assert(listed === reversed)
+    // contiguous, disjoint day ranges
+    listed.sliding(2).foreach { case Seq(a, b) => assert(a._4 < b._3, listed) }
+  }
+
   test("z-clustered files: BOTH dimensions bounded; 1-D sort leaves dim 2 full-range") {
     // the property the layout exists for: after clusteredBy(z), each
     // file's min/max envelope is narrow on custkey AND day, so stats

@@ -122,14 +122,16 @@ class PlanSpec extends SparkSpec {
 
   test("bloom-filtered join: runtime bloom filter injected into the fact scan") {
     val df = Relational.bloomFilteredJoinRevenue(spark, sf)
-    // InjectRuntimeFilter rewrites the logical plan: the fact side gains
-    // a might_contain(bloom_agg(o_orderkey)) predicate ahead of the join
+    // the builder states the filter in its own plan: the fact side carries
+    // might_contain(bloom_filter_agg subquery, xxhash64(l_orderkey)) ahead
+    // of the join
     val opt = df.queryExecution.optimizedPlan.toString
     assert(opt.contains("might_contain"), opt)
-    // and the caller's session conf is untouched (scoped to a clone)
-    assert(!spark.conf.getOption(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-      .contains("0"))
+    // no forked session: the frame belongs to the caller's session
+    assert(df.sparkSession eq spark)
+    // and the merge hint keeps the sort-merge join
+    val p = plan(df)
+    assert(p.contains("SortMergeJoin"), p)
   }
 
   test("bigram counts: hash-keyed top-k is a TakeOrderedAndProject, strings join via broadcast") {
